@@ -28,6 +28,7 @@ final class VectorAdmission(run: String) extends Workload {
   private var in: MemoryStream[(Long, Seq[Float])] = _
   private var query: StreamingQuery = _
   private val commitFiles = mutable.ArrayBuffer[(Long, Long, Long)]()
+  private val cachedPeakMb = mutable.ArrayBuffer[Double]()
   def roundsAvailable: Int = batches.size + 1
 
   def setup(h: Harness): Unit = {
@@ -67,6 +68,7 @@ final class VectorAdmission(run: String) extends Workload {
   private def admit(h: Harness, r: Int): Unit = {
     val before = if (h.trace) Harness.listing(indexPath) else Map.empty[String, Long]
     val corpusBefore = if (h.trace) Harness.listing(corpusPath) else Map.empty[String, Long]
+    h.telemetry.foreach(_.resetCachedPeak())
     h.span("streaming.admit") {
       in.addData(batches(r))
       query.processAllAvailable()
@@ -74,6 +76,7 @@ final class VectorAdmission(run: String) extends Workload {
     if (h.trace) {
       val (n, b) = Harness.newFiles(before, Harness.listing(indexPath))
       commitFiles += ((n, b, Harness.newFiles(corpusBefore, Harness.listing(corpusPath))._2))
+      cachedPeakMb += h.telemetry.get.cachedPeakBytes / 1e6
     }
   }
 
@@ -118,6 +121,7 @@ final class VectorAdmission(run: String) extends Workload {
     val spark = h.spark
     Admission.streamingMetrics(h, batchRows = batches(1).size.toDouble)
     Admission.commitMetrics(h, commitFiles.toSeq, indexPath)
+    h.put("GraftCache.peak_cached_mb", h.median(cachedPeakMb.toSeq))
     Seq("quantize", "kmeans", "pq", "commit").foreach { p =>
       h.put(s"AnnIndex.build.${p}_s", h.median(h.spansAnyRound(s"AnnIndex.build.$p").map(_.seconds)))
     }

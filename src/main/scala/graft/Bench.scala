@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line with per-query cold and warm seconds.
@@ -280,7 +282,19 @@ object Bench {
       val self0 = Files.readString(Paths.get("/proc/self/stat"))
       val rest = self0.substring(self0.lastIndexOf(')') + 2).trim.split(" ")
       (busy, rest(11).toLong + rest(12).toLong) // utime + stime
-    } catch { case _: Throwable => (-1L, -1L) }
+    } catch { case NonFatal(e) => warn("jiffies read", e); (-1L, -1L) }
+
+  /** The 1-, 5- and 15-minute load averages, or None where
+    * /proc/loadavg is unreadable. */
+  private[graft] def loadavg(): Option[Seq[Double]] =
+    try Some(Files.readString(Paths.get("/proc/loadavg")).trim.split(" ")
+      .take(3).map(_.toDouble).toSeq)
+    catch { case NonFatal(e) => warn("loadavg read", e); None }
+
+  /** A measurement that failed and stands as a sentinel: its cause goes
+    * to stderr, because stdout's last line is the bench JSON. */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
   private val UserHz = 100.0 // Linux USER_HZ, the /proc jiffy unit
 
@@ -455,13 +469,10 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       }
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(e) => warn(s"query $name", e); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-    def load1(): Double =
-      try Files.readString(Paths.get("/proc/loadavg")).trim
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    def load1(): Double = loadavg().fold(-1.0)(_.head)
     /** One full measurement: honest cold (graft frames dropped) then
       * median-of-3 warm. Used by both the main pass and the reruns. */
     def measure(name: String): (Double, Double) = {
@@ -739,13 +750,11 @@ object Bench {
       val t0 = System.nanoTime()
       val sec =
         try { f(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case NonFatal(e) => warn(s"artifact $n", e); -1.0 }
       n -> sec
     }
 
-    val loadavg =
-      try Files.readString(Paths.get("/proc/loadavg")).trim.split(" ").take(3).toSeq
-      catch { case _: Throwable => Seq("-1", "-1", "-1") }
+    val loads = loadavg().getOrElse(Seq(-1.0, -1.0, -1.0))
 
     def obj(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -785,7 +794,7 @@ object Bench {
       s""","calib_ref_ms":${r2(calibRef * 1000)}""" +
       s""","max_calib":${r2(maxCalib)}""" +
       s""","max_ext":${r2(maxExt)}""" +
-      s""","loadavg":[${loadavg.mkString(",")}]""" +
+      s""","loadavg":[${loads.mkString(",")}]""" +
       s""","contended":$contended,"idle_wait_s":$idleWaited""" +
       s""","rerun_idle_wait_s":$rerunIdleWaited""" +
       s""","sf":"$sfDir"}""" + "\n"
@@ -824,7 +833,7 @@ object Bench {
       s""","drift":${trimmed(drift)}""" +
       s""","norm":[${r3(normC)},${r3(normW)}]""" +
       s""","order_seed":$orderSeed""" +
-      s""","loadavg":[${loadavg.mkString(",")}]""" +
+      s""","loadavg":[${loads.mkString(",")}]""" +
       s""","max_calib":${r2(maxCalib)}""" +
       s""","artifact_train":${obj(artifactTimes.map { case (n, v) => n -> r3(v) })}""" +
       s""","contended":$contended,"idle_wait_s":$idleWaited""" +

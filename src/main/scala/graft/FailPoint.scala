@@ -1,14 +1,16 @@
 package graft
 
 /** Test-only kill-point seam for the admission loops' crash-replay
-  * sweeps (r12). The earlier crash tests injected at two hand-picked
-  * seams (`crashBeforeExtend`, `beforeGroupPublishHook`); this
-  * generalizes them: every durable-effect boundary in a micro-batch
-  * (corpus append, each sub-table manifest commit, group publish,
-  * funnel filing, pipeline publish) calls [[reach]] with the path it is
-  * about to mutate, and an armed test kills the batch at boundary #k —
-  * so one parameterized spec sweeps EVERY window a real job death can
-  * land in, not just the two someone thought of.
+  * sweeps (r12), and the loops' only crash seam: every durable-effect
+  * boundary in a micro-batch (corpus append, each sub-table manifest
+  * commit, group publish, funnel filing, pipeline publish) calls
+  * [[reach]] with the path it is about to mutate, and an armed test
+  * kills the batch at boundary #k — so one parameterized spec sweeps
+  * EVERY window a real job death can land in, and a replay test kills
+  * between corpus append and index extend by arming boundary #1 under
+  * the index path. (`Sinks.VersionedTable.beforeGroupPublishHook` is a
+  * different seam: it injects a concurrent writer into the group
+  * publish window instead of killing the batch.)
   *
   * Scoping: [[arm]] takes a path PREFIX (the test's temp dir), so
   * boundaries of unrelated artifacts — other suites running in the same

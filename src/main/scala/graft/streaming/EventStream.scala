@@ -490,25 +490,19 @@ object EventStream {
   def streamingLineDedup(docs: DataFrame, indexPath: String, outPath: String,
                          checkpoint: String, lineTok: Int = 4,
                          minDocs: Int = 2): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val lines = graft.operators.TextOps.docLines(batch.toDF(), lineTok)
-          val bf = graft.operators.TextOps.lineDocFreq(lines)
-            .withColumnRenamed("ndocs", "n")
-            .withColumn("batch_id", lit(batchId))
-          graft.sources.Sinks.mergeUpsert(
-            spark, indexPath, bf, Seq("fp", "batch_id"), "n")
-          val freq = spark.read.parquet(indexPath)
-            .groupBy("fp").agg(sum(col("n")).as("ndocs"))
-          graft.operators.TextOps.stripBoilerplate(lines, freq, minDocs)
-            .write.mode(SaveMode.Append).parquet(outPath)
-        }
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val lines = graft.operators.TextOps.docLines(batch, lineTok)
+      val bf = graft.operators.TextOps.lineDocFreq(lines)
+        .withColumnRenamed("ndocs", "n")
+        .withColumn("batch_id", lit(batchId))
+      graft.sources.Sinks.mergeUpsert(
+        spark, indexPath, bf, Seq("fp", "batch_id"), "n")
+      val freq = spark.read.parquet(indexPath)
+        .groupBy("fp").agg(sum(col("n")).as("ndocs"))
+      graft.operators.TextOps.stripBoilerplate(lines, freq, minDocs)
+        .write.mode(SaveMode.Append).parquet(outPath)
+    }
 
   /** Streaming twin of C26b ([[graft.operators.Sketches.dedupIncrementalBloom]]):
     * Bloom-pruned incremental dedup where "historical" = everything the
@@ -550,13 +544,9 @@ object EventStream {
   def streamingDedupIncrementalBloom(docs: DataFrame, indexPath: String,
                                      outPath: String, checkpoint: String,
                                      fpp: Double = 0.01): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) processBloomDedupBatch(batch.toDF(), indexPath, outPath, fpp)
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, _) =>
+      processBloomDedupBatch(batch, indexPath, outPath, fpp)
+    }
 
   /** One micro-batch of the Bloom-pruned incremental dedup — factored
     * out so StreamingSpec can also drive it directly for the
@@ -749,17 +739,10 @@ object EventStream {
   def streamingUpsertSink(stream: DataFrame, path: String,
                           keys: Seq[String], versionCol: String,
                           checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val latest = latestPerKey(batch.toDF(), keys, versionCol)
-          graft.sources.Sinks.mergeUpsert(
-            batch.sparkSession, path, latest, keys, versionCol)
-        }
-      }
-      .start()
+    startBatches(stream, checkpoint) { (batch, _) =>
+      graft.sources.Sinks.mergeUpsert(batch.sparkSession, path,
+        latestPerKey(batch, keys, versionCol), keys, versionCol)
+    }
 
   /** Latest row per key within one micro-batch (whole-row max_by on the
     * version — per-column maxes could tear rows tied on (key, version)).
@@ -962,17 +945,6 @@ object EventStream {
   def streamingQualityGate(docs: DataFrame): DataFrame =
     graft.operators.Classify.qualityClassifier(docs)
 
-  /** Streaming DSIR gate (C65's continuous twin): arriving (doc_id,
-    * text) rows are importance-weighted against a COMMITTED ratio table
-    * (the batch [[graft.operators.Dsir.lrTable]] output — train once on
-    * the trusted target + raw pool, gate the live crawl continuously).
-    * The scorer is the batch body verbatim: the 64 ratios are plan
-    * literals and the weight folds inside one codegen'd `aggregate`
-    * lambda, so the gate is a stateless zero-shuffle projection —
-    * append mode, no watermark, no state. The keep rule compares
-    * against a FIXED threshold chosen offline (a stream cannot know the
-    * corpus mean; production picks the batch run's mean or a quantile).
-    */
   /** Streaming temperature gate (C74's continuous twin): arriving
     * (doc_id, source, text) rows draw their keep verdict against the
     * COMMITTED per-source rate table ([[graft.operators.TextOps
@@ -1001,17 +973,23 @@ object EventStream {
     */
   def streamingDecontaminateGate(docs: DataFrame, registry: DataFrame,
                                  outPath: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.EvalRegistry.decontaminate(batch.toDF(), registry)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.EvalRegistry.decontaminate(batch, registry)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outPath)
+    }
 
+  /** Streaming DSIR gate (C65's continuous twin): arriving (doc_id,
+    * text) rows are importance-weighted against a COMMITTED ratio table
+    * (the batch [[graft.operators.Dsir.lrTable]] output — train once on
+    * the trusted target + raw pool, gate the live crawl continuously).
+    * The scorer is the batch body verbatim: the 64 ratios are plan
+    * literals and the weight folds inside one codegen'd `aggregate`
+    * lambda, so the gate is a stateless zero-shuffle projection —
+    * append mode, no watermark, no state. The keep rule compares
+    * against a FIXED threshold chosen offline (a stream cannot know the
+    * corpus mean; production picks the batch run's mean or a quantile).
+    */
   def streamingDsirGate(docs: DataFrame, lr: Array[Long], keepMin: Long): DataFrame =
     graft.operators.Dsir.scoreAgainst(docs, lr)
       .withColumn("keep", col("dsir_fp") >= lit(keepMin))
@@ -1052,34 +1030,175 @@ object EventStream {
       .start()
   }
 
+  /** Start `df` as an Append-mode stream checkpointed at `checkpoint`
+    * that hands every non-empty micro-batch, with its id, to `body` —
+    * the foreachBatch starter the admission loops and the append sinks
+    * share.
+    */
+  private def startBatches(df: DataFrame, checkpoint: String)
+                          (body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        if (!batch.isEmpty) body(batch.toDF(), batchId)
+      }
+      .start()
+
+  /** One admission loop's own steps, each run by [[admitBatch]] at its
+    * fixed place: `admitted` (the rows drawn novel against the served
+    * group; the skeleton persists and counts it), `guard` (refusals
+    * after the count, before any effect), `corpus` (the rows appended
+    * for the admitted ones), `extend` (the index extend, with the
+    * loop's version rule), `funnel` (the stage counts filed for `n`
+    * admitted rows) and `pins` (dependency table versions the pipeline
+    * snapshot records beside the index).
+    */
+  private final case class Admission(
+      admitted: DataFrame,
+      extend: DataFrame => Unit,
+      funnel: Long => Seq[(String, Long)],
+      guard: DataFrame => Unit = _ => (),
+      corpus: DataFrame => DataFrame = identity,
+      pins: Map[String, Long] = Map.empty)
+
+  /** One micro-batch of an admission loop — the lifecycle the curation,
+    * media, embedding and semantic loops share: capture the served
+    * group → `verdict` → persist and count the admissions → guard →
+    * corpus append → index extend → funnel filing → pipeline snapshot,
+    * then the `maintain` step every `compactEvery` batches. `verdict`
+    * receives the served group version and a `hold` that persists a
+    * frame until the batch's effects are done.
+    *
+    * The served group: the index is re-read EVERY batch on purpose —
+    * earlier batches' admissions must reject this batch's re-crawls,
+    * and a mid-stream retract re-opens its slot at the next batch. Its
+    * group version is captured here and the verdict pinned to it, so
+    * the pipeline snapshot's served pin names exactly the pre-extend
+    * state the verdicts read (r13).
+    *
+    * Restart safety hinges on the ORDER of the two effects: the corpus
+    * append lands BEFORE the index extend. A crash between them means a
+    * replayed batch re-serves against an index that does NOT yet hold
+    * its admissions, classifies them novel again, and appends the same
+    * (batch_id, id) rows a second time — a duplicate the stated
+    * at-least-once provenance contract (the [[streamingLmGate]] rule)
+    * already absorbs, and the re-extend is an idempotent latest-wins
+    * merge. The reverse order would be unsound: extend-then-crash
+    * leaves the admissions in the index, so the replay rejects them —
+    * rows permanently indexed but never written to the corpus.
+    * StreamingSpec pins the replay path of every loop, and its
+    * kill-point sweeps kill the batch at every [[graft.FailPoint]]
+    * boundary. Single-admitter regime, like the batch ingest it
+    * mirrors.
+    *
+    * Id collisions: an admitted row is novel CONTENT, so a committed
+    * index row under its id means the crawl re-used an id for
+    * different bytes. The extend would latest-wins OVERWRITE the
+    * committed row, silently un-indexing the old content (a takedown-
+    * audit gap: its next re-crawl would probe as novel). Ids are the
+    * global identity contract, so the id-keyed loops' `guard` fails the
+    * batch loudly instead ([[refuseIdReuse]]).
+    *
+    * Versions: extends commit at `batchId + 1`, monotone per real
+    * ingest, and a replayed extend re-merges identical rows at the same
+    * version. The vector loops space them out — extends at the even
+    * 2·(batchId+1), the in-loop rebalance at the odd 2·(batchId+1)+1 —
+    * so the two writers are monotone and disjoint, and a REPLAYED
+    * extend (even, lower) loses latest-wins to a rebalance that already
+    * re-encoded its rows, which is right: the rebalanced codes are the
+    * ones consistent with the current codebooks.
+    *
+    * Funnel evidence is filed AFTER the effects (the compliance surface
+    * [[graft.operators.AdmissionLog]] documents), even for an all-
+    * rejected batch — "nothing admitted" is evidence too. The pipeline
+    * snapshot is the batch's LAST effect: it pins the index's GROUP
+    * version (and `pins`) as one atomic "pipeline as of batch N"
+    * reference, is published even for an all-rejected batch, and is
+    * idempotent per batchId, so a crash after publish replays to the
+    * identical tuple. The cadence runs after the batch's own effects: a
+    * crash inside maintenance loses nothing (compaction is a pure file
+    * rewrite behind a new manifest version, vacuum only drops
+    * superseded versions; the replay re-runs both as cheap no-ops).
+    */
+  private def admitBatch(batch: DataFrame, batchId: Long, loop: String,
+                         indexPath: String, outPath: String,
+                         compactEvery: Int, funnelLogPath: Option[String],
+                         pipelinePath: Option[String])
+                        (verdict: (Long, DataFrame => DataFrame) => Admission)
+                        (maintain: => Unit): Unit = {
+    val spark = batch.sparkSession
+    graft.GraftCache.releaseCreatedDuring(spark) {
+      val servedGroup: Long = graft.sources.Sinks.VersionedTable
+        .latestGroup(spark, indexPath).getOrElse(
+          throw new IllegalStateException(
+            s"$loop admission: no committed root snapshot at $indexPath"))._1
+      var held = List.empty[DataFrame]
+      val hold = (df: DataFrame) => { held = df.persist() :: held; held.head }
+      try {
+        val a = verdict(servedGroup, hold)
+        val admitted = hold(a.admitted)
+        val n = admitted.count()
+        a.guard(admitted)
+        if (n > 0) {
+          graft.FailPoint.reach(outPath) // kill-point sweep boundary
+          a.corpus(admitted).withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(outPath)
+          a.extend(admitted)
+        }
+        funnelLogPath.foreach { lp =>
+          graft.FailPoint.reach(lp) // kill-point sweep boundary
+          graft.operators.AdmissionLog.append(spark, lp, loop, batchId, a.funnel(n))
+        }
+        pipelinePath.foreach { pp =>
+          graft.sources.Sinks.PipelineSnapshot.publish(spark, pp, batchId,
+            grouped = Seq(indexPath), tables = a.pins.keys.toSeq.sorted,
+            pin = a.pins, served = Map(indexPath -> servedGroup), loop = loop)
+        }
+      } finally held.foreach(_.unpersist())
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+        maintain
+    }
+  }
+
+  /** The id-collision guard (see [[admitBatch]]): fail the batch when an
+    * admitted `id` already has a `committed` index row. */
+  private def refuseIdReuse(admitted: DataFrame, id: String,
+                            committed: DataFrame, who: String): Unit = {
+    val collisions = admitted.select(id)
+      .join(committed, Seq(id), "left_semi").count()
+    require(collisions == 0L,
+      s"$who: $collisions admitted $id(s) already exist in the index with " +
+        "DIFFERENT content — id re-use would overwrite committed rows; fix " +
+        "the crawl's id assignment (or retract the old ids first)")
+  }
+
+  /** The within-batch id discipline of the vector loops: a duplicated
+    * vec_id (same or different content) would cross-multiply through
+    * the verdict joins (assign x encode keyed on vec_id -> hybrid code
+    * tuples) and append conflicting corpus rows under one id — refuse
+    * loudly (r11 review). */
+  private def refuseDuplicateIds(rows: DataFrame, who: String): Unit = {
+    val dupIds = rows.groupBy("vec_id")
+      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
+    require(dupIds == 0L,
+      s"$who: $dupIds vec_id(s) appear more than once in the batch — ids " +
+        "must be unique per batch; collapse duplicates upstream")
+  }
+
   /** The LIVE crawl-admission pipeline — [[graft.pipeline
     * .CurationPipeline]]'s continuous twin, serving the artifacts the
     * batch run committed: each arriving (doc_id, html) row is HTML-
     * extracted (C60), NFC-normalized (C62), quality-gated (C23) and
     * DSIR-gated (C65, committed ratio table + fixed threshold) — all
     * stateless scan stages — optionally DECONTAMINATED against the
-    * committed eval registry (C80, `registryPath`; see
-    * [[curationAdmitBatch]] for why this must precede the extend) —
-    * then classified against the COMMITTED
-    * dedup index (C66): docs flagged `new` are ADMITTED — appended to
-    * the output corpus AND merged into the index — so a page arriving
-    * again in a LATER micro-batch is rejected as an exact duplicate of
-    * its admitted self. That cross-batch memory lives entirely in the
-    * transactional artifact (no Spark streaming state, no watermark).
-    *
-    * Restart safety hinges on the ORDER of the two effects: the corpus
-    * append lands BEFORE the index extend. A crash between them means a
-    * replayed batch re-serves against an index that does NOT yet hold
-    * its admissions, classifies them `new` again, and appends the same
-    * (batch_id, doc_id) rows a second time — a duplicate the stated
-    * at-least-once provenance contract (the [[streamingLmGate]] rule)
-    * already absorbs, and the re-extend is an idempotent latest-wins
-    * merge. The reverse order would be unsound: extend-then-crash
-    * leaves the admissions in the index, so the replay classifies them
-    * `exact` and admits nothing — docs permanently indexed but never
-    * written to the corpus. StreamingSpec pins the replay path.
-    *
-    * Single-admitter regime, like the batch ingest it mirrors.
+    * committed eval registry (C80) — then classified against the
+    * COMMITTED dedup index (C66): docs flagged `new` are ADMITTED —
+    * appended to the output corpus AND merged into the index — so a
+    * page arriving again in a LATER micro-batch is rejected as an exact
+    * duplicate of its admitted self. That cross-batch memory lives
+    * entirely in the transactional artifact (no Spark streaming state,
+    * no watermark). [[admitBatch]] holds the restart-safety order.
     *
     * Maintenance cadence: every extend commits a new index version and
     * the superseded versions' dirs stay on disk for pinned readers —
@@ -1092,23 +1211,23 @@ object EventStream {
     * byte-identical across it (StreamingSpec drives 3 cadences and
     * pins both the bounded on-disk file count and the verdict equality
     * against an unmaintained control).
-    */
-  /** `registryPath`: when set, the C80 eval-protection registry gates
+    *
+    * `registryPath`: when set, the C80 eval-protection registry gates
     * admission too — a doc sharing any committed benchmark fingerprint
     * is REJECTED before it can reach the corpus or the index. The one
     * curation stage whose absence is invisible to every other gate
     * (a benchmark answer is high-quality, in-distribution, and novel —
     * quality, DSIR, and dedup all wave it through), so the production
     * admission path must carry it, not just the standalone gate.
-    */
-  /** `dsirPath`: serve the DSIR gate from the COMMITTED ratio table
+    *
+    * `dsirPath`: serve the DSIR gate from the COMMITTED ratio table
     * instead of the in-memory `lr` array (which is then ignored) — the
     * registryPath contract applied to the third gate artifact: the
     * table is re-read each batch, so a retrained ratio table committed
     * mid-stream protects the NEXT batch, and the pipeline snapshot pins
     * the exact version each batch's verdicts used.
-    */
-  /** `nearRegistryPath` (r13): gate admission with the C100 containment
+    *
+    * `nearRegistryPath` (r13): gate admission with the C100 containment
     * lens too — a PARAPHRASED benchmark passage (which the exact
     * registry provably misses) is rejected before it can reach the
     * corpus or the index. Requires `EvalRegistry.registerNear` on the
@@ -1149,35 +1268,23 @@ object EventStream {
           "near fingerprints — call EvalRegistry.registerNear(...) before " +
           "starting the stream (or omit nearRegistryPath)")
     }
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          curationAdmitBatch(batch.toDF(), batchId, indexPath, lr,
-            dsirKeepMin, outPath, compactEvery = compactEvery,
-            registryPath = registryPath, funnelLogPath = funnelLogPath,
-            pipelinePath = pipelinePath, dsirPath = dsirPath,
-            nearRegistryPath = nearRegistryPath)
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      curationAdmitBatch(batch, batchId, indexPath, lr,
+        dsirKeepMin, outPath, compactEvery = compactEvery,
+        registryPath = registryPath, funnelLogPath = funnelLogPath,
+        pipelinePath = pipelinePath, dsirPath = dsirPath,
+        nearRegistryPath = nearRegistryPath)
+    }
   }
 
-  /** One micro-batch of the admission loop — the foreachBatch body,
-    * factored out so the replay path is testable without a live stream.
-    * `crashBeforeExtend` is a TEST FAILPOINT simulating a job death in
-    * the window between the two effects (corpus append landed, index
-    * extend did not) — the exact state a streaming restart then replays
-    * against; production callers never set it.
-    */
   /** The admission loop's gate chain — ONE definition shared by the
     * live batch body ([[curationAdmitBatch]]) and the pinned audit
     * replay ([[curationVerdictsAt]]), so the two can never drift:
     * HTML extract -> mojibake repair -> normalize -> quality rules ->
     * DSIR floor -> optional decontamination. Returns (normalized,
     * preDecon, gated) — callers count/serve/join as they need.
-    */
-  /** `registryNear` (r13): the C100 containment lens as a fourth gate —
+    *
+    * `registryNear` (r13): the C100 containment lens as a fourth gate —
     * a lightly PARAPHRASED benchmark passage passes the exact lens
     * (no 8-gram survives) but is caught here; gated AFTER the exact
     * lens, BEFORE the dedup serve, for the same reason the exact lens
@@ -1272,55 +1379,56 @@ object EventStream {
           .as("would_admit"))
   }
 
+  /** One micro-batch of the curation admission loop — the foreachBatch
+    * body, factored out so the replay path is testable without a live
+    * stream: the gate chain, then [[admitBatch]] with the dedup index's
+    * serve and extend.
+    */
   private[graft] def curationAdmitBatch(batch: DataFrame, batchId: Long,
                                         indexPath: String, lr: Array[Long],
                                         dsirKeepMin: Long, outPath: String,
-                                        crashBeforeExtend: Boolean = false,
                                         compactEvery: Int = 0,
                                         registryPath: Option[String] = None,
                                         funnelLogPath: Option[String] = None,
                                         pipelinePath: Option[String] = None,
                                         dsirPath: Option[String] = None,
                                         nearRegistryPath: Option[String] = None): Unit = {
-    import graft.operators.{DedupIndex, Dsir, EvalRegistry}
-    graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
+    import graft.operators.{AdmissionLog, DedupIndex, Dsir, EvalRegistry}
+    val spark = batch.sparkSession
+    admitBatch(batch, batchId, CurationLoop, indexPath, outPath, compactEvery,
+        funnelLogPath, pipelinePath) { (servedGroup, _) =>
       // dependency versions captured AT READ and the reads pinned to
       // them, so the pipeline snapshot records exactly the tables these
       // verdicts used even under a concurrent retrain/re-register; the
       // committed tables are re-read EVERY batch on purpose — a
       // mid-stream retrain protects the NEXT batch
-      val dsirPin: Option[Long] = dsirPath.map { dp =>
-        graft.sources.Sinks.VersionedTable
-          .latestManifest(batch.sparkSession, Dsir.tablePath(dp)).getOrElse(
+      def pinned(root: Option[String], table: String => String,
+                 what: String): Option[(String, Long)] = root.map { r =>
+        table(r) -> graft.sources.Sinks.VersionedTable
+          .latestManifest(spark, table(r)).getOrElse(
             throw new IllegalStateException(
-              s"curationAdmitBatch: no committed DSIR ratio table at $dp"))._1
+              s"curationAdmitBatch: no committed $what at $r"))._1
       }
+      val dsirPin = pinned(dsirPath, Dsir.tablePath, "DSIR ratio table")
       val lrUsed = dsirPath.zip(dsirPin)
-        .map { case (dp, v) => Dsir.loadLrAt(batch.sparkSession, dp, v) }
+        .map { case (dp, (_, v)) => Dsir.loadLrAt(spark, dp, v) }
         .getOrElse(lr)
-      val regPin: Option[Long] = registryPath.map { rp =>
-        graft.sources.Sinks.VersionedTable
-          .latestManifest(batch.sparkSession, EvalRegistry.tablePath(rp))
-          .getOrElse(throw new IllegalStateException(
-            s"curationAdmitBatch: no committed eval registry at $rp"))._1
-      }
+      val regPin = pinned(registryPath, EvalRegistry.tablePath, "eval registry")
       val registry = registryPath.zip(regPin)
-        .map { case (rp, v) => EvalRegistry.loadAt(batch.sparkSession, rp, v) }
-      val nearPin: Option[Long] = nearRegistryPath.map { np =>
-        graft.sources.Sinks.VersionedTable
-          .latestManifest(batch.sparkSession, EvalRegistry.nearTablePath(np))
-          .getOrElse(throw new IllegalStateException(
-            s"curationAdmitBatch: no committed near registry at $np"))._1
-      }
+        .map { case (rp, (_, v)) => EvalRegistry.loadAt(spark, rp, v) }
+      val nearPin = pinned(nearRegistryPath, EvalRegistry.nearTablePath,
+        "near registry")
       val registryNear = nearRegistryPath.zip(nearPin)
-        .map { case (np, v) => EvalRegistry.loadNearAt(batch.sparkSession, np, v) }
+        .map { case (np, (_, v)) => EvalRegistry.loadNearAt(spark, np, v) }
       val (_, preDecon, gated) =
         curationGateChain(batch, lrUsed, dsirKeepMin, registry, registryNear)
       // funnel gate counts are taken BEFORE the batch's effects so the
       // filed evidence describes exactly the frames the verdicts used
       // (counting after the effects leaves a window where concurrent
       // artifact commits could make the funnel internally inconsistent;
-      // r11 review)
+      // r11 review). Counts re-run the gate chain's scans, so the knob
+      // is opt-in; at micro-batch sizes the cost is the batch, not the
+      // corpus.
       val funnelGates = funnelLogPath.map { _ =>
         val nPre = preDecon.count()
         // without any registry, gated eq preDecon - don't re-scan for it
@@ -1329,92 +1437,32 @@ object EventStream {
           else gated.count()
         (batch.count(), nPre, nGated)
       }
-      // the artifact is re-read EVERY batch on purpose: earlier
-      // batches' admissions must be visible to this one. The group
-      // version is captured HERE (the dsirPin/regPin capture-at-read
-      // rule) and the serve pinned to it, so the pipeline snapshot's
-      // served pin names exactly the index state these verdicts read —
-      // pre-extend, vs the post-effect `grouped` pin (r13).
-      val servedGroup: Long = graft.sources.Sinks.VersionedTable
-        .latestGroup(batch.sparkSession, indexPath).getOrElse(
-          throw new IllegalStateException(
-            s"curationAdmitBatch: no committed root snapshot at $indexPath"))._1
       val verdicts = DedupIndex.serveAt(gated.select("doc_id", "text"),
         indexPath, servedGroup)
-      val admitted = gated.join(
-        verdicts.filter(col("kind") === "new").select("doc_id"), "doc_id")
-        .persist()
-      try {
-        val n = admitted.count()
-        if (n > 0) {
-          // corpus append FIRST, index extend SECOND — see the
-          // restart-safety note in the doc comment.
-          graft.FailPoint.reach(outPath) // kill-point sweep boundary
-          admitted.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-          if (crashBeforeExtend) throw new RuntimeException(
-            "test failpoint: crashed between corpus append and index extend")
-          DedupIndex.extend(admitted.select("doc_id", "text"), indexPath,
-            buildV = batchId + 1)
-        }
-        // Funnel evidence AFTER the batch's effects (the compliance
-        // surface AdmissionLog documents): filed even for an all-
-        // rejected batch — "nothing admitted" is evidence too. Counts
-        // re-run the gate chain's scans, so the knob is opt-in; at
-        // micro-batch sizes the cost is the batch, not the corpus.
-        funnelLogPath.foreach { lp =>
+      Admission(
+        admitted = gated.join(
+          verdicts.filter(col("kind") === "new").select("doc_id"), "doc_id"),
+        extend = a => DedupIndex.extend(a.select("doc_id", "text"), indexPath,
+          buildV = batchId + 1),
+        funnel = { n =>
           val (nArrived, nPre, nGated) = funnelGates.get
-          graft.FailPoint.reach(lp) // kill-point sweep boundary
-          graft.operators.AdmissionLog.append(batch.sparkSession, lp,
-            "curation", batchId, Seq(
-              "1_arrived" -> nArrived,
-              "2_quality_dsir_kept" -> nPre,
-              "3_decontaminated_kept" -> nGated,
-              "4_admitted" -> n))
-        }
-        // cross-ARTIFACT pipeline snapshot — the batch's LAST effect:
-        // pin the dedup index's GROUP version + the registry's table
-        // version as one atomic "pipeline as of batch N" reference.
-        // Published even for an all-rejected batch (its verdicts read
-        // exactly this state); idempotent per batchId, so a crash after
-        // publish replays to the identical tuple.
-        pipelinePath.foreach { pp =>
-          val tablePins: Map[String, Long] =
-            (registryPath.zip(regPin)
-              .map { case (rp, v) => graft.operators.EvalRegistry.tablePath(rp) -> v } ++
-             nearRegistryPath.zip(nearPin)
-              .map { case (np, v) => graft.operators.EvalRegistry.nearTablePath(np) -> v } ++
-             dsirPath.zip(dsirPin)
-              .map { case (dp, v) => Dsir.tablePath(dp) -> v }).toMap
-          graft.sources.Sinks.PipelineSnapshot.publish(
-            batch.sparkSession, pp, batchId,
-            grouped = Seq(indexPath),
-            tables = tablePins.keys.toSeq.sorted,
-            pin = tablePins,
-            served = Map(indexPath -> servedGroup),
-            loop = CurationLoop)
-        }
-      } finally admitted.unpersist()
-      // cadence AFTER the batch's own effects: a crash inside
-      // maintenance loses nothing (compaction is a pure file rewrite
-      // behind a new manifest version, vacuum only drops superseded
-      // versions; the replay re-runs both as cheap no-ops)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-        // serve-cap drop telemetry on the SAME cadence (r12): the band
-        // table scan is corpus-sized, so it rides the maintenance
-        // cadence, never the per-batch funnel (whose documented cost is
-        // the batch). Deterministic per committed state, so replays
-        // refile identical rows — the MAX resolution rule holds.
-        funnelLogPath.foreach { lp =>
-          val (hot, dropped) =
-            DedupIndex.bandCapStats(batch.sparkSession, indexPath)
-          graft.operators.AdmissionLog.append(batch.sparkSession, lp,
-            "curation_bands", batchId, Seq(
-              "1_hot_buckets" -> hot,
-              "2_capped_rows" -> dropped))
-        }
-        DedupIndex.maintain(batch.sparkSession, indexPath)
+          Seq("1_arrived" -> nArrived, "2_quality_dsir_kept" -> nPre,
+            "3_decontaminated_kept" -> nGated, "4_admitted" -> n)
+        },
+        pins = (dsirPin ++ regPin ++ nearPin).toMap)
+    } {
+      // serve-cap drop telemetry on the maintenance cadence (r12): the
+      // band table scan is corpus-sized, so it never rides the per-batch
+      // funnel (whose documented cost is the batch). Deterministic per
+      // committed state, so replays refile identical rows — the MAX
+      // resolution rule holds.
+      funnelLogPath.foreach { lp =>
+        val (hot, dropped) = DedupIndex.bandCapStats(spark, indexPath)
+        AdmissionLog.append(spark, lp, "curation_bands", batchId, Seq(
+          "1_hot_buckets" -> hot,
+          "2_capped_rows" -> dropped))
       }
+      DedupIndex.maintain(spark, indexPath)
     }
   }
 
@@ -1428,15 +1476,8 @@ object EventStream {
     * loop closes it with the C66 pattern: serve → admit novel
     * fingerprints → extend the modality's sub-table → maintain every N
     * batches. Cross-batch memory lives entirely in the transactional
-    * artifact (re-read EVERY batch — earlier batches' admissions and
-    * mid-stream takedowns are both visible to this one); no Spark
-    * streaming state, no watermark.
-    *
-    * Same restart-safety ordering as the text loop: corpus append FIRST,
-    * index extend SECOND — a crash between them replays as a duplicate
-    * (batch_id, media_id) provenance row (at-least-once, consumers dedup
-    * by that key) and an idempotent re-extend; the reverse order would
-    * leave payloads indexed forever but never written.
+    * artifact; no Spark streaming state, no watermark. The corpus rows
+    * are the admitted payloads, keyed (batch_id, media_id).
     *
     * `modality` ∈ img/vid/aud; the seed sub-table must be committed
     * before start (build with the seed crawl, or an empty frame to
@@ -1454,23 +1495,16 @@ object EventStream {
       s"streamingMediaAdmission: no committed '${m.name}' sub-table at $indexPath — " +
         "commit the seed index first (MediaIndex.buildImages/buildVideos/buildAudio " +
         "with the seed crawl, or an empty frame to bootstrap)")
-    media.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          mediaAdmitBatch(batch.toDF(), batchId, indexPath, outPath, m.name,
-            compactEvery = compactEvery, funnelLogPath = funnelLogPath,
-            pipelinePath = pipelinePath)
-      }
-      .start()
+    startBatches(media, checkpoint) { (batch, batchId) =>
+      mediaAdmitBatch(batch, batchId, indexPath, outPath, m.name,
+        compactEvery = compactEvery, funnelLogPath = funnelLogPath,
+        pipelinePath = pipelinePath)
+    }
   }
 
   /** One micro-batch of the media admission loop — the foreachBatch
     * body, factored out so the replay path is testable without a live
-    * stream (the [[curationAdmitBatch]] convention, including the
-    * `crashBeforeExtend` test failpoint). `batch` is (media_id: Long,
-    * payload: binary).
+    * stream. `batch` is (media_id: Long, payload: binary).
     *
     * Per-batch cost shape: the codec kernel (the dominant cost — real
     * image/video/audio decode) runs ONCE per batch; the resulting
@@ -1485,99 +1519,46 @@ object EventStream {
                                      indexPath: String, outPath: String,
                                      modality: String,
                                      compactEvery: Int = 0,
-                                     crashBeforeExtend: Boolean = false,
                                      funnelLogPath: Option[String] = None,
                                      pipelinePath: Option[String] = None): Unit = {
     import graft.operators.{BandedPairs, MediaIndex}
     val m = MediaIndex.mode(modality)
-    graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
-      val fps = m.kernel(batch.select(col("media_id"), col("payload")), "media_id")
-        .persist()
-      try {
-        // Within-batch exact collapse FIRST: two copies of the same novel
-        // image in one batch are both novel vs the index — without this,
-        // both would be admitted. Identical fingerprints keep the
-        // smallest media_id (the de-windowed groupBy + semi-join keeper
-        // shape; within-batch NEAR-dups below the exact-match bar are
-        // admitted together by design — the arrival stream's batch
-        // boundaries must not change which near-dups a corpus keeps).
-        val keepers = fps.groupBy(m.fpCol)
-          .agg(min("media_id").as("media_id")).select("media_id")
-        val kept = fps.join(keepers, Seq("media_id"), "left_semi")
-        // The artifact is re-read EVERY batch on purpose: earlier
-        // batches' admissions must reject this batch's re-crawls, and a
-        // mid-stream retract() must re-open its slot at the next batch.
-        // Group version captured at read, serve pinned to it — the
-        // snapshot's served pin names what the verdicts read (r13).
-        val servedGroup: Long = graft.sources.Sinks.VersionedTable
-          .latestGroup(batch.sparkSession, indexPath).getOrElse(
-            throw new IllegalStateException(
-              s"mediaAdmitBatch: no committed root snapshot at $indexPath"))._1
-        val index = MediaIndex.loadFpsAt(batch.sparkSession, indexPath,
-          m.name, servedGroup)
-        val matches = BandedPairs.probeJoin(kept, "media_id",
-          index, "doc_id", m.fpCol, m.numBands, m.bandBits, m.threshold)
-        val admitted = kept.join(
-          matches.select("media_id").distinct(), Seq("media_id"), "left_anti")
-          .persist()
-        try {
-          val n = admitted.count()
-          // ID-collision guard: an admitted row is NOVEL CONTENT, so if
-          // its media_id already exists in the index, the crawl re-used
-          // an id for different bytes — extending would latest-wins
-          // OVERWRITE the committed fingerprint, silently un-indexing
-          // the old content (a takedown-audit gap: its next re-crawl
-          // would probe as novel). Ids are the global identity contract;
-          // fail the batch loudly instead of corrupting the artifact.
-          val collisions = admitted.select("media_id")
-            .join(index.select(col("doc_id").as("media_id")), Seq("media_id"),
-              "left_semi")
-            .count()
-          require(collisions == 0L,
-            s"mediaAdmitBatch($modality, batch $batchId): $collisions admitted " +
-              "media_id(s) already exist in the index with DIFFERENT content — " +
-              "id re-use would overwrite committed fingerprints; fix the crawl's " +
-              "id assignment (or retract the old ids first)")
-          if (n > 0) {
-            // corpus append FIRST, index extend SECOND — the
-            // streamingCurationAdmission restart-safety ordering
-            graft.FailPoint.reach(outPath) // kill-point sweep boundary
-            batch.join(admitted.select("media_id"), "media_id")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outPath)
-            if (crashBeforeExtend) throw new RuntimeException(
-              "test failpoint: crashed between corpus append and index extend")
-            MediaIndex.extendFps(
-              admitted.withColumnRenamed("media_id", "doc_id"),
-              indexPath, m.name, buildV = batchId + 1)
-          }
-          // Funnel evidence AFTER the effects (the curation-loop rule).
-          // decoded counts off the PERSISTED fps frame, so the codec
-          // kernel never re-runs for telemetry; arrived - decoded is
-          // the undecodable-quarantine count a compliance job watches.
-          funnelLogPath.foreach { lp =>
-            graft.FailPoint.reach(lp) // kill-point sweep boundary
-            graft.operators.AdmissionLog.append(batch.sparkSession, lp,
-              s"media_${m.name}", batchId, Seq(
-                "1_arrived" -> batch.count(),
-                "2_decoded" -> fps.count(),
-                "3_batch_distinct" -> kept.count(),
-                "4_admitted" -> n))
-          }
-          // cross-ARTIFACT pipeline snapshot — the batch's LAST effect
-          // (see curationAdmitBatch): pins the MediaIndex GROUP version
-          pipelinePath.foreach { pp =>
-            graft.sources.Sinks.PipelineSnapshot.publish(
-              batch.sparkSession, pp, batchId, grouped = Seq(indexPath),
-              served = Map(indexPath -> servedGroup),
-              loop = mediaLoop(m.name))
-          }
-        } finally admitted.unpersist()
-      } finally fps.unpersist()
-      // cadence AFTER the batch's own effects — see curationAdmitBatch
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        MediaIndex.maintain(batch.sparkSession, indexPath)
-    }
+    admitBatch(batch, batchId, mediaLoop(m.name), indexPath, outPath,
+        compactEvery, funnelLogPath, pipelinePath) { (servedGroup, hold) =>
+      val fps = hold(m.kernel(batch.select(col("media_id"), col("payload")), "media_id"))
+      // Within-batch exact collapse FIRST: two copies of the same novel
+      // image in one batch are both novel vs the index — without this,
+      // both would be admitted. Identical fingerprints keep the
+      // smallest media_id (the de-windowed groupBy + semi-join keeper
+      // shape; within-batch NEAR-dups below the exact-match bar are
+      // admitted together by design — the arrival stream's batch
+      // boundaries must not change which near-dups a corpus keeps).
+      val keepers = fps.groupBy(m.fpCol)
+        .agg(min("media_id").as("media_id")).select("media_id")
+      val kept = fps.join(keepers, Seq("media_id"), "left_semi")
+      val index = MediaIndex.loadFpsAt(batch.sparkSession, indexPath,
+        m.name, servedGroup)
+      val matches = BandedPairs.probeJoin(kept, "media_id",
+        index, "doc_id", m.fpCol, m.numBands, m.bandBits, m.threshold)
+      Admission(
+        admitted = kept.join(
+          matches.select("media_id").distinct(), Seq("media_id"), "left_anti"),
+        guard = refuseIdReuse(_, "media_id",
+          index.select(col("doc_id").as("media_id")),
+          s"mediaAdmitBatch($modality, batch $batchId)"),
+        corpus = a => batch.join(a.select("media_id"), "media_id"),
+        extend = a => MediaIndex.extendFps(
+          a.withColumnRenamed("media_id", "doc_id"),
+          indexPath, m.name, buildV = batchId + 1),
+        // decoded counts off the PERSISTED fps frame, so the codec
+        // kernel never re-runs for telemetry; arrived - decoded is the
+        // undecodable-quarantine count a compliance job watches
+        funnel = n => Seq(
+          "1_arrived" -> batch.count(),
+          "2_decoded" -> fps.count(),
+          "3_batch_distinct" -> kept.count(),
+          "4_admitted" -> n))
+    } { MediaIndex.maintain(batch.sparkSession, indexPath) }
   }
 
   /** The EMBEDDING admission loop — the C66 pattern over the committed
@@ -1596,28 +1577,21 @@ object EventStream {
     * of this batch's admissions is rejected by the next batch.
     * Cross-batch memory lives entirely in the transactional artifact
     * (re-read every batch); no Spark streaming state, no watermark.
-    * Same restart-safety ordering, id-collision guard, maintain
-    * cadence ([[graft.operators.Artifacts.maintainAll]] — the unified
-    * GC sweeping codebooks + codes), and funnel telemetry as the other
-    * two loops.
-    */
-  /** `rebalanceLoadPct`: when set (> 0), the maintain cadence also runs
+    * The maintain cadence runs [[graft.operators.Artifacts.maintainAll]]
+    * — the unified GC sweeping codebooks + codes.
+    *
+    * `rebalanceLoadPct`: when set (> 0), the maintain cadence also runs
     * [[graft.operators.AnnIndex.rebalance]] at that occupancy bar —
     * the C86b diagnostic-to-action loop running INSIDE the admission
-    * loop. Requires collision-only verdicts (tau > 1, enforced):
-    * a rebalance retrains the codebooks and shifts the whole ADC
-    * scale, so an in-loop rebuild under an ADC tau would silently
-    * mis-gate from that batch on (re-measuring is an operator action —
-    * `commitAdmissionTau` — not a cadence); the collision rule is
-    * rebalance-proof because probe and index re-encode with the SAME
-    * new codebooks. Version spacing makes the two writers safe: extends
-    * commit at even versions 2·(batchId+1), rebalances at odd
-    * 2·(batchId+1)+1 — monotone, disjoint, and a REPLAYED extend
-    * (even, lower) loses latest-wins to a rebalance that already
-    * re-encoded its rows, which is exactly right (the rebalanced codes
-    * are the ones consistent with the current codebooks).
-    */
-  /** `exactRescore`: upgrade the near-dup verdict from the ADC scale to
+    * loop, at the odd versions [[admitBatch]] reserves for it. Requires
+    * collision-only verdicts (tau > 1, enforced): a rebalance retrains
+    * the codebooks and shifts the whole ADC scale, so an in-loop
+    * rebuild under an ADC tau would silently mis-gate from that batch
+    * on (re-measuring is an operator action — `commitAdmissionTau` —
+    * not a cadence); the collision rule is rebalance-proof because
+    * probe and index re-encode with the SAME new codebooks.
+    *
+    * `exactRescore`: upgrade the near-dup verdict from the ADC scale to
     * EXACT cosines against the stored vectors (requires the IndexRefine
     * split; `tau` must then be measured with `commitAdmissionTau(…,
     * exact = true)`). Because exact scores are codebook-independent,
@@ -1647,49 +1621,32 @@ object EventStream {
       s"streamingEmbeddingAdmission: in-loop rebalance and exactRescore both " +
         s"need the vectors sub-table at $indexPath — build the seed with " +
         "storeVectors = true (codes are lossy)")
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          embeddingAdmitBatch(batch.toDF(), batchId, indexPath, outPath, tau,
-            compactEvery = compactEvery, funnelLogPath = funnelLogPath,
-            rebalanceLoadPct = rebalanceLoadPct, exactRescore = exactRescore,
-            pipelinePath = pipelinePath)
-      }
-      .start()
+    startBatches(vecs, checkpoint) { (batch, batchId) =>
+      embeddingAdmitBatch(batch, batchId, indexPath, outPath, tau,
+        compactEvery = compactEvery, funnelLogPath = funnelLogPath,
+        rebalanceLoadPct = rebalanceLoadPct, exactRescore = exactRescore,
+        pipelinePath = pipelinePath)
+    }
   }
 
   /** One micro-batch of the embedding admission loop — the foreachBatch
-    * body, factored out for replay testing (the [[curationAdmitBatch]]
-    * convention, including the `crashBeforeExtend` failpoint). `batch`
-    * is (vec_id: Long, embedding: array<float>), the embeddings-table
-    * shape.
+    * body, factored out for replay testing. `batch` is (vec_id: Long,
+    * embedding: array<float>), the embeddings-table shape.
     */
   private[graft] def embeddingAdmitBatch(batch: DataFrame, batchId: Long,
                                          indexPath: String, outPath: String,
                                          tau: Double,
                                          compactEvery: Int = 0,
-                                         crashBeforeExtend: Boolean = false,
                                          funnelLogPath: Option[String] = None,
                                          rebalanceLoadPct: Long = 0L,
                                          exactRescore: Boolean = false,
                                          pipelinePath: Option[String] = None): Unit = {
     import graft.operators.AnnIndex
-    graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
+    val who = s"embeddingAdmitBatch(batch $batchId)"
+    admitBatch(batch, batchId, EmbeddingLoop, indexPath, outPath,
+        compactEvery, funnelLogPath, pipelinePath) { (servedGroup, _) =>
       val q = graft.operators.Embeddings.quantized(batch)
-      // vec_id is the batch's identity contract: a duplicated id (same
-      // or different content) would cross-multiply through the verdict
-      // joins (assign x encode keyed on vec_id -> hybrid code tuples)
-      // and append conflicting corpus rows under one id — refuse loudly
-      // (the media loop's id discipline, applied within-batch; r11
-      // review)
-      val dupIds = q.groupBy("vec_id")
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-      require(dupIds == 0L,
-        s"embeddingAdmitBatch(batch $batchId): $dupIds vec_id(s) appear more " +
-          "than once in the batch — ids must be unique per batch; collapse " +
-          "duplicates upstream")
+      refuseDuplicateIds(q, who)
       // within-batch exact collapse (the media loop's rule): identical
       // quantized vectors keep the smallest vec_id; within-batch NEAR
       // dups below the exact bar are admitted together by design —
@@ -1701,69 +1658,31 @@ object EventStream {
       // (deterministic — an exact re-crawl always matches) plus the
       // ADC near-dup extension at the measured tau (see
       // AnnIndex.matchedIds for why collision is the primary rule)
-      // group version captured at read, verdict pinned to it — the
-      // snapshot's served pin names what the verdicts read (r13)
-      val servedGroup: Long = graft.sources.Sinks.VersionedTable
-        .latestGroup(batch.sparkSession, indexPath).getOrElse(
-          throw new IllegalStateException(
-            s"embeddingAdmitBatch: no committed root snapshot at $indexPath"))._1
-      val admitted = kept
-        .join(AnnIndex.matchedIdsAt(kept, indexPath, tau, servedGroup,
-            exactRescore),
-          Seq("vec_id"), "left_anti")
-        .select("vec_id")
-        .join(batch, Seq("vec_id"))
-        .persist()
-      try {
-        val n = admitted.count()
-        // id-collision guard: an admitted row is novel CONTENT — if its
-        // vec_id already exists in the index, extending would
-        // latest-wins OVERWRITE committed codes (the media loop's rule)
-        val collisions = admitted.select("vec_id")
-          .join(AnnIndex.codes(batch.sparkSession, indexPath)
-            .select("vec_id"), Seq("vec_id"), "left_semi")
-          .count()
-        require(collisions == 0L,
-          s"embeddingAdmitBatch(batch $batchId): $collisions admitted " +
-            "vec_id(s) already exist in the index with DIFFERENT content — " +
-            "id re-use would overwrite committed codes; fix the crawl's id " +
-            "assignment (or retract the old ids first)")
-        if (n > 0) {
-          // corpus append FIRST, index extend SECOND — the shared
-          // restart-safety ordering (see curationAdmitBatch)
-          graft.FailPoint.reach(outPath) // kill-point sweep boundary
-          admitted.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-          if (crashBeforeExtend) throw new RuntimeException(
-            "test failpoint: crashed between corpus append and index extend")
-          // even versions; the in-loop rebalance (below) takes the odd
-          // ones — see the stream starter's version-spacing note
-          AnnIndex.extend(admitted, indexPath, buildV = 2L * (batchId + 1))
-        }
-        funnelLogPath.foreach { lp =>
-          graft.FailPoint.reach(lp) // kill-point sweep boundary
-          graft.operators.AdmissionLog.append(batch.sparkSession, lp,
-            "embedding", batchId, Seq(
-              "1_arrived" -> batch.count(),
-              "2_batch_distinct" -> kept.count(),
-              "3_admitted" -> n))
-        }
-        // cross-ARTIFACT pipeline snapshot — the batch's LAST effect
-        // (see curationAdmitBatch): pins the AnnIndex GROUP version
-        pipelinePath.foreach { pp =>
-          graft.sources.Sinks.PipelineSnapshot.publish(
-            batch.sparkSession, pp, batchId, grouped = Seq(indexPath),
-            served = Map(indexPath -> servedGroup),
-            loop = EmbeddingLoop)
-        }
-      } finally admitted.unpersist()
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-        graft.operators.Artifacts.maintainAll(batch.sparkSession, indexPath)
-        if (rebalanceLoadPct > 0L)
-          AnnIndex.rebalance(batch.sparkSession, indexPath,
-            buildV = 2L * (batchId + 1) + 1L, maxLoadPct = rebalanceLoadPct)
-      }
-    }
+      Admission(
+        admitted = kept
+          .join(AnnIndex.matchedIdsAt(kept, indexPath, tau, servedGroup,
+              exactRescore),
+            Seq("vec_id"), "left_anti")
+          .select("vec_id")
+          .join(batch, Seq("vec_id")),
+        guard = refuseIdReuse(_, "vec_id",
+          AnnIndex.codes(batch.sparkSession, indexPath).select("vec_id"), who),
+        extend = AnnIndex.extend(_, indexPath, buildV = 2L * (batchId + 1)),
+        funnel = n => Seq(
+          "1_arrived" -> batch.count(),
+          "2_batch_distinct" -> kept.count(),
+          "3_admitted" -> n))
+    } { maintainAnn(batch.sparkSession, indexPath, batchId, rebalanceLoadPct) }
+  }
+
+  /** The vector loops' maintain step: the unified GC, then the optional
+    * in-loop rebalance at the odd version 2·(batchId+1)+1. */
+  private def maintainAnn(spark: SparkSession, indexPath: String,
+                          batchId: Long, rebalanceLoadPct: Long): Unit = {
+    graft.operators.Artifacts.maintainAll(spark, indexPath)
+    if (rebalanceLoadPct > 0L)
+      graft.operators.AnnIndex.rebalance(spark, indexPath,
+        buildV = 2L * (batchId + 1) + 1L, maxLoadPct = rebalanceLoadPct)
   }
 
   /** The SEMANTIC admission loop (C44c) — [[graft.operators.AnnIndex
@@ -1782,9 +1701,7 @@ object EventStream {
     * The in-loop rebalance composes here WITHOUT any tau restriction:
     * the gate's scores are exact cosines (codebook-independent), a
     * rebuild only re-draws cluster boundaries — the honest recall
-    * shift, same as `exactRescore`'s contract. Same restart-safety
-    * ordering, id-collision guard, even/odd version spacing, funnel
-    * telemetry, and maintain cadence as the other loops.
+    * shift, same as `exactRescore`'s contract.
     */
   def streamingSemDedupAdmission(vecs: DataFrame, indexPath: String,
                                  outPath: String, checkpoint: String,
@@ -1800,97 +1717,40 @@ object EventStream {
     require(graft.operators.AnnIndex.hasVectors(vecs.sparkSession, indexPath),
       s"streamingSemDedupAdmission: no vectors sub-table at $indexPath — the " +
         "semantic gate rescores exactly; build the seed with storeVectors = true")
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          semDedupAdmitBatch(batch.toDF(), batchId, indexPath, outPath, tau,
-            compactEvery = compactEvery, funnelLogPath = funnelLogPath,
-            rebalanceLoadPct = rebalanceLoadPct, pipelinePath = pipelinePath)
-      }
-      .start()
+    startBatches(vecs, checkpoint) { (batch, batchId) =>
+      semDedupAdmitBatch(batch, batchId, indexPath, outPath, tau,
+        compactEvery = compactEvery, funnelLogPath = funnelLogPath,
+        rebalanceLoadPct = rebalanceLoadPct, pipelinePath = pipelinePath)
+    }
   }
 
   /** One micro-batch of the semantic admission loop — the foreachBatch
-    * body, factored out for replay testing (the [[embeddingAdmitBatch]]
-    * convention, including the `crashBeforeExtend` failpoint).
+    * body, factored out for replay testing.
     */
   private[graft] def semDedupAdmitBatch(batch: DataFrame, batchId: Long,
                                         indexPath: String, outPath: String,
                                         tau: Double,
                                         compactEvery: Int = 0,
-                                        crashBeforeExtend: Boolean = false,
                                         funnelLogPath: Option[String] = None,
                                         rebalanceLoadPct: Long = 0L,
                                         pipelinePath: Option[String] = None): Unit = {
     import graft.operators.AnnIndex
-    graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
-      // the shared within-batch id discipline (see embeddingAdmitBatch)
-      val dupIds = batch.groupBy("vec_id")
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-      require(dupIds == 0L,
-        s"semDedupAdmitBatch(batch $batchId): $dupIds vec_id(s) appear more " +
-          "than once in the batch — ids must be unique per batch; collapse " +
-          "duplicates upstream")
+    val who = s"semDedupAdmitBatch(batch $batchId)"
+    admitBatch(batch, batchId, SemanticLoop, indexPath, outPath,
+        compactEvery, funnelLogPath, pipelinePath) { (servedGroup, _) =>
+      refuseDuplicateIds(batch, who)
       // ONE verdict: the gate's own committed-wins + keep-first rules —
       // an id re-crawl self-pairs at cos 1.0 and drops, so no separate
-      // exact-collapse stage is needed here. Group version captured at
-      // read, gate pinned to it — the snapshot's served pin (r13).
-      val servedGroup: Long = graft.sources.Sinks.VersionedTable
-        .latestGroup(batch.sparkSession, indexPath).getOrElse(
-          throw new IllegalStateException(
-            s"semDedupAdmitBatch: no committed root snapshot at $indexPath"))._1
-      val admitted = batch
-        .join(AnnIndex.semDedupServeAt(batch, indexPath, tau, servedGroup)
-          .filter(col("is_kept")).select("vec_id"), Seq("vec_id"))
-        .persist()
-      try {
-        val n = admitted.count()
-        // id-collision guard (the media loop's rule): an admitted row is
-        // novel CONTENT — a committed vec_id under it means id re-use
-        val collisions = admitted.select("vec_id")
-          .join(AnnIndex.codes(batch.sparkSession, indexPath)
-            .select("vec_id"), Seq("vec_id"), "left_semi")
-          .count()
-        require(collisions == 0L,
-          s"semDedupAdmitBatch(batch $batchId): $collisions admitted " +
-            "vec_id(s) already exist in the index — id re-use would " +
-            "overwrite committed content; fix the crawl's id assignment " +
-            "(or retract the old ids first)")
-        if (n > 0) {
-          // corpus append FIRST, index extend SECOND — the shared
-          // restart-safety ordering (see curationAdmitBatch)
-          graft.FailPoint.reach(outPath) // kill-point sweep boundary
-          admitted.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-          if (crashBeforeExtend) throw new RuntimeException(
-            "test failpoint: crashed between corpus append and index extend")
-          AnnIndex.extend(admitted, indexPath, buildV = 2L * (batchId + 1))
-        }
-        funnelLogPath.foreach { lp =>
-          graft.FailPoint.reach(lp) // kill-point sweep boundary
-          graft.operators.AdmissionLog.append(batch.sparkSession, lp,
-            "semantic", batchId, Seq(
-              "1_arrived" -> batch.count(),
-              "2_admitted" -> n))
-        }
-        // cross-ARTIFACT pipeline snapshot — the batch's LAST effect
-        // (see curationAdmitBatch): pins the AnnIndex GROUP version
-        pipelinePath.foreach { pp =>
-          graft.sources.Sinks.PipelineSnapshot.publish(
-            batch.sparkSession, pp, batchId, grouped = Seq(indexPath),
-            served = Map(indexPath -> servedGroup),
-            loop = SemanticLoop)
-        }
-      } finally admitted.unpersist()
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-        graft.operators.Artifacts.maintainAll(batch.sparkSession, indexPath)
-        if (rebalanceLoadPct > 0L)
-          AnnIndex.rebalance(batch.sparkSession, indexPath,
-            buildV = 2L * (batchId + 1) + 1L, maxLoadPct = rebalanceLoadPct)
-      }
-    }
+      // exact-collapse stage is needed here
+      Admission(
+        admitted = batch
+          .join(AnnIndex.semDedupServeAt(batch, indexPath, tau, servedGroup)
+            .filter(col("is_kept")).select("vec_id"), Seq("vec_id")),
+        guard = refuseIdReuse(_, "vec_id",
+          AnnIndex.codes(batch.sparkSession, indexPath).select("vec_id"), who),
+        extend = AnnIndex.extend(_, indexPath, buildV = 2L * (batchId + 1)),
+        funnel = n => Seq("1_arrived" -> batch.count(), "2_admitted" -> n))
+    } { maintainAnn(batch.sparkSession, indexPath, batchId, rebalanceLoadPct) }
   }
 
   /** Streaming BPE encode against the COMMITTED tokenizer
@@ -1956,8 +1816,8 @@ object EventStream {
     * the [[streamingLmGate]] rule — each verdict row carries its
     * `batch_id`, so a replayed micro-batch rewrites the same
     * (batch_id, doc_id) pairs and consumers dedup exactly.
-    */
-  /** `pinGroupVersion`: serve the stream's WHOLE lifetime from one
+    *
+    * `pinGroupVersion`: serve the stream's WHOLE lifetime from one
     * NAMED root snapshot ([[graft.sources.Sinks.ArtifactSnapshot
     * .readAt]]) — the reproducible-serving knob on top of the default
     * stream-start snapshot (which is merely the latest at start).
@@ -1968,22 +1828,17 @@ object EventStream {
     val (corpFps, corpSigs, corpBands) =
       graft.operators.DedupIndex.loadFrames(docs.sparkSession, indexPath,
         pinGroupVersion)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // scope the classifier's tracked persists to this micro-batch:
-        // each batch has a distinct plan, so without the release the
-        // cache registry would grow one entry per batch, forever
-        if (!batch.isEmpty)
-          graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
-            graft.operators.DedupIndex
-              .matchAgainst(batch.toDF(), corpFps, corpSigs, corpBands)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outPath)
-          }
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      // scope the classifier's tracked persists to this micro-batch:
+      // each batch has a distinct plan, so without the release the
+      // cache registry would grow one entry per batch, forever
+      graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
+        graft.operators.DedupIndex
+          .matchAgainst(batch, corpFps, corpSigs, corpBands)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
       }
-      .start()
+    }
   }
 
   /** Streaming CONTAINMENT probe against the committed corpus shingle
@@ -2001,19 +1856,14 @@ object EventStream {
                             outPath: String, checkpoint: String): StreamingQuery = {
     val corpusSh = graft.operators.DedupIndex
       .loadContainFrame(docs.sparkSession, indexPath)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
-            graft.operators.DedupIndex
-              .matchContainment(batch.toDF(), corpusSh)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outPath)
-          }
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
+        graft.operators.DedupIndex
+          .matchContainment(batch, corpusSh)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
       }
-      .start()
+    }
   }
 
   /** Streaming SEMANTIC-dedup gate from the COMMITTED index (C44b's
@@ -2035,19 +1885,14 @@ object EventStream {
     require(graft.operators.AnnIndex.hasVectors(vecs.sparkSession, indexPath),
       s"streamingSemDedupGate: no vectors sub-table at $indexPath — the gate " +
         "rescores exactly; build the index with storeVectors = true")
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
-            graft.operators.AnnIndex
-              .semDedupServe(batch.toDF(), indexPath, tau)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outPath)
-          }
+    startBatches(vecs, checkpoint) { (batch, batchId) =>
+      graft.GraftCache.releaseCreatedDuring(batch.sparkSession) {
+        graft.operators.AnnIndex
+          .semDedupServe(batch, indexPath, tau)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outPath)
       }
-      .start()
+    }
   }
 
   /** Streaming LM fluency gate (C55's continuous twin): incoming
@@ -2074,16 +1919,11 @@ object EventStream {
     */
   def streamingLmGate(docs: DataFrame, cb: DataFrame, cw: DataFrame,
                       outPath: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Classify.lmScoreAgainst(batch.toDF(), cb, cw)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outPath)
-      }
-      .start()
+    startBatches(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.Classify.lmScoreAgainst(batch, cb, cw)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming rollup maintenance (B43's continuous twin) — the
     * EXACTLY-ONCE aggregate exit: each micro-batch partial-aggs its
@@ -2147,15 +1987,9 @@ object EventStream {
                                    keys: Seq[String], versionCol: String,
                                    checkpoint: String,
                                    numBuckets: Int = 64): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val latest = latestPerKey(batch.toDF(), keys, versionCol)
-          graft.sources.Sinks.VersionedTable.mergeUpsert(
-            batch.sparkSession, path, latest, keys, versionCol, numBuckets)
-        }
-      }
-      .start()
+    startBatches(stream, checkpoint) { (batch, _) =>
+      graft.sources.Sinks.VersionedTable.mergeUpsert(batch.sparkSession,
+        path, latestPerKey(batch, keys, versionCol), keys, versionCol,
+        numBuckets)
+    }
 }

@@ -35,6 +35,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
 
   private def ts(minute: Long): Timestamp = new Timestamp(minute * 60000L)
 
+  /** Run an admission batch with a kill armed at the first durable-effect
+    * boundary under `indexDir` — the window between corpus append and
+    * index extend — and return the kill. Callers check it names the
+    * extend's first sub-table commit, so no earlier boundary sits under
+    * that prefix. */
+  private def killBeforeExtend(indexDir: String)(batch: => Unit): graft.FailPoint.Killed = {
+    graft.FailPoint.arm(indexDir, 1)
+    try intercept[graft.FailPoint.Killed](batch)
+    finally graft.FailPoint.reset()
+  }
+
   test("streaming upsert sink merges micro-batches into a latest-wins parquet target") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -1329,11 +1340,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // (c) crash BEFORE the publish: no snapshot for that batch; the
     // replay completes the batch and publishes (pinning its post-replay
     // state — the at-least-once contract)
-    intercept[RuntimeException] {
+    val kill = killBeforeExtend(indexPath) {
       EventStream.curationAdmitBatch(htmlDf(Seq(2L, 5L)), 2L, indexPath,
-        lr, 0L, s"$dir/out", crashBeforeExtend = true,
+        lr, 0L, s"$dir/out",
         registryPath = Some(regPath), pipelinePath = Some(pp))
     }
+    assert(kill.getMessage.endsWith(s"#1 ($indexPath/fps)"), kill.getMessage)
     assert(PipelineSnapshot.forBatch(spark, pp, 2L).isEmpty,
       "a batch that died before its last step has no pipeline snapshot")
     run(Seq(2L, 5L), 2L)
@@ -1706,7 +1718,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     val nB = graft.FailPoint.count
     graft.FailPoint.reset()
     // corpus append + codes commit + group publish + funnel + pipeline
-    assert(nB >= 5, s"expected at least 5 commit boundaries, saw $nB")
+    assert(nB == 5, s"expected 5 commit boundaries in one admitted batch, saw $nB")
     assert(state(dp) == ref, "the probe run is itself a clean run")
     for (k <- 1 to nB) {
       val d = newDir(); setup(d); run(d, 2, 1000L, 0L)
@@ -1756,7 +1768,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     val sp = semDir(); semSetup(sp); semRun(sp, 8, 1000L, 0L)
     graft.FailPoint.record(sp); semRun(sp, 9, 2000L, 1L)
     val semB = graft.FailPoint.count; graft.FailPoint.reset()
-    assert(semB >= 5, s"semantic batch boundaries: $semB")
+    // corpus append + vectors and codes commits + group publish + funnel
+    // + pipeline
+    assert(semB == 6, s"semantic batch boundaries: $semB")
     for (k <- 1 to semB) {
       val d = semDir(); semSetup(d); semRun(d, 8, 1000L, 0L)
       graft.FailPoint.arm(d, k)
@@ -1800,7 +1814,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     val mp = medDir(); medSetup(mp); medRun(mp, 40L, 50L, 0L)
     graft.FailPoint.record(mp); medRun(mp, 20L, 30L, 1L)
     val medB = graft.FailPoint.count; graft.FailPoint.reset()
-    assert(medB >= 4, s"media batch boundaries: $medB")
+    // corpus append (under the index root here) + img commit + group
+    // publish + funnel + pipeline
+    assert(medB == 5, s"media batch boundaries: $medB")
     for (k <- 1 to medB) {
       val d = medDir(); medSetup(d); medRun(d, 40L, 50L, 0L)
       graft.FailPoint.arm(d, k)
@@ -1836,10 +1852,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // the window between its two effects
     EventStream.curationAdmitBatch(htmlDf(Seq(1L, 2L)), 0L,
       s"$dir/index", lr, 0L, s"$dir/out")
-    intercept[RuntimeException] {
+    val kill = killBeforeExtend(s"$dir/index") {
       EventStream.curationAdmitBatch(htmlDf(Seq(2L, 4L)), 1L,
-        s"$dir/index", lr, 0L, s"$dir/out", crashBeforeExtend = true)
+        s"$dir/index", lr, 0L, s"$dir/out")
     }
+    assert(kill.getMessage.endsWith(s"#1 ($dir/index/fps)"), kill.getMessage)
     // the crash state the ordering guarantees: the admission is in the
     // corpus but NOT yet in the index (the reverse order would leave the
     // unrecoverable opposite — indexed forever, never written)
@@ -2531,17 +2548,25 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
       arrivals(Seq((9100L, 370L), (9101L, 460L))),
       1L, s"$dir/index", s"$dir/out", tau,
       funnelLogPath = Some(s"$dir/funnel"))
+    // batch 2: re-crawls only (seed 7, batch 0's 370) — all rejected
+    EventStream.embeddingAdmitBatch(
+      arrivals(Seq((9200L, 7L), (9201L, 370L))),
+      2L, s"$dir/index", s"$dir/out", tau,
+      funnelLogPath = Some(s"$dir/funnel"))
     val out = spark.read.parquet(s"$dir/out").collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("batch_id"))).toSet
     assert(!out.exists(_._1 == 9100L),
       "a re-crawl of a prior batch's admission must be rejected")
     assert(out.contains((9101L, 1L)))
+    assert(!out.exists(_._2 == 2L), s"an all-rejected batch appends nothing: $out")
     // funnel evidence for both batches
     val fu = graft.operators.AdmissionLog.read(spark, s"$dir/funnel")
       .collect().map(r => (r.getLong(1), r.getString(2)) -> r.getLong(3)).toMap
     assert(fu((0L, "1_arrived")) == 53L && fu((0L, "2_batch_distinct")) == 52L
       && fu((0L, "3_admitted")) == 51L, s"batch-0 funnel: $fu")
     assert(fu((1L, "3_admitted")) == 1L)
+    assert(fu((2L, "1_arrived")) == 2L && fu((2L, "3_admitted")) == 0L,
+      s"an all-rejected batch still files its funnel: $fu")
     // id-collision guard: novel content under an existing index id fails
     val err = intercept[IllegalArgumentException] {
       EventStream.embeddingAdmitBatch(arrivals(Seq((370L, 470L))), 9L,
@@ -2725,11 +2750,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // crash between corpus append and extend: replay admits nothing new
     // (the appended row now reads as a committed copy is WRONG — the
     // extend never landed, so the replay re-gates and re-extends)
-    intercept[RuntimeException] {
+    val kill = killBeforeExtend(s"$dir/index") {
       EventStream.semDedupAdmitBatch(
         Seq((9300L, byId(460L))).toDF("vec_id", "embedding"), 3L,
-        s"$dir/index", s"$dir/out", tau = 0.9, crashBeforeExtend = true)
+        s"$dir/index", s"$dir/out", tau = 0.9)
     }
+    assert(kill.getMessage.endsWith(s"#1 ($dir/index/vectors)"), kill.getMessage)
     // the crash left the corpus row but not the index row; the replay
     // re-runs the gate (9300 is still novel to the INDEX), re-appends,
     // and lands the extend — at-least-once corpus semantics, the
@@ -2744,6 +2770,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     run(4L, Seq((9400L, byId(460L)), (9401L, byId(480L))))
     assert(out().contains((9401L, 4L)) && !out().exists(_._1 == 9400L),
       s"a copy of the replayed admission must drop: ${out()}")
+    // copies of admissions only (400 from batch 0, 460 from the replayed
+    // batch 3) — all rejected; an even id keeps it off the rebalance
+    // cadence
+    run(6L, Seq((9600L, byId(400L)), (9601L, byId(460L))))
+    assert(!out().exists(_._2 == 6L),
+      s"an all-rejected batch appends nothing: ${out()}")
+    val funnel6 = spark.read.parquet(s"$dir/funnel")
+      .filter(col("loop") === "semantic" && col("batch_id") === 6L)
+      .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("n")).toMap
+    assert(funnel6 == Map("1_arrived" -> 2L, "2_admitted" -> 0L),
+      s"an all-rejected batch still files its funnel: $funnel6")
     graft.GraftCache.releaseAll(spark)
   }
 
@@ -2796,11 +2833,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // collision-only verdicts (tau > 1): deterministic at any margin
     EventStream.embeddingAdmitBatch(arrivals(Seq((401L, 401L))), 0L,
       s"$dir/index", s"$dir/out", tau = 2.0)
-    intercept[RuntimeException] {
+    val kill = killBeforeExtend(s"$dir/index") {
       EventStream.embeddingAdmitBatch(
         arrivals(Seq((9100L, 401L), (410L, 410L))), 1L,
-        s"$dir/index", s"$dir/out", tau = 2.0, crashBeforeExtend = true)
+        s"$dir/index", s"$dir/out", tau = 2.0)
     }
+    assert(kill.getMessage.endsWith(s"#1 ($dir/index/codes)"), kill.getMessage)
     // the ordering's crash state: 410's append landed, its extend did not
     val crashed = spark.read.parquet(s"$dir/out").collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("batch_id")))
@@ -2891,10 +2929,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // the window between its two effects
     EventStream.mediaAdmitBatch(batchDf(Seq((101L, 1L))), 0L,
       s"$dir/index", s"$dir/out", "img")
-    intercept[RuntimeException] {
+    val kill = killBeforeExtend(s"$dir/index") {
       EventStream.mediaAdmitBatch(batchDf(Seq((201L, 1L), (202L, 2L))), 1L,
-        s"$dir/index", s"$dir/out", "img", crashBeforeExtend = true)
+        s"$dir/index", s"$dir/out", "img")
     }
+    assert(kill.getMessage.endsWith(s"#1 ($dir/index/img)"), kill.getMessage)
     // the ordering's crash state: 202's append landed, its extend did not
     val crashed = spark.read.parquet(s"$dir/out").collect()
       .map(r => (r.getAs[Long]("media_id"), r.getAs[Long]("batch_id")))

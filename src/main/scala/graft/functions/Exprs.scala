@@ -1292,12 +1292,18 @@ object Exprs {
     * encoder-backed expression that re-converts the whole Seq on every
     * evaluation — catastrophic inside an interpreted HOF lambda (a
     * 4096-entry weight table re-materialized PER FEATURE measured 6×
-    * slower than the string chain it replaced); `Literal.create`
-    * converts once at plan build.
+    * slower than the string chain it replaced); this converts once at
+    * plan build. The value is an UnsafeArrayData, not the
+    * GenericArrayData `Literal.create` makes: Spark renders the
+    * physical plan's description at every SQL execution start and AQE
+    * plan update, and a GenericArrayData literal prints element by
+    * element — for the ANN codebooks, thousands of longs per plan, per
+    * job. An UnsafeArrayData prints as its class and content hash.
     */
   def litLongArray(a: Seq[Long]): Column =
-    ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.Literal.create(
-      a.toArray, ArrayType(LongType, containsNull = false)))
+    ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.Literal(
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(a.toArray),
+      ArrayType(LongType, containsNull = false)))
   def dotLong(a: Column, b: Column): Column =
     ColumnBridge.column(DotLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def minhashSig(shingles: Column, numHashes: Int): Column =

@@ -218,8 +218,7 @@ object AnnIndex {
     // an extend landing after the crash.
     val usedCbV = graft.sources.Sinks.ArtifactSnapshot
       .resolvedVersion(spark, path, "codebooks")
-    val (coarseDf, cbs) = loadCodebookFramesWith(spark, path,
-      usedCbV.map("codebooks" -> _).toMap)
+    val ix = loadWith(spark, path, usedCbV.map("codebooks" -> _).toMap)
     // an IndexRefine-split index keeps its vectors COMPLETE, and they
     // commit FIRST (the build ordering rule): a crash leaving codes
     // without exact twins would make those candidates silently drop
@@ -229,7 +228,7 @@ object AnnIndex {
       VersionedTable.mergeUpsert(spark, vectorsPath(path),
         q.withColumn("build_v", lit(buildV)),
         Seq("vec_id"), "build_v", numBuckets = 16)
-    val codes = Embeddings.ivfPqCodes(q, coarseDf, cbs)
+    val codes = Embeddings.ivfPqCodesRows(q, ix.coarse, ix.pq)
       .withColumn("build_v", lit(buildV))
     VersionedTable.mergeUpsert(spark, codesPath(path), codes,
       Seq("vec_id"), "build_v", numBuckets = 16)
@@ -237,14 +236,18 @@ object AnnIndex {
       pin = usedCbV.map("codebooks" -> _).toMap)
   }
 
-  /** The loaded model artifact: coarse codebook rows plus per-subspace
+  /** The loaded model artifact: coarse and per-subspace codebook rows
+    * (c_id, cqv, cnrm) in c_id order, plus the per-subspace
     * centroid/norm arrays, all driver-side constants ((1 + PqM) ×
-    * NumCentroids rows — never data-proportional).
+    * NumCentroids rows — never data-proportional). One collect per
+    * snapshot: every encode and ADC score of an operation reads it.
     */
   private[graft] case class Loaded(
       coarse: Array[(Long, Seq[Long], Long)],
-      cent: IndexedSeq[Seq[Seq[Long]]],
-      cnrm: IndexedSeq[Seq[Long]])
+      pq: IndexedSeq[Array[(Long, Seq[Long], Long)]]) {
+    val cent: IndexedSeq[Seq[Seq[Long]]] = pq.map(_.map(_._2).toSeq)
+    val cnrm: IndexedSeq[Seq[Long]] = pq.map(_.map(_._3).toSeq)
+  }
 
   private[graft] def load(spark: SparkSession, path: String): Loaded =
     loadWith(spark, path, snapPins(spark, path))
@@ -259,10 +262,7 @@ object AnnIndex {
         s"AnnIndex: $kind c_ids must be contiguous 0..${NumCentroids - 1}")
       rs.map(r => (r.getLong(1), r.getSeq[Long](2), r.getLong(3)))
     }
-    Loaded(
-      rows("coarse"),
-      (0 until PqM).map(m => rows(s"pq$m").map(_._2).toSeq),
-      (0 until PqM).map(m => rows(s"pq$m").map(_._3).toSeq))
+    Loaded(rows("coarse"), (0 until PqM).map(m => rows(s"pq$m")))
   }
 
   /** The committed codebooks as TRAINING-SHAPED frames — (coarse,
@@ -632,15 +632,15 @@ object AnnIndex {
                              tau: Double, exactRescore: Boolean,
                              pins: Map[String, Long]): DataFrame = {
     val spark = probes.sparkSession
-    val (coarseDf, cbs) = loadCodebookFramesWith(spark, path, pins)
-    val arrCodes = Embeddings.ivfPqCodes(probes, coarseDf, cbs)
+    val ix = loadWith(spark, path, pins)
+    val arrCodes = Embeddings.ivfPqCodesRows(probes, ix.coarse, ix.pq)
     val codeCols = Seq("c_id") ++ (0 until PqM).map(m => s"code_$m")
     val collided = arrCodes
       .join(codesWith(spark, path, pins), codeCols, "left_semi")
       .select("vec_id")
     if (tau > 1.0) collided.distinct()
     else {
-      val scored = adcScored(probes, path, pins = Some(pins))
+      val scored = adcScoredWith(probes, path, ix, pins, excludeSelf = true)
       val near =
         if (!exactRescore)
           scored.groupBy("q_id").agg(max("approx_cos").as("b"))
@@ -772,10 +772,10 @@ object AnnIndex {
     // prune only under a verified bucket contract; a legacy table (no
     // recorded contract — same vec_id bucketing, but unprovable from
     // the manifest) takes the full-snapshot rewrite: slower, never wrong
-    def retractSub(sub: String, name: String): TakedownReceipt =
-      if (VersionedTable.storedBucketKeys(spark, sub)
-          .contains(Seq("vec_id"))) {
-        val nb = VersionedTable.storedNumBuckets(spark, sub).getOrElse(16)
+    def retractSub(sub: String, name: String): TakedownReceipt = {
+      val m = VersionedTable.latest(spark, sub)
+      if (m.flatMap(_.bucketCols).contains(Seq("vec_id"))) {
+        val nb = m.flatMap(_.numBuckets).getOrElse(16)
         val touched = idDf
           .select(pmod(hash(col("vec_id")), lit(nb)).as("bk"))
           .distinct().collect().map(_.getInt(0)).toIndexedSeq
@@ -792,6 +792,7 @@ object AnnIndex {
             snap => snap.filter(!col("vec_id").isInCollection(ids))
           }
         }
+    }
     // the EXACT vectors sub-table is CONTENT in the strongest sense — a
     // takedown that dropped only the lossy codes but kept raw vectors
     // would not be a takedown at all (r11, the IndexRefine split)
@@ -898,7 +899,15 @@ object AnnIndex {
                                pins: Option[Map[String, Long]] = None): DataFrame = {
     val spark = probes.sparkSession
     val p = pins.getOrElse(snapPins(spark, path))
-    val ix = loadWith(spark, path, p)
+    adcScoredWith(probes, path, loadWith(spark, path, p), p, excludeSelf)
+  }
+
+  /** [[adcScored]] against already-loaded codebooks `ix`, which must
+    * come from the same snapshot as `pins`. */
+  private def adcScoredWith(probes: DataFrame, path: String, ix: Loaded,
+                            pins: Map[String, Long],
+                            excludeSelf: Boolean): DataFrame = {
+    val spark = probes.sparkSession
     // NProbe nearest lists per probe as a map-side array over the
     // loaded centroid constants — the old crossJoin + routing-rank
     // window collapsed into codegen (r14, same rewrite as the
@@ -913,7 +922,7 @@ object AnnIndex {
       .select(Seq(col("q_id"), col("q_nrm"), explode(col("cids")).as("c_id")) ++
         (0 until PqM).map(m => col(s"adc_$m")): _*)
     val (adot, anrm) = adcColsFor(ix)
-    codesWith(spark, path, p)
+    codesWith(spark, path, pins)
       .join(broadcast(probeLists), Seq("c_id"))
       .filter(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
       .select(col("q_id"), col("vec_id").as("n_id"),

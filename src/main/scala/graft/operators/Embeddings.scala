@@ -1276,8 +1276,8 @@ object Embeddings {
   private[operators] def nearestCentroidId(qv: Column,
                                            cents: Array[(Long, Seq[Long], Long)]): Column = {
     val scores = array(cents.toIndexedSeq.map { case (_, cqv, cnrm) =>
-      lit(cnrm) - lit(2L) * dot(qv, typedLit(cqv)) }: _*)
-    element_at(typedLit(cents.map(_._1).toSeq),
+      lit(cnrm) - lit(2L) * dot(qv, Exprs.litLongArray(cqv)) }: _*)
+    element_at(Exprs.litLongArray(cents.map(_._1).toSeq),
       array_position(scores, array_min(scores)).cast("int"))
   }
 
@@ -1293,7 +1293,7 @@ object Embeddings {
                                      nProbe: Int): Column =
     transform(
       slice(array_sort(array(cents.toIndexedSeq.map { case (cid, cqv, cnrm) =>
-        struct((lit(cnrm) - lit(2L) * dot(qv, typedLit(cqv))).as("d2"),
+        struct((lit(cnrm) - lit(2L) * dot(qv, Exprs.litLongArray(cqv))).as("d2"),
           lit(cid).as("c_id")) }: _*)), 1, nProbe),
       s => s.getField("c_id"))
 
@@ -1355,6 +1355,19 @@ object Embeddings {
     if (k <= LiteralCentroidMax) trainCodebookLiteral(q, iters, trainMod, k)
     else trainCodebookBroadcast(q, iters, trainMod, k)
 
+  /** The init rows are the vectors with vec_id 0..k−1: refuse a corpus
+    * lacking some of them before training, naming them. Training on
+    * fewer would return a codebook whose c_ids are not 0..k−1, which a
+    * committed index cannot load back ([[AnnIndex]] requires them
+    * contiguous), and on none a plan over an empty centroid array. */
+  private def requireInitIds(present: Seq[Long], k: Int): Unit = {
+    val missing = (0L until k).filterNot(present.toSet)
+    require(missing.isEmpty,
+      s"k-means init takes the vectors with vec_id 0..${k - 1}; missing vec_ids " +
+        missing.take(16).mkString(", ") +
+        (if (missing.size > 16) s", … (${missing.size} of $k)" else ""))
+  }
+
   private def trainCodebookLiteral(q: DataFrame, iters: Int, trainMod: Long, k: Int): DataFrame = {
     // Only qv survives into the training frame: the argmin is a literal-
     // centroid projection, so neither vec_id nor nrm is ever read again
@@ -1373,6 +1386,7 @@ object Embeddings {
           .collect()
           .map(r => withNrm(r.getLong(0), r.getSeq[Long](1)))
           .sortBy(_._1)
+      requireInitIds(cents.map(_._1).toSeq, k)
       for (_ <- 1 to iters) {
         // ONE corpus pass per iteration: map-side argmin against the
         // literal centroids, then a (c_id, component)-keyed partial-agg
@@ -1426,7 +1440,8 @@ object Embeddings {
     // about (zero-orphaned-caches invariant).
     var inflight: DataFrame = null
     try {
-    cent.count() // materialize before the loop so unpersist order is safe
+    // materialize before the loop so unpersist order is safe
+    requireInitIds(cent.select("c_id").collect().map(_.getLong(0)).toSeq, k)
     for (_ <- 1 to iters) {
       val c = cent.withColumn("cnrm", dot(col("cqv"), col("cqv")))
       // argmin as a min_by hash aggregate (tie-break on centroid id) —
@@ -1510,16 +1525,21 @@ object Embeddings {
     * argmins are all literal-codebook projections over the same row).
     */
   def ivfPqCodes(q: DataFrame, coarse: DataFrame,
-                 cbs: Seq[DataFrame]): DataFrame = {
-    val coarseRows = centroidRows(coarse)
-    val pqRows = cbs.map(centroidRows)
+                 cbs: Seq[DataFrame]): DataFrame =
+    ivfPqCodesRows(q, centroidRows(coarse), cbs.map(centroidRows))
+
+  /** [[ivfPqCodes]] over codebooks already collected as
+    * [[centroidRows]] — the form for a caller that reuses one load
+    * (the committed index's encode and ADC share one collect). */
+  private[operators] def ivfPqCodesRows(q: DataFrame,
+                                        coarseRows: Array[(Long, Seq[Long], Long)],
+                                        pqRows: Seq[Array[(Long, Seq[Long], Long)]]): DataFrame =
     q.select(col("vec_id") +:
       nearestCentroidId(col("qv"), coarseRows).as("c_id") +:
       (0 until PqM).map { m =>
         nearestCentroidId(slice(col("qv"), m * PqSubDim + 1, PqSubDim),
           pqRows(m)).as(s"code_$m")
       }: _*)
-  }
 
   def ivfAssign(q: DataFrame): DataFrame = ivfAssign(q, kmeansCodebook(q))
 

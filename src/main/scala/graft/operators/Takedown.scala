@@ -290,16 +290,16 @@ private[operators] object Takedown {
   def receipted(spark: SparkSession, artifact: String, sub: String,
                 subTable: String, idsRequested: Long, hit: Column,
                 touched: Option[Seq[Int]])(op: => Unit): TakedownReceipt = {
-    val (oldV, oldMap) = VersionedTable.latestManifest(spark, sub).getOrElse(
+    val old = VersionedTable.latest(spark, sub).getOrElse(
       throw new IllegalStateException(s"Takedown receipt: no commits at $sub"))
+    val (oldV, oldMap) = (old.version, old.buckets)
     val dirs = (touched match {
-      case Some(t) => t.toSet.intersect(oldMap.keySet).toSeq.sorted
-      case None => oldMap.keySet.toSeq.sorted
-    }).map(b => s"$sub/${oldMap(b)}")
+      case Some(t) => t.toSet.intersect(oldMap.keySet).toSeq
+      case None => oldMap.keySet.toSeq
+    }).map(oldMap)
     val found =
       if (dirs.isEmpty) 0L
-      else spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-        .filter(hit).count()
+      else VersionedTable.readBuckets(spark, sub, old, dirs).filter(hit).count()
     op
     val (newV, newMap) = VersionedTable.latestManifest(spark, sub).getOrElse(
       throw new IllegalStateException(s"Takedown receipt: $sub lost its manifest"))

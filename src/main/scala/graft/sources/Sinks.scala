@@ -2,9 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Write-side patterns for the 100 TB pipeline (SURVEY.md §2: sources &
   * sinks). The reference's sink is row-at-a-time psycopg2 INSERTs
@@ -58,8 +59,8 @@ object Sinks {
     // allowMissingColumns: ADDITIVE schema evolution — a delta carrying
     // a new column null-fills the base rows (and vice versa for a
     // column the delta dropped), the standard lakehouse contract.
-    // Readers of mixed-schema bucket dirs merge footers (see
-    // VersionedTable.read's mergeSchema).
+    // VersionedTable records the union schema in each manifest and
+    // reads every bucket dir with it.
     val all = base.withColumn("__src", lit(1))
       .unionByName(delta.withColumn("__src", lit(0)), allowMissingColumns = true)
     val w = Window.partitionBy(keys.map(col): _*)
@@ -207,6 +208,25 @@ object Sinks {
     * path/data/v00000042-b0003-<uuid>/   immutable per-bucket parquet dirs
     * }}}
     *
+    * A manifest is one JSON object with these fields, in this order:
+    *  - `version`: the version it commits;
+    *  - `numBuckets`: the bucket count the table was created with;
+    *  - `bucketCols`: the columns the bucket id hashes (see
+    *    [[mergeUpsert]]'s `bucketKeys`; absent on tables written before
+    *    the field existed, whose contract is the merge keys);
+    *  - `schema`: the table's schema at this version, as Spark's JSON
+    *    form of a StructType. It is the previous version's schema with
+    *    the new columns of the frame this commit wrote appended, the
+    *    additive rule `latestWins`' `unionByName(allowMissingColumns)`
+    *    applies; a same-name type conflict fails the commit. Every
+    *    bucket-dir read ([[readBuckets]]) reads with it, so a bucket
+    *    written before an additive change null-fills the newer columns
+    *    and no read infers a schema from parquet footers;
+    *  - `buckets`: bucket id -> data dir, relative to the table root.
+    * A manifest without `schema` (written before the field existed) is
+    * read with Spark's `mergeSchema` footer inference instead, and the
+    * table's next commit records the inferred schema.
+    *
     * Invariants, in the order that makes the protocol safe:
     *  1. data dirs are IMMUTABLE and uniquely named — written fully
     *     before any manifest references them, never modified after;
@@ -337,6 +357,37 @@ object Sinks {
       "\"bucketCols\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
         .map(_.group(1).split(',').toIndexedSeq.filter(_.nonEmpty))
 
+    private val SchemaKey = "\"schema\":"
+    private val BucketsKey = "\"buckets\":{"
+
+    /** One committed version's manifest, parsed from one body: the
+      * bucket map, the bucket contract (`numBuckets` > 0 and non-empty
+      * `bucketCols`, None when not recorded) and the recorded schema
+      * (None on a manifest written before the field existed).
+      */
+    private[graft] final case class Manifest(version: Long,
+                                             buckets: Map[Int, String],
+                                             numBuckets: Option[Int],
+                                             bucketCols: Option[Seq[String]],
+                                             schema: Option[StructType])
+
+    /** The header fields sit before `schema` and the bucket map after
+      * it, so neither parse can match inside the schema's JSON. (Only
+      * [[vacuumVersioned]] parses a torn body: it keeps whatever bucket
+      * entries the body holds.) */
+    private def parseManifest(v: Long, txt: String): Manifest = {
+      val bAt = txt.lastIndexOf(BucketsKey)
+      val sAt = txt.indexOf(SchemaKey)
+      val hasSchema = sAt >= 0 && bAt > sAt
+      val head = txt.substring(0, if (hasSchema) sAt else if (bAt >= 0) bAt else txt.length)
+      Manifest(v, parseBuckets(txt.substring(math.max(bAt, 0))),
+        parseNumBuckets(head).filter(_ > 0),
+        parseBucketCols(head).filter(_.nonEmpty),
+        if (!hasSchema) None
+        else Some(DataType.fromJson(txt.substring(sAt + SchemaKey.length, bAt - 1))
+          .asInstanceOf[StructType]))
+    }
+
     /** Structural completeness check for a manifest body. [[publish]]
       * never exposes a partially-written manifest on a correct
       * filesystem (full temp write + atomic link/rename), but a
@@ -388,7 +439,14 @@ object Sinks {
       * an uninitialized table.
       */
     def latestManifest(spark: SparkSession, path: String): Option[(Long, Map[Int, String])] =
-      latestIntact(spark, path).map { case (v, txt) => (v, parseBuckets(txt)) }
+      latest(spark, path).map(m => (m.version, m.buckets))
+
+    /** The latest intact manifest, parsed from one read of its body —
+      * what a commit attempt bases itself on. None for an uninitialized
+      * table.
+      */
+    private[graft] def latest(spark: SparkSession, path: String): Option[Manifest] =
+      latestIntact(spark, path).map { case (v, txt) => parseManifest(v, txt) }
 
     /** Count of commit manifests currently on disk (intact or torn) —
       * the retention observable [[vacuumVersioned]] bounds. */
@@ -632,13 +690,65 @@ object Sinks {
       */
     private def publish(spark: SparkSession, path: String, v: Long,
                         buckets: Map[Int, String], numBuckets: Int,
-                        bucketCols: Seq[String]): Boolean = {
+                        bucketCols: Seq[String], schema: StructType): Boolean = {
       val bc = if (bucketCols.isEmpty) ""
         else s""""bucketCols":"${bucketCols.mkString(",")}","""
       val body = buckets.toSeq.sorted
         .map { case (b, d) => s""""$b":"$d"""" }
-        .mkString(s"""{"version":$v,"numBuckets":$numBuckets,$bc"buckets":{""", ",", "}}")
+        .mkString(s"""{"version":$v,"numBuckets":$numBuckets,$bc$SchemaKey${schema.json},$BucketsKey""",
+          ",", "}}")
       atomicPublish(fsFor(spark, path), new Path(path, CommitsDir), v, body)
+    }
+
+    /** Every type nullable, as a parquet read reports it — the form a
+      * manifest records, so a recorded schema equals the footer-merged
+      * one and nullability never counts as a type conflict. */
+    private def nullable(t: DataType): DataType = t match {
+      case st: StructType =>
+        StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+
+    /** The schema a commit records: the base version's schema, then the
+      * written frame's columns it lacks, in the frame's order. Refuses
+      * a same-name type change before the attempt writes anything: the
+      * old buckets' files could not be read with the new type. */
+    private def evolvedSchema(path: String, base: Option[StructType],
+                              written: StructType): StructType = {
+      val next = nullable(written).asInstanceOf[StructType]
+      base.fold(next) { prev =>
+        val byName = prev.fields.map(f => f.name -> f.dataType).toMap
+        next.fields.foreach { f =>
+          byName.get(f.name).foreach(t => require(t == f.dataType,
+            s"VersionedTable: column ${f.name} of $path is ${t.simpleString}; " +
+              s"this commit writes it as ${f.dataType.simpleString} — only additive " +
+              "schema changes are allowed"))
+        }
+        StructType(prev.fields ++ next.fields.filterNot(f => byName.contains(f.name)))
+      }
+    }
+
+    /** The schema `m` records, or — on a manifest written before the
+      * field existed — the footer-merged schema of all its buckets. */
+    private def schemaOf(spark: SparkSession, path: String, m: Manifest): StructType =
+      m.schema.getOrElse(readBuckets(spark, path, m, m.buckets.values.toSeq).schema)
+
+    /** The one read of a version's bucket dirs (`rels`, relative to the
+      * table root): with the schema `m` records, so building the frame
+      * submits no footer-inference job and a bucket written before an
+      * additive change null-fills the newer columns. A manifest without
+      * a recorded schema is read with `mergeSchema`, as before the field
+      * existed.
+      */
+    private[graft] def readBuckets(spark: SparkSession, path: String, m: Manifest,
+                                   rels: Seq[String]): DataFrame = {
+      val dirs = rels.sorted.map(d => new Path(path, d).toString)
+      m.schema match {
+        case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+        case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      }
     }
 
     /** Atomic-exclusive publish of a fully-written manifest body as
@@ -694,20 +804,16 @@ object Sinks {
       * [[latestManifest]] first if absence is expected.
       */
     def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-      val (v, buckets) = version match {
+      val m = version match {
         case Some(want) =>
-          val fs = fsFor(spark, path)
-          val body = manifestBody(fs, new Path(path, CommitsDir), want)
+          val body = manifestBody(fsFor(spark, path), new Path(path, CommitsDir), want)
           require(body.isDefined, s"VersionedTable: no intact manifest $want at $path")
-          (want, parseBuckets(body.get))
+          parseManifest(want, body.get)
         case None =>
-          latestManifest(spark, path).getOrElse(
+          latest(spark, path).getOrElse(
             throw new IllegalStateException(s"VersionedTable: no commits at $path"))
       }
-      val dirs = buckets.values.toSeq.sorted.map(d => new Path(path, d).toString)
-      // mergeSchema: bucket dirs written before an additive schema
-      // change carry the old footer; merge to the union schema
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      readBuckets(spark, path, m, m.buckets.values.toSeq)
     }
 
     /** Transactional latest-wins MERGE: optimistic-concurrency upsert of
@@ -751,8 +857,9 @@ object Sinks {
         if (attempt > maxRetries)
           throw new java.io.IOException(
             s"VersionedTable.mergeUpsert: lost the commit race $maxRetries times at $path")
-        val current = latestManifest(spark, path)
-        val (baseVersion, baseBuckets) = current.getOrElse((-1L, Map.empty[Int, String]))
+        val current = latest(spark, path)
+        val baseVersion = current.fold(-1L)(_.version)
+        val baseBuckets = current.fold(Map.empty[Int, String])(_.buckets)
         // The bucket function must stay stable for the table's lifetime:
         // a merge bucketed differently from the base would leave a key's
         // older versions in dirs the merge never reads (silent
@@ -762,8 +869,8 @@ object Sinks {
         // table. A legacy table (no recorded bucketCols) was by
         // construction bucketed by its merge keys, so a caller passing
         // anything else is refused rather than silently corrupting it.
-        val nb = storedNumBuckets(spark, path).getOrElse(numBuckets)
-        storedBucketKeys(spark, path) match {
+        val nb = current.flatMap(_.numBuckets).getOrElse(numBuckets)
+        current.flatMap(_.bucketCols) match {
           case Some(cols) => require(cols == bk,
             s"VersionedTable.mergeUpsert: $path is bucketed by $cols, caller passed $bk")
           case None if current.isDefined =>
@@ -778,7 +885,7 @@ object Sinks {
             // a bounded sample from one bucket dir proves (or refutes) the
             // keys-bucketing physically.
             baseBuckets.values.headOption.foreach { rel =>
-              val bad = spark.read.parquet(new Path(path, rel).toString)
+              val bad = readBuckets(spark, path, current.get, Seq(rel))
                 .limit(100)
                 .filter(pmod(hash(keys.map(col): _*), lit(nb)) =!= col("bucket"))
                 .limit(1).count()
@@ -796,12 +903,15 @@ object Sinks {
         // metadata, not data (constant-size driver collect).
         val touched = deltaB.select("bucket").distinct()
           .collect().map(_.getInt(0)).sorted
+        val baseSchema = current.map(schemaOf(spark, path, _))
         val baseSlice = {
-          val dirs = touched.flatMap(baseBuckets.get).map(d => new Path(path, d).toString)
-          if (dirs.isEmpty) deltaB.limit(0)
-          else spark.read.option("mergeSchema", "true").parquet(dirs.toIndexedSeq: _*)
+          val dirs = touched.toIndexedSeq.flatMap(baseBuckets.get)
+          if (dirs.nonEmpty) readBuckets(spark, path, current.get, dirs)
+          else baseSchema.fold(deltaB.limit(0))(s =>
+            spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
         }
         val merged = latestWins(baseSlice, deltaB, keys, versionCol)
+        val schema = evolvedSchema(path, baseSchema, merged.schema)
         // stage immutable per-bucket dirs, then move under data/ with
         // version-unique names (one Spark write job for all buckets)
         val stamp = java.util.UUID.randomUUID().toString.take(8)
@@ -831,7 +941,7 @@ object Sinks {
         fs.delete(staging, true)
         beforePublishHook()
         committed = publish(spark, path, next, baseBuckets ++ newDirs, nb,
-          bucketCols = bk)
+          bucketCols = bk, schema)
         if (!committed) {
           // lost the race: drop this attempt's orphan dirs and retry
           // against the winner's snapshot
@@ -861,7 +971,8 @@ object Sinks {
         if (attempt > maxRetries)
           throw new java.io.IOException(
             s"VersionedTable.compact: lost the commit race $maxRetries times at $path")
-        val (baseVersion, buckets) = latestManifest(spark, path).getOrElse(return)
+        val m = latest(spark, path).getOrElse(return)
+        val (baseVersion, buckets) = (m.version, m.buckets)
         val fragmented = buckets.filter { case (_, rel) =>
           fs.listStatus(new Path(path, rel))
             .count(st => st.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
@@ -871,14 +982,14 @@ object Sinks {
         val stamp = java.util.UUID.randomUUID().toString.take(8)
         val newDirs = fragmented.map { case (b, rel) =>
           val out = f"$DataDir/v$next%08d-b$b%04d-$stamp"
-          spark.read.parquet(new Path(path, rel).toString)
+          readBuckets(spark, path, m, Seq(rel))
             .coalesce(1)
             .write.mode(SaveMode.Overwrite).parquet(new Path(path, out).toString)
           b -> out
         }
         done = publish(spark, path, next, buckets ++ newDirs,
-          storedNumBuckets(spark, path).getOrElse(-1),
-          bucketCols = storedBucketKeys(spark, path).getOrElse(Nil))
+          m.numBuckets.getOrElse(-1), bucketCols = m.bucketCols.getOrElse(Nil),
+          schemaOf(spark, path, m))
         if (!done) newDirs.values.foreach(d => fs.delete(new Path(path, d), true))
       }
     }
@@ -915,17 +1026,21 @@ object Sinks {
         if (attempt > maxRetries)
           throw new java.io.IOException(
             s"VersionedTable.replaceAll: lost the commit race $maxRetries times at $path")
-        val (baseVersion, _) = latestManifest(spark, path).getOrElse(
+        val m = latest(spark, path).getOrElse(
           throw new IllegalStateException(s"VersionedTable: no commits at $path"))
-        val nb = storedNumBuckets(spark, path).getOrElse(64)
+        val baseVersion = m.version
+        val nb = m.numBuckets.getOrElse(64)
         // `keys` re-buckets the folded rows, so it must be the table's
         // bucket contract — verified when recorded (a mismatch would
         // strand every row where key probes and merges never look)
-        storedBucketKeys(spark, path).foreach(cols => require(cols == keys,
+        m.bucketCols.foreach(cols => require(cols == keys,
           s"VersionedTable.replaceAll: $path is bucketed by $cols, caller passed $keys"))
         // fold the attempt's pinned snapshot (retry re-reads the winner's)
-        val folded = fold(read(spark, path, Some(baseVersion)).drop("bucket"))
+        val snapshot = readBuckets(spark, path, m, m.buckets.values.toSeq)
+        val folded = fold(snapshot.drop("bucket"))
           .withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nb)))
+        val schema = evolvedSchema(path, Some(m.schema.getOrElse(snapshot.schema)),
+          folded.schema)
         val next = baseVersion + 1
         val stamp = java.util.UUID.randomUUID().toString.take(8)
         val staging = new Path(path, s".staging-$stamp")
@@ -955,7 +1070,7 @@ object Sinks {
         }
         beforePublishHook()
         committed = publish(spark, path, next, nextBuckets, nb,
-          bucketCols = storedBucketKeys(spark, path).getOrElse(keys))
+          bucketCols = m.bucketCols.getOrElse(keys), schema)
         if (!committed) {
           nextBuckets.values.foreach(d => fs.delete(new Path(path, d), true))
         }
@@ -1003,24 +1118,24 @@ object Sinks {
         if (attempt > maxRetries)
           throw new java.io.IOException(
             s"VersionedTable.replaceBuckets: lost the commit race $maxRetries times at $path")
-        val (baseVersion, baseBuckets) = latestManifest(spark, path).getOrElse(
+        val m = latest(spark, path).getOrElse(
           throw new IllegalStateException(s"VersionedTable: no commits at $path"))
+        val (baseVersion, baseBuckets) = (m.version, m.buckets)
         // Touched buckets never written stay unwritten — the fold has
         // nothing to see there. All-absent means the keys were never in
         // the table at all: a pure no-op, not even a version bump.
         val present = want.intersect(baseBuckets.keySet)
         if (present.isEmpty) return
-        val dirs = present.toSeq.sorted.map(b => new Path(path, baseBuckets(b)).toString)
-        val folded = fold(
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*))
+        val folded = fold(readBuckets(spark, path, m, present.toSeq.map(baseBuckets)))
+        val schema = evolvedSchema(path, Some(schemaOf(spark, path, m)), folded.schema)
         // Strong bucket-identity check (possible when the table records
         // its bucket contract): every surviving row's `bucket` must
         // still equal hash(bucketCols) % nb — catching a fold that
         // relocated rows even BETWEEN touched buckets, which the
         // staging-dir check below structurally cannot see. One bounded
         // job over the touched slice; takedowns are rare.
-        storedBucketKeys(spark, path).foreach { cols =>
-          val nbStored = storedNumBuckets(spark, path).getOrElse(-1)
+        m.bucketCols.foreach { cols =>
+          val nbStored = m.numBuckets.getOrElse(-1)
           val moved = folded.filter(
             pmod(hash(cols.map(col): _*), lit(nbStored)) =!= col("bucket"))
             .limit(1).count()
@@ -1073,8 +1188,7 @@ object Sinks {
         }
         beforePublishHook()
         committed = publish(spark, path, next, nextBuckets,
-          storedNumBuckets(spark, path).getOrElse(-1),
-          bucketCols = storedBucketKeys(spark, path).getOrElse(Nil))
+          m.numBuckets.getOrElse(-1), bucketCols = m.bucketCols.getOrElse(Nil), schema)
         if (!committed) {
           (newDirs.values ++ (if (survivors.isEmpty) nextBuckets.values else Nil))
             .foreach(d => fs.delete(new Path(path, d), true))
@@ -1139,22 +1253,24 @@ object Sinks {
       * created before the field existed or an uninitialized path).
       */
     def storedNumBuckets(spark: SparkSession, path: String): Option[Int] =
-      latestIntact(spark, path).flatMap(t => parseNumBuckets(t._2).filter(_ > 0))
+      latest(spark, path).flatMap(_.numBuckets)
 
     /** The bucket-hash column contract recorded by the latest manifest
       * (None for legacy tables, whose implicit contract is the merge
       * keys, and for uninitialized paths).
       */
     def storedBucketKeys(spark: SparkSession, path: String): Option[Seq[String]] =
-      latestIntact(spark, path).flatMap(t => parseBucketCols(t._2)).filter(_.nonEmpty)
+      latest(spark, path).flatMap(_.bucketCols)
 
     /** Point lookup with BUCKET PRUNING: read only the one bucket dir
       * the key hashes into — O(1/numBuckets) of the table, the reason
       * the layout keys buckets by a pure function of the merge key.
       * Falls back to a full-snapshot filtered read for legacy tables
-      * with no recorded numBuckets. Schema note: returns the BUCKET's
-      * schema — a bucket not rewritten since an additive evolution
-      * lacks the newer columns (the full [[read]] merges footers).
+      * with no recorded numBuckets. Schema note: returns the TABLE's
+      * schema as the manifest records it (a bucket not rewritten since
+      * an additive evolution null-fills the newer columns), like
+      * [[read]]; on a manifest without a recorded schema, the bucket's
+      * own footer-merged schema.
       */
     def readForKey(spark: SparkSession, path: String, keys: Seq[String],
                    keyVals: Seq[Any]): DataFrame = {
@@ -1166,9 +1282,8 @@ object Sinks {
       // land in a bucket that never held the row and silently return
       // empty for an existing key. The caller must supply every
       // contract column (verified loudly).
-      val intact = latestIntact(spark, path)
-      val contract = intact.flatMap(t => parseBucketCols(t._2)).filter(_.nonEmpty)
-      val (probeKeys, probeVals) = contract match {
+      val current = latest(spark, path)
+      val (probeKeys, probeVals) = current.flatMap(_.bucketCols) match {
         case None => (keys, keyVals)
         case Some(cols) =>
           require(cols.forall(keys.contains),
@@ -1177,21 +1292,22 @@ object Sinks {
           val byName = keys.zip(keyVals).toMap
           (cols, cols.map(byName))
       }
-      intact.flatMap(t => parseNumBuckets(t._2).filter(_ > 0)) match {
+      current.flatMap(_.numBuckets) match {
         case None => read(spark, path).filter(eq)
         case Some(nb) =>
-          val buckets = parseBuckets(intact.get._2)
+          val m = current.get
+          val buckets = m.buckets
           // hash() is TYPE-sensitive: hash(17: Int) != hash(17L), so a
           // caller passing an Int for a BIGINT key column would probe
           // the wrong bucket and read empty for an existing key. Cast
-          // each literal to the table's own key column type (from one
-          // committed bucket's footer — merge keys exist in every
-          // bucket) so the probe hashes exactly what the writer hashed.
-          val keyTypes: Map[String, org.apache.spark.sql.types.DataType] =
-            buckets.values.headOption.map { rel =>
-              spark.read.parquet(new Path(path, rel).toString)
-                .schema.fields.map(f => f.name -> f.dataType).toMap
-            }.getOrElse(Map.empty)
+          // each literal to the table's own key column type (the
+          // recorded schema; one committed bucket's footer on a manifest
+          // without one — merge keys exist in every bucket) so the probe
+          // hashes exactly what the writer hashed.
+          val keyTypes: Map[String, DataType] =
+            m.schema.orElse(buckets.values.headOption.map(rel =>
+                readBuckets(spark, path, m, Seq(rel)).schema))
+              .fold(Map.empty[String, DataType])(_.fields.map(f => f.name -> f.dataType).toMap)
           val typedLits = probeKeys.zip(probeVals).map { case (k, v) =>
             keyTypes.get(k).map(lit(v).cast).getOrElse(lit(v))
           }
@@ -1200,10 +1316,9 @@ object Sinks {
             .select(pmod(hash(typedLits: _*), lit(nb)).as("b"))
             .head().getInt(0)
           buckets.get(b) match {
-            case None => read(spark, path).filter(eq).limit(0) // bucket never written
-            case Some(rel) =>
-              spark.read.option("mergeSchema", "true")
-                .parquet(new Path(path, rel).toString).filter(eq)
+            case None => // bucket never written
+              readBuckets(spark, path, m, buckets.values.toSeq).filter(eq).limit(0)
+            case Some(rel) => readBuckets(spark, path, m, Seq(rel)).filter(eq)
           }
       }
     }
@@ -1212,7 +1327,7 @@ object Sinks {
       val fs = fsFor(spark, path)
       val p = new Path(new Path(path, CommitsDir), manifestName(v))
       if (!fs.exists(p)) Map.empty
-      else parseBuckets(readUtf8(fs, p))
+      else parseManifest(v, readUtf8(fs, p)).buckets
     }
   }
 

@@ -1173,18 +1173,39 @@ object EventStream {
         "the crawl's id assignment (or retract the old ids first)")
   }
 
+  /** The vector loops' batch counts, all from ONE aggregate over the
+    * quantized batch (vec_id, qv): the rows `arrived`, the vec_id
+    * groups (a null id is one group, as in a group-by) and the rows
+    * the embedding loop's within-batch exact collapse keeps (one per
+    * distinct qv among rows with an id; a null qv is one group). The
+    * funnel files these instead of re-counting the batch after the
+    * effects. */
+  private[graft] final case class BatchCounts(arrived: Long, idGroups: Long, distinctQv: Long)
+
+  private[graft] def batchCounts(q: DataFrame): BatchCounts = {
+    def oneIfAny(c: org.apache.spark.sql.Column) = coalesce(max(when(c, 1L)), lit(0L))
+    val id = col("vec_id")
+    val r = q.agg(count(lit(1)),
+      count_distinct(id) + oneIfAny(id.isNull),
+      count_distinct(when(id.isNotNull, col("qv"))) +
+        oneIfAny(id.isNotNull && col("qv").isNull)).head()
+    BatchCounts(r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** The within-batch id discipline of the vector loops: a duplicated
     * vec_id (same or different content) would cross-multiply through
     * the verdict joins (assign x encode keyed on vec_id -> hybrid code
     * tuples) and append conflicting corpus rows under one id — refuse
-    * loudly (r11 review). */
-  private def refuseDuplicateIds(rows: DataFrame, who: String): Unit = {
-    val dupIds = rows.groupBy("vec_id")
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-    require(dupIds == 0L,
-      s"$who: $dupIds vec_id(s) appear more than once in the batch — ids " +
-        "must be unique per batch; collapse duplicates upstream")
-  }
+    * loudly (r11 review). Fewer id groups than rows means a duplicate;
+    * only then is the batch grouped again, to name how many ids repeat. */
+  private def refuseDuplicateIds(rows: DataFrame, counts: BatchCounts, who: String): Unit =
+    if (counts.idGroups != counts.arrived) {
+      val dupIds = rows.groupBy("vec_id")
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
+      require(dupIds == 0L,
+        s"$who: $dupIds vec_id(s) appear more than once in the batch — ids " +
+          "must be unique per batch; collapse duplicates upstream")
+    }
 
   /** The LIVE crawl-admission pipeline — [[graft.pipeline
     * .CurationPipeline]]'s continuous twin, serving the artifacts the
@@ -1646,7 +1667,8 @@ object EventStream {
     admitBatch(batch, batchId, EmbeddingLoop, indexPath, outPath,
         compactEvery, funnelLogPath, pipelinePath) { (servedGroup, _) =>
       val q = graft.operators.Embeddings.quantized(batch)
-      refuseDuplicateIds(q, who)
+      val counts = batchCounts(q)
+      refuseDuplicateIds(q, counts, who)
       // within-batch exact collapse (the media loop's rule): identical
       // quantized vectors keep the smallest vec_id; within-batch NEAR
       // dups below the exact bar are admitted together by design —
@@ -1669,8 +1691,8 @@ object EventStream {
           AnnIndex.codes(batch.sparkSession, indexPath).select("vec_id"), who),
         extend = AnnIndex.extend(_, indexPath, buildV = 2L * (batchId + 1)),
         funnel = n => Seq(
-          "1_arrived" -> batch.count(),
-          "2_batch_distinct" -> kept.count(),
+          "1_arrived" -> counts.arrived,
+          "2_batch_distinct" -> counts.distinctQv,
           "3_admitted" -> n))
     } { maintainAnn(batch.sparkSession, indexPath, batchId, rebalanceLoadPct) }
   }
@@ -1738,7 +1760,8 @@ object EventStream {
     val who = s"semDedupAdmitBatch(batch $batchId)"
     admitBatch(batch, batchId, SemanticLoop, indexPath, outPath,
         compactEvery, funnelLogPath, pipelinePath) { (servedGroup, _) =>
-      refuseDuplicateIds(batch, who)
+      val counts = batchCounts(graft.operators.Embeddings.quantized(batch))
+      refuseDuplicateIds(batch, counts, who)
       // ONE verdict: the gate's own committed-wins + keep-first rules —
       // an id re-crawl self-pairs at cos 1.0 and drops, so no separate
       // exact-collapse stage is needed here
@@ -1749,7 +1772,7 @@ object EventStream {
         guard = refuseIdReuse(_, "vec_id",
           AnnIndex.codes(batch.sparkSession, indexPath).select("vec_id"), who),
         extend = AnnIndex.extend(_, indexPath, buildV = 2L * (batchId + 1)),
-        funnel = n => Seq("1_arrived" -> batch.count(), "2_admitted" -> n))
+        funnel = n => Seq("1_arrived" -> counts.arrived, "2_admitted" -> n))
     } { maintainAnn(batch.sparkSession, indexPath, batchId, rebalanceLoadPct) }
   }
 

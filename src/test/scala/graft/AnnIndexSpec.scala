@@ -82,6 +82,26 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"codebooks table must stay (1+PqM)*NumCentroids rows, got $cbRows")
   }
 
+  test("build over a shard missing k-means init ids refuses before committing anything") {
+    // ids 8..71 hold only half of the init ids 0..15: training on them
+    // would commit a codebook with c_ids 8..15 that no load accepts
+    val shard = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") >= 8L && col("vec_id") < 72L)
+    val path = s"$tmp/ix_shard"
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.build(shard, path, storeVectors = true)
+    }
+    assert(err.getMessage.contains("missing vec_ids 0, 1, 2, 3, 4, 5, 6, 7"),
+      err.getMessage)
+    def commitDirs(f: java.io.File): Seq[java.io.File] =
+      if (!f.isDirectory) Nil
+      else if (f.getName.endsWith("_commits")) Seq(f)
+      else f.listFiles.toSeq.flatMap(commitDirs)
+    assert(commitDirs(new java.io.File(path)).isEmpty,
+      s"a refused build must leave no commit under $path")
+    GraftCache.releaseAll(spark)
+  }
+
   test("takedown: retracted vectors stop serving (plain + hard negatives), bucket-pruned, parity with full rewrite (r10)") {
     val emb = Tables.embeddings(spark, sf)
     val path = s"$tmp/ix_rt"

@@ -432,6 +432,51 @@ class SinksSpec extends AnyFunSuite with BeforeAndAfterAll
       .map(r => (r.getLong(0), r.getString(1), if (r.isNullAt(2)) null else r.getString(2)))
       .sortBy(_._1)
     assert(evolved.toSeq == Seq((1L, "a", null), (2L, "b3", "it"), (3L, "c", "de")))
+    // a merge without `lang` touching only a pre-evolution bucket keeps
+    // `lang` in the table: the manifest's schema is the union
+    val preEvolution = after.filter(_._2.startsWith("data/v00000000-")).keySet
+    assert(preEvolution.nonEmpty, s"no bucket left from version 0: $after")
+    val key = spark.range(100L, 1000L)
+      .filter(pmod(hash(col("id")), lit(4)).isin(preEvolution.toSeq: _*))
+      .head().longValue
+    Sinks.VersionedTable.mergeUpsert(spark, path,
+      Seq((key, "k", 4L)).toDF("id", "v", "ver"), Seq("id"), "ver", numBuckets = 4)
+    val merged = Sinks.VersionedTable.read(spark, path)
+    assert(merged.columns.contains("lang"), merged.columns.toSeq)
+    assert(merged.filter(col("id") === key).select("lang").head().isNullAt(0))
+    // the recorded schema is the one footer inference over the same dirs gives
+    val dirs = Sinks.VersionedTable.latestManifest(spark, path).get._2.values.toSeq.sorted
+      .map(d => s"$path/$d")
+    assert(merged.schema ==
+      spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema)
+    // a manifest without the schema field (written before it existed)
+    // reads the same rows and schema through footer inference
+    def contents(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val withSchema = contents(merged)
+    val mf = new java.io.File(s"$path/_commits").listFiles()
+      .filter(_.getName.endsWith(".json")).maxBy(_.getName)
+    val body = java.nio.file.Files.readString(mf.toPath)
+    val legacyBody = body.replaceAll("\"schema\":\\{.*\\},\"buckets\"", "\"buckets\"")
+    assert(legacyBody != body && !legacyBody.contains("\"schema\""))
+    java.nio.file.Files.writeString(mf.toPath, legacyBody)
+    val legacy = Sinks.VersionedTable.read(spark, path)
+    assert(legacy.schema == merged.schema)
+    assert(contents(legacy) == withSchema)
+  }
+
+  test("VersionedTable.read of a committed table builds its frame without a Spark job") {
+    val s = spark
+    import s.implicits._
+    val path = s"$tmp/vt_read_jobs"
+    Sinks.VersionedTable.mergeUpsert(spark, path,
+      Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ver"),
+      Seq("id"), "ver", numBuckets = 4)
+    val (df, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+      Sinks.VersionedTable.read(spark, path)
+    }
+    assert(jobs == 0, s"building the read submitted $jobs job(s)")
+    assert(df.count() == 3L)
   }
 
   test("VersionedTable: vacuum reclaims crash orphans (unreferenced data dirs + staging)") {

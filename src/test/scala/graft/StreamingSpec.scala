@@ -2584,6 +2584,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     graft.GraftCache.releaseAll(spark)
   }
 
+  test("vector loops' batch counts: one aggregate gives the group-by and collapse counts, null keys included") {
+    import spark.implicits._
+    val (e1, e2) = (Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))
+    def id(v: Long): java.lang.Long = v
+    val batches: Seq[Seq[(java.lang.Long, Seq[Float])]] = Seq(
+      Seq((id(1), e1), (id(2), e1), (id(3), e2)),
+      Seq((id(1), e1), (null, e1), (id(2), e2)),
+      Seq((null, e1), (id(1), e2)),
+      Seq((id(1), null), (id(2), null), (id(3), e1)),
+      Seq((null, e1), (null, e2), (id(1), e1)),
+      Seq((id(1), e1), (id(1), e1), (id(2), e2)))
+    batches.foreach { rows =>
+      val q = graft.operators.Embeddings.quantized(rows.toDF("vec_id", "embedding"))
+      val c = EventStream.batchCounts(q)
+      val idGroups = q.groupBy("vec_id").count().count()
+      assert((c.arrived, c.idGroups) == ((q.count(), idGroups)), s"$rows: $c")
+      // the collapse count is filed only for a batch with unique ids
+      if (idGroups == c.arrived) {
+        val keepers = q.groupBy("qv").agg(min("vec_id").as("vec_id"))
+        assert(c.distinctQv == q.join(keepers, Seq("vec_id"), "left_semi").count(),
+          s"$rows: $c")
+      }
+    }
+    graft.GraftCache.releaseAll(spark)
+  }
+
   test("embedding admission with in-loop rebalance: memory survives the re-encode, codebooks version, guards fire (r11)") {
     import spark.implicits._
     import graft.operators.AnnIndex

@@ -205,7 +205,15 @@ object AnnIndex {
     * with [[DedupIndex]]'s extend); takedown-sensitive id reuse is the
     * admission loop's guard, not the artifact's.
     */
-  def extend(newEmbeddings: DataFrame, path: String, buildV: Long): Unit = {
+  def extend(newEmbeddings: DataFrame, path: String, buildV: Long): Unit =
+    extendWith(newEmbeddings, path, buildV, None)
+
+  /** [[extend]], encoding with `loaded` — (version, codebooks) an
+    * earlier read of the same batch collected — when that is the
+    * codebooks version this extend resolves; otherwise it collects its
+    * own. */
+  private[graft] def extendWith(newEmbeddings: DataFrame, path: String, buildV: Long,
+                                loaded: Option[(Long, Loaded)]): Unit = {
     val spark = newEmbeddings.sparkSession
     val q = Embeddings.quantized(newEmbeddings)
     healSnapshot(spark, path)
@@ -218,7 +226,8 @@ object AnnIndex {
     // an extend landing after the crash.
     val usedCbV = graft.sources.Sinks.ArtifactSnapshot
       .resolvedVersion(spark, path, "codebooks")
-    val ix = loadWith(spark, path, usedCbV.map("codebooks" -> _).toMap)
+    val ix = loaded.collect { case (v, l) if usedCbV.contains(v) => l }
+      .getOrElse(loadWith(spark, path, usedCbV.map("codebooks" -> _).toMap))
     // an IndexRefine-split index keeps its vectors COMPLETE, and they
     // commit FIRST (the build ordering rule): a crash leaving codes
     // without exact twins would make those candidates silently drop
@@ -597,9 +606,11 @@ object AnnIndex {
     */
   private[graft] def matchedIds(probes: DataFrame, path: String,
                                 tau: Double,
-                                exactRescore: Boolean = false): DataFrame =
-    matchedIdsWith(probes, path, tau, exactRescore,
-      snapPins(probes.sparkSession, path))
+                                exactRescore: Boolean = false): DataFrame = {
+    val pins = snapPins(probes.sparkSession, path)
+    matchedIdsWith(probes, path, tau, exactRescore, pins,
+      loadWith(probes.sparkSession, path, pins))
+  }
 
   /** [[matchedIds]] resolved through a NAMED root snapshot — the audit
     * replay read (r12, the DedupIndex.serveAt twin): feed a pipeline
@@ -609,7 +620,15 @@ object AnnIndex {
     */
   def matchedIdsAt(probes: DataFrame, path: String, tau: Double,
                    groupVersion: Long,
-                   exactRescore: Boolean = false): DataFrame = {
+                   exactRescore: Boolean = false): DataFrame =
+    matchedIdsAtLoaded(probes, path, tau, groupVersion, exactRescore)._1
+
+  /** [[matchedIdsAt]], also handing back the codebooks it encodes with
+    * and their version (when the group pins one), so the same batch's
+    * [[extendWith]] can reuse that collect. */
+  private[graft] def matchedIdsAtLoaded(probes: DataFrame, path: String, tau: Double,
+                                        groupVersion: Long, exactRescore: Boolean)
+      : (DataFrame, Option[(Long, Loaded)]) = {
     val spark = probes.sparkSession
     val pins = graft.sources.Sinks.VersionedTable.groupAt(spark, path,
       groupVersion).getOrElse(throw new IllegalArgumentException(
@@ -625,14 +644,16 @@ object AnnIndex {
           s"manifest no longer exists at $path/$sub — the snapshot outlived " +
           "the protectGroups retention window; re-pin to a recent group")
     }
-    matchedIdsWith(probes, path, tau, exactRescore, pins)
+    val ix = loadWith(spark, path, pins)
+    (matchedIdsWith(probes, path, tau, exactRescore, pins, ix),
+      pins.get("codebooks").map(_ -> ix))
   }
 
+  /** `ix`: the codebooks `pins` resolves. */
   private def matchedIdsWith(probes: DataFrame, path: String,
                              tau: Double, exactRescore: Boolean,
-                             pins: Map[String, Long]): DataFrame = {
+                             pins: Map[String, Long], ix: Loaded): DataFrame = {
     val spark = probes.sparkSession
-    val ix = loadWith(spark, path, pins)
     val arrCodes = Embeddings.ivfPqCodesRows(probes, ix.coarse, ix.pq)
     val codeCols = Seq("c_id") ++ (0 until PqM).map(m => s"code_$m")
     val collided = arrCodes
@@ -765,40 +786,18 @@ object AnnIndex {
     // closing snapshot would pin post-retract codes against the stale
     // pinned codebooks (see healSnapshot)
     healSnapshot(spark, path)
-    val ids = vecIds.toSet
-    import spark.implicits._
-    val idDf = vecIds.toDF("vec_id") // LongType, matching the writer's key
-    val hit = col("vec_id").isInCollection(ids)
-    // prune only under a verified bucket contract; a legacy table (no
-    // recorded contract — same vec_id bucketing, but unprovable from
-    // the manifest) takes the full-snapshot rewrite: slower, never wrong
-    def retractSub(sub: String, name: String): TakedownReceipt = {
-      val m = VersionedTable.latest(spark, sub)
-      if (m.flatMap(_.bucketCols).contains(Seq("vec_id"))) {
-        val nb = m.flatMap(_.numBuckets).getOrElse(16)
-        val touched = idDf
-          .select(pmod(hash(col("vec_id")), lit(nb)).as("bk"))
-          .distinct().collect().map(_.getInt(0)).toIndexedSeq
-        Takedown.receipted(spark, path, sub, name, ids.size,
-          hit, Some(touched)) {
-          VersionedTable.replaceBuckets(spark, sub, Seq("vec_id"), touched) {
-            slice => slice.filter(!col("vec_id").isInCollection(ids))
-          }
-        }
-      } else
-        Takedown.receipted(spark, path, sub, name, ids.size,
-          hit, None) {
-          VersionedTable.replaceAll(spark, sub, Seq("vec_id")) {
-            snap => snap.filter(!col("vec_id").isInCollection(ids))
-          }
-        }
-    }
     // the EXACT vectors sub-table is CONTENT in the strongest sense — a
     // takedown that dropped only the lossy codes but kept raw vectors
     // would not be a takedown at all (r11, the IndexRefine split)
     val subs = Seq(codesPath(path) -> "codes") ++
       (if (hasVectors(spark, path)) Seq(vectorsPath(path) -> "vectors") else Nil)
-    val receipts = subs.map { case (sub, name) => retractSub(sub, name) }
+    // prune only under a verified bucket contract; a legacy table (no
+    // recorded contract — same vec_id bucketing, but unprovable from
+    // the manifest) takes the full-snapshot rewrite: slower, never wrong
+    val receipts = subs.map { case (sub, name) =>
+      Takedown.retractIds(spark, path, sub, name, "vec_id", vecIds,
+        Seq("vec_id"), vecIds.map(Seq(_)), Seq("vec_id"))
+    }
     // the retract must be VISIBLE at the next snapshot — refresh the
     // pins for exactly the sub-tables the takedown rewrote
     commitSnapshot(spark, path, refresh = Seq("codes", "vectors"))
@@ -826,7 +825,7 @@ object AnnIndex {
     * artifact instead of the training run.
     */
   private[graft] def adcColsFor(ix: Loaded) = {
-    val cnrmArr = (0 until PqM).map(m => typedLit(ix.cnrm(m)))
+    val cnrmArr = (0 until PqM).map(m => Exprs.litLongArray(ix.cnrm(m)))
     val adot = (0 until PqM).map { m =>
       element_at(col(s"adc_$m"), col(s"code_$m").cast("int") + 1)
     }.reduce(_ + _)

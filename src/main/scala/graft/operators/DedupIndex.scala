@@ -164,8 +164,8 @@ object DedupIndex {
     * [[VersionedTable.replaceBuckets]]: each sub-table's bucket id is a
     * pure function of keys the takedown list determines — doc_id for
     * fps/sigs/rsh, (doc_id, b) with b < [[Dedup.NumBands]] for bands —
-    * so the touched-bucket set is computed FROM the id list (a bounded
-    * one-row-per-id plan, hashed exactly as the writer hashed) and a
+    * so the touched-bucket set is computed FROM the id list (hashed on
+    * the driver exactly as the writer hashed, no job) and a
     * 10-doc takedown on a multi-TB index rewrites a handful of bucket
     * dirs, never the table. Still ATOMIC per sub-table (readers see the
     * old or the new version, never a half-retracted table), race-safe
@@ -183,50 +183,26 @@ object DedupIndex {
   def retract(spark: SparkSession, path: String,
               docIds: Seq[Long]): Seq[TakedownReceipt] = {
     require(docIds.nonEmpty, "DedupIndex.retract: empty takedown list")
-    val ids = docIds.toSet
-    import spark.implicits._
-    // LongType column, matching the writers' doc_id type — hash() is
-    // type-sensitive, so an Int-typed probe would compute wrong buckets
-    val idDf = docIds.toDF("doc_id")
+    val idKeys = docIds.map(Seq(_))
     // bands buckets hash (doc_id, b): b is bounded by NumBands, so the
     // touched set enumerates ids × bands — still takedown-request-sized
-    val bandKeyDf = idDf.crossJoin(
-      spark.range(Dedup.NumBands).select(col("id").cast("int").as("b")))
-    def touched(sub: String, keyFrame: DataFrame, bucketKeys: Seq[String]): Seq[Int] = {
-      val nb = VersionedTable.storedNumBuckets(spark, sub).getOrElse(16)
-      keyFrame.select(pmod(hash(bucketKeys.map(col): _*), lit(nb)).as("bk"))
-        .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    }
-    // (path, prunable bucket cols, their probe frame, legacy merge keys)
-    val sub: Seq[(String, Seq[String], DataFrame, Seq[String])] = Seq(
-      (fpsPath(path), Seq("doc_id"), idDf, Seq("doc_id")),
-      (sigsPath(path), Seq("doc_id"), idDf, Seq("doc_id")),
-      (bandsPath(path), Seq("doc_id", "b"), bandKeyDf, Seq("doc_id", "b"))) ++
-      Some((rshPath(path), Seq("doc_id"), idDf, Seq("doc_id", "h")))
+    val bandKeys = for (id <- docIds; b <- 0 until Dedup.NumBands) yield Seq(id, b)
+    // (path, prunable bucket cols, their key tuples, legacy merge keys)
+    val sub: Seq[(String, Seq[String], Seq[Seq[Any]], Seq[String])] = Seq(
+      (fpsPath(path), Seq("doc_id"), idKeys, Seq("doc_id")),
+      (sigsPath(path), Seq("doc_id"), idKeys, Seq("doc_id")),
+      (bandsPath(path), Seq("doc_id", "b"), bandKeys, Seq("doc_id", "b"))) ++
+      Some((rshPath(path), Seq("doc_id"), idKeys, Seq("doc_id", "h")))
         .filter(t => VersionedTable.latestManifest(spark, t._1).isDefined)
-    val receipts = sub.map { case (p, bucketKeys, keyFrame, legacyKeys) =>
-      // Prune ONLY when the table's recorded bucket contract says these
-      // buckets are where the ids live. An rsh table committed before
-      // the contract existed was bucketed by (doc_id, h) — pruning by
-      // doc_id there would miss rows and report a takedown done that
-      // wasn't (the silent compliance failure). Legacy tables take the
-      // full-snapshot rewrite: slower, never wrong.
-      val subName = p.substring(p.lastIndexOf('/') + 1)
-      if (VersionedTable.storedBucketKeys(spark, p).contains(bucketKeys)) {
-        val t = touched(p, keyFrame, bucketKeys)
-        Takedown.receipted(spark, path, p, subName, ids.size,
-          col("doc_id").isInCollection(ids), Some(t)) {
-          VersionedTable.replaceBuckets(spark, p, bucketKeys, t) { slice =>
-            slice.filter(!col("doc_id").isInCollection(ids))
-          }
-        }
-      } else
-        Takedown.receipted(spark, path, p, subName, ids.size,
-          col("doc_id").isInCollection(ids), None) {
-          VersionedTable.replaceAll(spark, p, legacyKeys) { snap =>
-            snap.filter(!col("doc_id").isInCollection(ids))
-          }
-        }
+    // Prune ONLY when the table's recorded bucket contract says these
+    // buckets are where the ids live. An rsh table committed before the
+    // contract existed was bucketed by (doc_id, h) — pruning by doc_id
+    // there would miss rows and report a takedown done that wasn't (the
+    // silent compliance failure); Takedown.retractIds rewrites such a
+    // table whole instead.
+    val receipts = sub.map { case (p, bucketCols, keys, legacyKeys) =>
+      Takedown.retractIds(spark, path, p, p.substring(p.lastIndexOf('/') + 1),
+        "doc_id", docIds, bucketCols, keys, legacyKeys)
     }
     // the retract must be VISIBLE at the next snapshot-resolved serve —
     // refresh exactly the sub-tables the takedown rewrote

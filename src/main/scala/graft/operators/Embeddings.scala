@@ -1692,7 +1692,7 @@ object Embeddings {
       require(rows.map(_._1).toSeq == (0 until NumCentroids).map(_.toLong),
         "annPq: codebook c_ids must be contiguous 0..NumCentroids-1 for array indexing")
     }
-    val cnrmArr = cbRows.map(rows => typedLit(rows.map(_._3).toSeq))
+    val cnrmArr = cbRows.map(rows => Exprs.litLongArray(rows.map(_._3).toSeq))
     // per-probe ADC lookup tables (see adcTable): candidates pay 4 array
     // lookups per pair instead of 4 sliced subspace dots; the probe
     // sheds q_qv once the tables are built (same broadcast bytes)
@@ -1983,7 +1983,7 @@ object Embeddings {
       require(rows.map(_._1).toSeq == (0 until NumCentroids).map(_.toLong),
         "annIvfPq: codebook c_ids must be contiguous 0..NumCentroids-1 for array indexing")
     }
-    val cnrmArr = cbRows.map(rows => typedLit(rows.map(_._3).toSeq))
+    val cnrmArr = cbRows.map(rows => Exprs.litLongArray(rows.map(_._3).toSeq))
     // Coarse assignment and the PqM codes are ALL literal-codebook
     // map-side projections over the same row (r14): the old
     // assign ⋈ codes vec_id join — a corpus-sized exchange on the

@@ -77,21 +77,11 @@ object EvalRegistry {
     */
   def unregister(spark: SparkSession, path: String,
                  suite: String): TakedownReceipt = {
-    import graft.sources.Sinks.VersionedTable
     val p = regPath(path)
-    val nb = VersionedTable.storedNumBuckets(spark, p).getOrElse(16)
-    val touched = spark.range(1)
-      .select(pmod(hash(lit(suite)), lit(nb)).as("bk"))
-      .head().getInt(0)
     // idsRequested = 1 named suite; idsFound counts the suite's
     // fingerprint rows actually present (0 = retiring a never-registered
     // suite, the idempotent re-run)
-    Takedown.receipted(spark, path, p, "eval_shingles", 1L,
-      col("suite") === suite, Some(Seq(touched))) {
-      VersionedTable.replaceBuckets(spark, p, Seq("suite"), Seq(touched)) {
-        slice => slice.filter(col("suite") =!= suite)
-      }
-    }
+    Takedown.retractSuite(spark, path, p, "eval_shingles", suite)
   }
 
   def load(spark: SparkSession, path: String): DataFrame =

@@ -230,9 +230,6 @@ object MediaIndex {
   def retract(spark: SparkSession, path: String,
               docIds: Seq[Long]): Seq[TakedownReceipt] = {
     require(docIds.nonEmpty, "MediaIndex.retract: empty takedown list")
-    val ids = docIds.toSet
-    import spark.implicits._
-    val idDf = docIds.toDF("doc_id")
     val present = subTables(path)
       .filter(sub => VersionedTable.latestManifest(spark, sub).isDefined)
     // fail LOUDLY on a path with no index at all — a typo'd takedown
@@ -240,25 +237,11 @@ object MediaIndex {
     // outcome a compliance op must never have
     require(present.nonEmpty,
       s"MediaIndex.retract: no committed img/vid/aud sub-table at $path")
-    val hit = col("doc_id").isInCollection(ids)
+    // bucket-pruned under the doc_id contract; a legacy table without a
+    // recorded contract is rewritten whole: slower, never wrong
     val receipts = present.map { sub =>
-      val subName = sub.substring(sub.lastIndexOf('/') + 1)
-      if (VersionedTable.storedBucketKeys(spark, sub).contains(Seq("doc_id"))) {
-        val nb = VersionedTable.storedNumBuckets(spark, sub).getOrElse(16)
-        val touched = idDf
-          .select(pmod(hash(col("doc_id")), lit(nb)).as("bk"))
-          .distinct().collect().map(_.getInt(0)).toIndexedSeq
-        Takedown.receipted(spark, path, sub, subName, ids.size, hit, Some(touched)) {
-          VersionedTable.replaceBuckets(spark, sub, Seq("doc_id"), touched) { slice =>
-            slice.filter(!col("doc_id").isInCollection(ids))
-          }
-        }
-      } else // legacy table without a recorded contract: slower, never wrong
-        Takedown.receipted(spark, path, sub, subName, ids.size, hit, None) {
-          VersionedTable.replaceAll(spark, sub, Seq("doc_id")) { snap =>
-            snap.filter(!col("doc_id").isInCollection(ids))
-          }
-        }
+      Takedown.retractIds(spark, path, sub, sub.substring(sub.lastIndexOf('/') + 1),
+        "doc_id", docIds, Seq("doc_id"), docIds.map(Seq(_)), Seq("doc_id"))
     }
     // ONE snapshot refreshing exactly the rewritten sub-tables, as the
     // takedown's last step (the DedupIndex.retract discipline): pinned

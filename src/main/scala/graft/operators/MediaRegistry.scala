@@ -81,17 +81,8 @@ object MediaRegistry {
   def unregister(spark: SparkSession, path: String, modality: String,
                  suite: String): TakedownReceipt = {
     val p = tablePath(path, modality)
-    val nb = VersionedTable.storedNumBuckets(spark, p).getOrElse(16)
-    val touched = spark.range(1)
-      .select(pmod(hash(lit(suite)), lit(nb)).as("bk"))
-      .head().getInt(0)
-    Takedown.receipted(spark, path, p,
-      s"banned_${MediaIndex.mode(modality).name}", 1L,
-      col("suite") === suite, Some(Seq(touched))) {
-      VersionedTable.replaceBuckets(spark, p, Seq("suite"), Seq(touched)) {
-        slice => slice.filter(col("suite") =!= suite)
-      }
-    }
+    Takedown.retractSuite(spark, path, p,
+      s"banned_${MediaIndex.mode(modality).name}", suite)
   }
 
   /** [[retroTakedown]]'s report — the [[Corpus.RetroReport]] shape:

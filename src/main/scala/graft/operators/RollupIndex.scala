@@ -250,25 +250,25 @@ object RollupIndex {
     */
   def foldPartialsReceipted(spark: SparkSession, path: String,
                             shape: RollupShape = LineitemShape): TakedownReceipt =
-    Takedown.receipted(spark, path, statePath(path), "state",
-      idsRequested = 0L,
-      hit = col("row_kind") === RowPartial && col("delta_id") =!= FoldedId,
-      touched = None) {
-      foldPartials(spark, path, shape)
-    }
+    Takedown.receipted(path, "state", idsRequested = 0L, pruned = false)(
+      VersionedTable.rewriteAll(spark, statePath(path), shape.keys ++ Seq("delta_id", "row_kind"),
+        hit = Some(col("row_kind") === RowPartial && col("delta_id") =!= FoldedId))(
+        partialsFold(shape)))
 
   def foldPartials(spark: SparkSession, path: String,
                    shape: RollupShape = LineitemShape): Unit =
     VersionedTable.replaceAll(spark, statePath(path),
-      shape.keys ++ Seq("delta_id", "row_kind")) { snap =>
-      val folded = combinePartials(snap.filter(col("row_kind") === RowPartial), shape)
-        .withColumn("delta_id", lit(FoldedId))
-        .withColumn("row_kind", lit(RowPartial))
-      folded.select(stateCols(shape).map(col): _*)
-        .unionByName(snap.filter(col("row_kind") === RowLedger)
-          .select(stateCols(shape).map(col): _*))
-        .withColumn("build_v", lit(0L))
-    }
+      shape.keys ++ Seq("delta_id", "row_kind"))(partialsFold(shape))
+
+  private def partialsFold(shape: RollupShape)(snap: DataFrame): DataFrame = {
+    val folded = combinePartials(snap.filter(col("row_kind") === RowPartial), shape)
+      .withColumn("delta_id", lit(FoldedId))
+      .withColumn("row_kind", lit(RowPartial))
+    folded.select(stateCols(shape).map(col): _*)
+      .unionByName(snap.filter(col("row_kind") === RowLedger)
+        .select(stateCols(shape).map(col): _*))
+      .withColumn("build_v", lit(0L))
+  }
 
   // ------------------------------------------------------ oracle query
 

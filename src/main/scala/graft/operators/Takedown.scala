@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.DataType
 
 import graft.sources.Sinks.VersionedTable
 
@@ -14,16 +15,18 @@ import graft.sources.Sinks.VersionedTable
   * manifests bracketing the rewrite, so the receipt reports what
   * HAPPENED, not what the caller intended:
   *
-  *  - `idsFound` counts matching rows in the PRE-op snapshot — read from
-  *    the touched buckets only on the pruned branch (an id can live
-  *    nowhere else under a verified bucket contract), the full snapshot
-  *    on the legacy branch (which rewrites everything anyway). A
-  *    requested id that was never indexed shows up here as found = 0,
-  *    the "nothing to take down" evidence.
+  *  - `idsFound` counts the matching rows in the snapshot the committed
+  *    rewrite folded — the touched buckets only on the pruned branch (an
+  *    id can live nowhere else under a verified bucket contract), the
+  *    full snapshot on the legacy branch (which rewrites everything
+  *    anyway). A requested id that was never indexed shows up here as
+  *    found = 0, the "nothing to take down" evidence.
   *  - `bucketsRewritten` is the MANIFEST DELTA — buckets whose data dir
   *    changed (or disappeared) between the bracketing versions — not the
   *    touched-set size the caller computed.
-  *  - `oldVersion == newVersion` records the true no-op (ids hashed only
+  *  - `oldVersion` is the base the committed attempt folded (after an
+  *    optimistic retry, the winner's base, not the first one read);
+  *    `oldVersion == newVersion` records the true no-op (ids hashed only
   *    to never-written buckets: not even a version bump).
   *  - `pruned` distinguishes the bucket-pruned fast path from the
   *    legacy full-snapshot rewrite ("slower, never wrong").
@@ -281,32 +284,67 @@ object TakedownLog {
 
 private[operators] object Takedown {
 
-  /** Bracket one sub-table rewrite `op` with manifest reads and a
-    * pre-op hit count; returns the receipt. `touched` = Some(buckets)
-    * on the pruned branch (the hit count reads only those), None on the
-    * legacy full-rewrite branch. `hit` is the row predicate the rewrite
-    * removes (the receipt counts what the fold is about to drop).
+  /** The receipt of one sub-table rewrite, every field from the attempt
+    * that committed it ([[VersionedTable.Rewrite]]): `idsFound` is the
+    * rewrite's own count of the rows its `hit` predicate matched in the
+    * snapshot it folded — taken inside its write, so no query of its
+    * own, and an optimistic retry that also drops a row a concurrent
+    * writer just added counts that row — and `oldVersion` is the base
+    * that attempt folded, `newVersion` the version it published.
+    * `pruned`: the bucket-pruned rewrite, not the legacy full one.
     */
-  def receipted(spark: SparkSession, artifact: String, sub: String,
-                subTable: String, idsRequested: Long, hit: Column,
-                touched: Option[Seq[Int]])(op: => Unit): TakedownReceipt = {
-    val old = VersionedTable.latest(spark, sub).getOrElse(
-      throw new IllegalStateException(s"Takedown receipt: no commits at $sub"))
-    val (oldV, oldMap) = (old.version, old.buckets)
-    val dirs = (touched match {
-      case Some(t) => t.toSet.intersect(oldMap.keySet).toSeq
-      case None => oldMap.keySet.toSeq
-    }).map(oldMap)
-    val found =
-      if (dirs.isEmpty) 0L
-      else VersionedTable.readBuckets(spark, sub, old, dirs).filter(hit).count()
-    op
-    val (newV, newMap) = VersionedTable.latestManifest(spark, sub).getOrElse(
-      throw new IllegalStateException(s"Takedown receipt: $sub lost its manifest"))
+  def receipted(artifact: String, subTable: String, idsRequested: Long,
+                pruned: Boolean)(rw: VersionedTable.Rewrite): TakedownReceipt = {
+    val (oldMap, newMap) = (rw.base.buckets, rw.buckets)
     val rewritten =
       newMap.count { case (b, rel) => !oldMap.get(b).contains(rel) } +
         (oldMap.keySet -- newMap.keySet).size
-    TakedownReceipt(artifact, subTable, idsRequested, found, rewritten,
-      oldV, newV, pruned = touched.isDefined)
+    TakedownReceipt(artifact, subTable, idsRequested, rw.found, rewritten,
+      rw.base.version, rw.version, pruned)
+  }
+
+  /** Remove the rows whose `idCol` is in `ids` from sub-table `sub` and
+    * return the receipt. Bucket-pruned ONLY when the table's recorded
+    * bucket contract is `bucketCols` — then the touched buckets are
+    * `bucketKeys` (one value per contract column) hashed on the driver
+    * ([[VersionedTable.bucketsOf]]), since a row can live nowhere else.
+    * A table without that contract (written before it was recorded)
+    * takes the full-snapshot rewrite keyed by `legacyKeys`: slower,
+    * never wrong — pruning there could miss rows and report a
+    * takedown done that wasn't.
+    */
+  def retractIds(spark: SparkSession, artifact: String, sub: String, subTable: String,
+                 idCol: String, ids: Seq[Long], bucketCols: Seq[String],
+                 bucketKeys: Seq[Seq[Any]], legacyKeys: Seq[String]): TakedownReceipt = {
+    val hit = org.apache.spark.sql.functions.col(idCol).isInCollection(ids.toSet)
+    val requested = ids.distinct.size.toLong
+    VersionedTable.latest(spark, sub).filter(_.bucketCols.contains(bucketCols)) match {
+      case Some(m) =>
+        val touched = VersionedTable.bucketsOf(m.numBuckets.getOrElse(16),
+          m.typesOf(bucketCols), bucketKeys).distinct
+        receipted(artifact, subTable, requested, pruned = true)(
+          VersionedTable.rewriteBuckets(spark, sub, bucketCols, touched, Some(hit))(
+            _.filter(!hit)))
+      case None =>
+        receipted(artifact, subTable, requested, pruned = false)(
+          VersionedTable.rewriteAll(spark, sub, legacyKeys, Some(hit))(_.filter(!hit)))
+    }
+  }
+
+  /** Retire one named `suite` from a registry table bucketed by suite
+    * alone ([[EvalRegistry.unregister]], [[MediaRegistry.unregister]]):
+    * a whole suite lives in one bucket, so the rewrite touches that one
+    * bucket dir. idsRequested = 1 named suite; idsFound = the suite's
+    * rows present (0 = a never-registered suite, the idempotent
+    * re-run). */
+  def retractSuite(spark: SparkSession, artifact: String, sub: String, subTable: String,
+                   suite: String): TakedownReceipt = {
+    val hit = org.apache.spark.sql.functions.col("suite") === suite
+    val m = VersionedTable.latest(spark, sub)
+    val touched = VersionedTable.bucketsOf(m.flatMap(_.numBuckets).getOrElse(16),
+      m.fold(Seq(Option.empty[DataType]))(_.typesOf(Seq("suite"))), Seq(Seq(suite)))
+    receipted(artifact, subTable, 1L, pruned = true)(
+      VersionedTable.rewriteBuckets(spark, sub, Seq("suite"), touched, Some(hit))(
+        _.filter(!hit)))
   }
 }

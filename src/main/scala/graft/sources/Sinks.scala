@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -369,7 +369,45 @@ object Sinks {
                                              buckets: Map[Int, String],
                                              numBuckets: Option[Int],
                                              bucketCols: Option[Seq[String]],
-                                             schema: Option[StructType])
+                                             schema: Option[StructType]) {
+      /** The recorded type of each of `cols`; None where the manifest
+        * records no schema or the schema has no such column. */
+      def typesOf(cols: Seq[String]): Seq[Option[DataType]] =
+        cols.map(c => schema.flatMap(_.fields.find(_.name == c)).map(_.dataType))
+    }
+
+    /** The bucket id of each key tuple in `keys`, one value per entry
+      * of `types` in order — what `pmod(hash(<bucket cols>), nb)`
+      * gives those rows — computed on the driver with the writer's own
+      * Catalyst expressions, `Pmod(Murmur3Hash(<literals>, 42), nb)`,
+      * so no Spark job runs. hash() is TYPE-sensitive (hash(17: Int) !=
+      * hash(17L)): each value is cast to its `types` entry, the table's
+      * key column type, so a caller passing an Int for a BIGINT key
+      * hashes exactly what the writer hashed; None keeps the value's
+      * own type.
+      */
+    private[graft] def bucketsOf(nb: Int, types: Seq[Option[DataType]],
+                                 keys: Seq[Seq[Any]]): Seq[Int] = {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, Murmur3Hash, Pmod}
+      val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+      keys.map { vals =>
+        require(vals.length == types.length,
+          s"VersionedTable.bucketsOf: ${vals.length} values for ${types.length} key columns")
+        val lits = vals.zip(types).map { case (v, t) =>
+          val l = Literal(v)
+          t.filter(_ != l.dataType).fold[Expression](l)(Cast(l, _, tz))
+        }
+        Pmod(Murmur3Hash(lits, 42), Literal(nb)).eval().asInstanceOf[Int]
+      }
+    }
+
+    /** What one logical rewrite ([[replaceBuckets]], [[replaceAll]])
+      * committed, all from the attempt that won: the manifest it
+      * folded, the rows of that snapshot's slice its `hit` predicate
+      * matched, and the version and bucket map it published — `base`'s
+      * when the rewrite was a no-op. */
+    private[graft] final case class Rewrite(base: Manifest, found: Long,
+                                            version: Long, buckets: Map[Int, String])
 
     /** The header fields sit before `schema` and the bucket map after
       * it, so neither parse can match inside the schema's JSON. (Only
@@ -900,9 +938,11 @@ object Sinks {
           pmod(hash(bk.map(col): _*), lit(nb)))
         val next = baseVersion + 1
         // affected-bucket ids: bounded by numBuckets — partition
-        // metadata, not data (constant-size driver collect).
-        val touched = deltaB.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
+        // metadata, not data (constant-size driver collect). Each task
+        // sends its own distinct ids, so the collect needs no shuffle.
+        val touched = deltaB.select("bucket").as(Encoders.scalaInt)
+          .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+          .collect().distinct.sorted
         val baseSchema = current.map(schemaOf(spark, path, _))
         val baseSlice = {
           val dirs = touched.toIndexedSeq.flatMap(baseBuckets.get)
@@ -1015,13 +1055,22 @@ object Sinks {
       * zero-row version that stays readable and mergeable.
       */
     def replaceAll(spark: SparkSession, path: String, keys: Seq[String],
-                   maxRetries: Int = 20)(fold: DataFrame => DataFrame): Unit = {
+                   maxRetries: Int = 20)(fold: DataFrame => DataFrame): Unit =
+      rewriteAll(spark, path, keys, None, maxRetries)(fold)
+
+    /** [[replaceAll]] returning what the winning attempt committed;
+      * `hit` (when given) is counted over the snapshot it folded, inside
+      * the rewrite's own write — the receipt's found count. (The count
+      * runs in the write's shuffle stage, so a fold to EMPTY costs one
+      * count query of its own: see [[hitsOf]].) */
+    private[graft] def rewriteAll(spark: SparkSession, path: String, keys: Seq[String],
+                                  hit: Option[Column], maxRetries: Int = 20)
+                                 (fold: DataFrame => DataFrame): Rewrite = {
       graft.FailPoint.reach(path) // kill-point sweep boundary (test seam)
       val fs = fsFor(spark, path)
       commitStoreFor(new Path(path).toUri.getScheme) // refuse unsupported stores up front
       var attempt = 0
-      var committed = false
-      while (!committed) {
+      while (true) {
         attempt += 1
         if (attempt > maxRetries)
           throw new java.io.IOException(
@@ -1037,7 +1086,8 @@ object Sinks {
           s"VersionedTable.replaceAll: $path is bucketed by $cols, caller passed $keys"))
         // fold the attempt's pinned snapshot (retry re-reads the winner's)
         val snapshot = readBuckets(spark, path, m, m.buckets.values.toSeq)
-        val folded = fold(snapshot.drop("bucket"))
+        val (seen, observed) = observeHits(snapshot, hit)
+        val folded = fold(observed.drop("bucket"))
           .withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nb)))
         val schema = evolvedSchema(path, Some(m.schema.getOrElse(snapshot.schema)),
           folded.schema)
@@ -1047,6 +1097,7 @@ object Sinks {
         folded.withColumn("__pb", col("bucket"))
           .repartition(col("__pb"), hash(keys.map(col): _*))
           .write.mode(SaveMode.Overwrite).partitionBy("__pb").parquet(staging.toString)
+        val found = hitsOf(seen, snapshot, hit)
         val newDirs = fs.listStatus(staging)
           .map(_.getPath.getName)
           .filter(_.startsWith("__pb="))
@@ -1069,13 +1120,31 @@ object Sinks {
           Map(0 -> rel)
         }
         beforePublishHook()
-        committed = publish(spark, path, next, nextBuckets, nb,
-          bucketCols = m.bucketCols.getOrElse(keys), schema)
-        if (!committed) {
-          nextBuckets.values.foreach(d => fs.delete(new Path(path, d), true))
-        }
+        if (publish(spark, path, next, nextBuckets, nb,
+            bucketCols = m.bucketCols.getOrElse(keys), schema))
+          return Rewrite(m, found, next, nextBuckets)
+        nextBuckets.values.foreach(d => fs.delete(new Path(path, d), true))
       }
+      throw new IllegalStateException("unreachable")
     }
+
+    /** `df` observed for the rows `hit` matches, counted while the
+      * action that reads it runs (no job of its own); without a `hit`,
+      * `df` as it is. */
+    private def observeHits(df: DataFrame, hit: Option[Column]): (Option[Observation], DataFrame) =
+      hit.fold[(Option[Observation], DataFrame)]((None, df)) { h =>
+        val o = Observation()
+        (Some(o), df.observe(o, count(when(h, lit(1))).as("n")))
+      }
+
+    /** The rows of `read` that `hit` matches, as [[observeHits]]'
+      * observation counted them once its action finished; 0 without a
+      * `hit`. When the executed plan lost the observed node — AQE
+      * replaces an empty shuffle stage with an empty relation, the
+      * optimizer a statically empty branch — no metrics arrive, and a
+      * count query of its own answers instead. */
+    private def hitsOf(seen: Option[Observation], read: DataFrame, hit: Option[Column]): Long =
+      seen.fold(0L)(o => o.get.get("n").fold(read.filter(hit.get).count())(_.asInstanceOf[Long]))
 
     /** Bucket-PRUNED logical rewrite — [[replaceAll]]'s point complement,
       * the primitive behind O(touched-buckets) takedown: apply `fold` to
@@ -1084,17 +1153,20 @@ object Sinks {
       * zero data movement, its files are never even read. The caller
       * computes `touched` from the retraction keys (a row's bucket id is
       * a pure function of its bucket key — see [[mergeUpsert]]'s
-      * bucketKeys), so a 10-doc compliance takedown on a multi-TB index
-      * rewrites a handful of bucket dirs, not the table.
+      * bucketKeys, and [[bucketsOf]] for the driver-side hash), so a
+      * 10-doc compliance takedown on a multi-TB index rewrites a
+      * handful of bucket dirs, not the table.
       *
       * `fold` receives the touched slice WITH its `bucket` column and
       * must preserve each surviving row's value (filter and in-place
       * update folds do this for free). Moving a row across buckets is
-      * checked and refused — hash-verified against the table's recorded
-      * bucket contract (on a legacy table without one, only moves into
-      * UNTOUCHED buckets are structurally detectable) — it would strand
-      * the row where key probes and later merges never look. A bucket
-      * whose fold output is empty
+      * checked and refused before anything publishes, and the staging
+      * dir is removed first — hash-verified against the table's
+      * recorded bucket contract (on a legacy table without one, only
+      * moves into UNTOUCHED buckets are structurally detectable) — it
+      * would strand the row where key probes and later merges never
+      * look. The hash check is counted inside the staging write, so
+      * it costs no job of its own. A bucket whose fold output is empty
       * drops out of the manifest (its rows logically disappear — the
       * thing upsert-only merges cannot express); folding EVERY bucket
       * to empty (a full takedown) publishes a zero-row version that
@@ -1105,50 +1177,68 @@ object Sinks {
       */
     def replaceBuckets(spark: SparkSession, path: String, keys: Seq[String],
                        touched: Seq[Int], maxRetries: Int = 20)
-                      (fold: DataFrame => DataFrame): Unit = {
+                      (fold: DataFrame => DataFrame): Unit =
+      rewriteBuckets(spark, path, keys, touched, None, maxRetries)(fold)
+
+    /** [[replaceBuckets]] returning what the winning attempt committed;
+      * `hit` (when given) is counted over the slice it folded, inside
+      * the rewrite's own write — the receipt's found count. A no-op
+      * (no touched bucket was ever written) returns the latest manifest
+      * unchanged with found = 0. */
+    private[graft] def rewriteBuckets(spark: SparkSession, path: String, keys: Seq[String],
+                                      touched: Seq[Int], hit: Option[Column],
+                                      maxRetries: Int = 20)
+                                     (fold: DataFrame => DataFrame): Rewrite = {
       graft.FailPoint.reach(path) // kill-point sweep boundary (test seam)
       val fs = fsFor(spark, path)
       commitStoreFor(new Path(path).toUri.getScheme) // refuse unsupported stores up front
       val want = touched.toSet
-      if (want.isEmpty) return
+      def current = latest(spark, path).getOrElse(
+        throw new IllegalStateException(s"VersionedTable: no commits at $path"))
+      if (want.isEmpty) { val m = current; return Rewrite(m, 0L, m.version, m.buckets) }
       var attempt = 0
-      var committed = false
-      while (!committed) {
+      while (true) {
         attempt += 1
         if (attempt > maxRetries)
           throw new java.io.IOException(
             s"VersionedTable.replaceBuckets: lost the commit race $maxRetries times at $path")
-        val m = latest(spark, path).getOrElse(
-          throw new IllegalStateException(s"VersionedTable: no commits at $path"))
+        val m = current
         val (baseVersion, baseBuckets) = (m.version, m.buckets)
         // Touched buckets never written stay unwritten — the fold has
         // nothing to see there. All-absent means the keys were never in
         // the table at all: a pure no-op, not even a version bump.
         val present = want.intersect(baseBuckets.keySet)
-        if (present.isEmpty) return
-        val folded = fold(readBuckets(spark, path, m, present.toSeq.map(baseBuckets)))
+        if (present.isEmpty) return Rewrite(m, 0L, baseVersion, baseBuckets)
+        val slice = readBuckets(spark, path, m, present.toSeq.map(baseBuckets))
+        // Shuffled BEFORE the fold (which keeps each row's bucket), so
+        // both counts below run after the exchange: AQE replaces an
+        // empty shuffle stage with an empty relation, and an observed
+        // node inside that stage would deliver no metrics — here only
+        // an empty slice can drop them.
+        val (seen, observedSlice) = observeHits(
+          slice.repartition(col("bucket"), hash(keys.map(col): _*)), hit)
+        val folded = fold(observedSlice)
         val schema = evolvedSchema(path, Some(schemaOf(spark, path, m)), folded.schema)
         // Strong bucket-identity check (possible when the table records
         // its bucket contract): every surviving row's `bucket` must
         // still equal hash(bucketCols) % nb — catching a fold that
         // relocated rows even BETWEEN touched buckets, which the
-        // staging-dir check below structurally cannot see. One bounded
-        // job over the touched slice; takedowns are rare.
-        m.bucketCols.foreach { cols =>
-          val nbStored = m.numBuckets.getOrElse(-1)
-          val moved = folded.filter(
-            pmod(hash(cols.map(col): _*), lit(nbStored)) =!= col("bucket"))
-            .limit(1).count()
-          require(moved == 0L,
-            s"VersionedTable.replaceBuckets: fold changed rows' bucket identity at $path " +
-              "— the bucket column must be preserved")
-        }
+        // staging-dir check below structurally cannot see. Counted
+        // while the staging write runs.
+        val movedPred = m.bucketCols.map(cols =>
+          pmod(hash(cols.map(col): _*), lit(m.numBuckets.getOrElse(-1))) =!= col("bucket"))
+        val (moves, checked) = observeHits(folded, movedPred)
         val next = baseVersion + 1
         val stamp = java.util.UUID.randomUUID().toString.take(8)
         val staging = new Path(path, s".staging-$stamp")
-        folded.withColumn("__pb", col("bucket"))
-          .repartition(col("__pb"), hash(keys.map(col): _*))
+        checked.withColumn("__pb", col("bucket"))
           .write.mode(SaveMode.Overwrite).partitionBy("__pb").parquet(staging.toString)
+        val moved = hitsOf(moves, folded, movedPred)
+        if (moved != 0L) fs.delete(staging, true)
+        require(moved == 0L,
+          s"VersionedTable.replaceBuckets: fold changed rows' bucket identity at $path " +
+            "— the bucket column must be preserved")
+        val found = hitsOf(seen, slice, hit)
         val staged = fs.listStatus(staging)
           .map(_.getPath.getName).filter(_.startsWith("__pb=")).toSeq
         val stagedIds = staged.map(_.stripPrefix("__pb=").toInt).toSet
@@ -1187,13 +1277,13 @@ object Sinks {
           Map(b -> rel)
         }
         beforePublishHook()
-        committed = publish(spark, path, next, nextBuckets,
-          m.numBuckets.getOrElse(-1), bucketCols = m.bucketCols.getOrElse(Nil), schema)
-        if (!committed) {
-          (newDirs.values ++ (if (survivors.isEmpty) nextBuckets.values else Nil))
-            .foreach(d => fs.delete(new Path(path, d), true))
-        }
+        if (publish(spark, path, next, nextBuckets,
+            m.numBuckets.getOrElse(-1), bucketCols = m.bucketCols.getOrElse(Nil), schema))
+          return Rewrite(m, found, next, nextBuckets)
+        (newDirs.values ++ (if (survivors.isEmpty) nextBuckets.values else Nil))
+          .foreach(d => fs.delete(new Path(path, d), true))
       }
+      throw new IllegalStateException("unreachable")
     }
 
     /** Drop manifests older than the newest `keep` and every data dir no
@@ -1266,7 +1356,10 @@ object Sinks {
       * the key hashes into — O(1/numBuckets) of the table, the reason
       * the layout keys buckets by a pure function of the merge key.
       * Falls back to a full-snapshot filtered read for legacy tables
-      * with no recorded numBuckets. Schema note: returns the TABLE's
+      * with no recorded numBuckets. The bucket id is [[bucketsOf]]'s
+      * driver-side hash, so no Spark job runs before the read (on a
+      * manifest without a recorded schema, one bucket's footer supplies
+      * the key types). Schema note: returns the TABLE's
       * schema as the manifest records it (a bucket not rewritten since
       * an additive evolution null-fills the newer columns), like
       * [[read]]; on a manifest without a recorded schema, the bucket's
@@ -1297,24 +1390,14 @@ object Sinks {
         case Some(nb) =>
           val m = current.get
           val buckets = m.buckets
-          // hash() is TYPE-sensitive: hash(17: Int) != hash(17L), so a
-          // caller passing an Int for a BIGINT key column would probe
-          // the wrong bucket and read empty for an existing key. Cast
-          // each literal to the table's own key column type (the
+          // Cast each literal to the table's own key column type (the
           // recorded schema; one committed bucket's footer on a manifest
           // without one — merge keys exist in every bucket) so the probe
-          // hashes exactly what the writer hashed.
-          val keyTypes: Map[String, DataType] =
-            m.schema.orElse(buckets.values.headOption.map(rel =>
-                readBuckets(spark, path, m, Seq(rel)).schema))
-              .fold(Map.empty[String, DataType])(_.fields.map(f => f.name -> f.dataType).toMap)
-          val typedLits = probeKeys.zip(probeVals).map { case (k, v) =>
-            keyTypes.get(k).map(lit(v).cast).getOrElse(lit(v))
-          }
-          // same hash, computed the same way (1-row plan, not driver math)
-          val b = spark.range(1)
-            .select(pmod(hash(typedLits: _*), lit(nb)).as("b"))
-            .head().getInt(0)
+          // hashes exactly what the writer hashed: driver math, the
+          // writer's own expressions, no job.
+          val schema = m.schema.orElse(buckets.values.headOption.map(rel =>
+            readBuckets(spark, path, m, Seq(rel)).schema))
+          val b = bucketsOf(nb, m.copy(schema = schema).typesOf(probeKeys), Seq(probeVals)).head
           buckets.get(b) match {
             case None => // bucket never written
               readBuckets(spark, path, m, buckets.values.toSeq).filter(eq).limit(0)

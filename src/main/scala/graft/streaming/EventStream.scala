@@ -284,7 +284,7 @@ object EventStream {
     val centLit = array(cent.orderBy("c_id").collect().map { r =>
       struct(
         lit(r.getLong(0)).as("c_id"),
-        typedLit(r.getSeq[Long](1)).as("cqv"),
+        graft.functions.Exprs.litLongArray(r.getSeq[Long](1)).as("cqv"),
         lit(r.getLong(2)).as("cnrm"))
     }.toIndexedSeq: _*)
     val qStream = queryStream
@@ -329,7 +329,8 @@ object EventStream {
     val ix = AnnIndex.load(spark, indexPath)
     val codes = AnnIndex.codes(spark, indexPath)
     val coarseLit = array(ix.coarse.map { case (cId, cqv, cnrm) =>
-      struct(lit(cId).as("c_id"), typedLit(cqv).as("cqv"), lit(cnrm).as("cnrm"))
+      struct(lit(cId).as("c_id"), graft.functions.Exprs.litLongArray(cqv).as("cqv"),
+        lit(cnrm).as("cnrm"))
     }.toIndexedSeq: _*)
     val qStream = queryStream
       .select(col("query_id"),
@@ -1137,8 +1138,13 @@ object EventStream {
       val hold = (df: DataFrame) => { held = df.persist() :: held; held.head }
       try {
         val a = verdict(servedGroup, hold)
-        val admitted = hold(a.admitted)
-        val n = admitted.count()
+        val counted = hold(a.admitted)
+        val n = counted.count()
+        // the effects read the materialized admissions through a lineage
+        // cut (a LogicalRDD over the cached rows): building it runs no
+        // job, and their plans no longer embed — and describe at every
+        // execution — the verdict's plan
+        val admitted = spark.createDataFrame(counted.rdd, counted.schema)
         a.guard(admitted)
         if (n > 0) {
           graft.FailPoint.reach(outPath) // kill-point sweep boundary
@@ -1679,17 +1685,19 @@ object EventStream {
       // quantized verdict vs the committed codes: code-tuple collision
       // (deterministic — an exact re-crawl always matches) plus the
       // ADC near-dup extension at the measured tau (see
-      // AnnIndex.matchedIds for why collision is the primary rule)
+      // AnnIndex.matchedIds for why collision is the primary rule).
+      // The extend encodes with the verdict's codebooks when it
+      // resolves the same version.
+      val (matched, codebooks) =
+        AnnIndex.matchedIdsAtLoaded(kept, indexPath, tau, servedGroup, exactRescore)
       Admission(
         admitted = kept
-          .join(AnnIndex.matchedIdsAt(kept, indexPath, tau, servedGroup,
-              exactRescore),
-            Seq("vec_id"), "left_anti")
+          .join(matched, Seq("vec_id"), "left_anti")
           .select("vec_id")
           .join(batch, Seq("vec_id")),
         guard = refuseIdReuse(_, "vec_id",
           AnnIndex.codes(batch.sparkSession, indexPath).select("vec_id"), who),
-        extend = AnnIndex.extend(_, indexPath, buildV = 2L * (batchId + 1)),
+        extend = AnnIndex.extendWith(_, indexPath, buildV = 2L * (batchId + 1), codebooks),
         funnel = n => Seq(
           "1_arrived" -> counts.arrived,
           "2_batch_distinct" -> counts.distinctQv,

@@ -155,6 +155,22 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(AnnIndex.serve(emb, path)) == rows(AnnIndex.serve(emb, twin)))
   }
 
+  test("a 4-id retract runs at most two jobs per sub-table: its rewrite's shuffle and write") {
+    val emb = Tables.embeddings(spark, sf)
+    val path = s"$tmp/ix_rt_jobs"
+    AnnIndex.build(emb, path, storeVectors = true)
+    val ids = emb.select("vec_id").collect().map(_.getLong(0)).sorted.slice(20, 24).toSeq
+    val (receipts, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+      AnnIndex.retract(spark, path, ids)
+    }
+    assert(receipts.map(_.subTable) == Seq("codes", "vectors"))
+    assert(receipts.forall(r => r.pruned && r.idsFound == 4L &&
+      r.newVersion == r.oldVersion + 1L), receipts)
+    assert(jobs <= 2 * receipts.size, s"4-id retract ran $jobs jobs over ${receipts.size} sub-tables")
+    assert(AnnIndex.codes(spark, path).filter(col("vec_id").isin(ids: _*)).count() == 0L)
+    assert(AnnIndex.vectors(spark, path).filter(col("vec_id").isin(ids: _*)).count() == 0L)
+  }
+
   test("extend: new vectors encode with the COMMITTED codebooks, serve, and retract back out byte-identically (r11)") {
     val emb = Tables.embeddings(spark, sf)
     val path = s"$tmp/ix_ext"

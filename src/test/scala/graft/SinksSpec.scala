@@ -479,6 +479,73 @@ class SinksSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(df.count() == 3L)
   }
 
+  test("VersionedTable.bucketsOf equals Spark's pmod(hash(...), nb) column for Long, Int, String and (Long, Int) keys") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+    val rnd = new scala.util.Random(7)
+    val longs = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(1000)(rnd.nextLong())
+    val ints = Seq(0, 1, -1, Int.MinValue, Int.MaxValue) ++ Seq.fill(1000)(rnd.nextInt())
+    val strs = Seq("", "a", "ü", " ") ++
+      Seq.fill(1000)(rnd.alphanumeric.take(rnd.nextInt(16)).mkString)
+    val pairs = longs.zip(ints)
+    def driver(nb: Int, types: Seq[DataType], keys: Seq[Seq[Any]]) =
+      Sinks.VersionedTable.bucketsOf(nb, types.map(Some(_)), keys)
+    def spark_(nb: Int, df: org.apache.spark.sql.DataFrame) =
+      df.select(pmod(hash(df.columns.map(col).toSeq: _*), lit(nb))).as[Int].collect().toSeq
+    for (nb <- Seq(16, 7, 64)) {
+      assert(driver(nb, Seq(LongType), longs.map(Seq(_))) == spark_(nb, longs.toDF("k")))
+      assert(driver(nb, Seq(IntegerType), ints.map(Seq(_))) == spark_(nb, ints.toDF("k")))
+      assert(driver(nb, Seq(StringType), strs.map(Seq(_))) == spark_(nb, strs.toDF("k")))
+      assert(driver(nb, Seq(LongType, IntegerType), pairs.map { case (l, i) => Seq(l, i) }) ==
+        spark_(nb, pairs.toDF("k", "b")))
+      // an Int probe of a BIGINT key hashes as the writer's long did
+      assert(driver(nb, Seq(LongType), ints.map(Seq(_))) ==
+        spark_(nb, ints.map(_.toLong).toDF("k")))
+      // no recorded type: the value's own
+      assert(Sinks.VersionedTable.bucketsOf(nb, Seq(None), ints.map(Seq(_))) ==
+        spark_(nb, ints.toDF("k")))
+    }
+  }
+
+  test("VersionedTable.readForKey submits no Spark job before its read") {
+    val s = spark
+    import s.implicits._
+    val path = s"$tmp/vt_point_jobs"
+    Sinks.VersionedTable.mergeUpsert(spark, path,
+      (0L until 40L).map(i => (i, s"v$i", 1L)).toDF("id", "v", "ver"),
+      Seq("id"), "ver", numBuckets = 8)
+    val (df, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+      Sinks.VersionedTable.readForKey(spark, path, Seq("id"), Seq(17)) // Int probe, BIGINT key
+    }
+    assert(jobs == 0, s"readForKey submitted $jobs job(s) before its read")
+    assert(df.select("v").as[String].collect().toSeq == Seq("v17"))
+  }
+
+  test("VersionedTable.replaceBuckets refuses a bucket-moving fold: same message, no staging dir left, nothing published") {
+    val s = spark
+    import s.implicits._
+    val path = s"$tmp/vt_moved"
+    Sinks.VersionedTable.mergeUpsert(spark, path,
+      (0L until 40L).map(i => (i, s"v$i", 1L)).toDF("id", "v", "ver"),
+      Seq("id"), "ver", numBuckets = 8)
+    val before = Sinks.VersionedTable.latestManifest(spark, path).get
+    val touched = before._2.keys.toSeq.sorted.take(2)
+    val e = intercept[IllegalArgumentException] {
+      // moves rows BETWEEN the two touched buckets: only the hash check sees it
+      Sinks.VersionedTable.replaceBuckets(spark, path, Seq("id"), touched) { slice =>
+        slice.withColumn("bucket",
+          when(col("bucket") === touched(0), lit(touched(1))).otherwise(lit(touched(0))))
+      }
+    }
+    assert(e.getMessage == "requirement failed: VersionedTable.replaceBuckets: fold changed " +
+      s"rows' bucket identity at $path — the bucket column must be preserved", e.getMessage)
+    assert(!new java.io.File(path).list().exists(_.startsWith(".staging-")),
+      "the refused attempt must remove its staging dir")
+    assert(Sinks.VersionedTable.latestManifest(spark, path).get == before)
+    assert(Sinks.VersionedTable.versionCount(spark, path) == 1L)
+  }
+
   test("VersionedTable: vacuum reclaims crash orphans (unreferenced data dirs + staging)") {
     val s = spark
     import s.implicits._

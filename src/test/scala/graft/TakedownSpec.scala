@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AudioDedup, EvalRegistry, ImageDedup, MediaIndex}
+import graft.operators.{AudioDedup, DedupIndex, EvalRegistry, ImageDedup, MediaIndex, TakedownReceipt}
 import graft.sources.Sinks.VersionedTable
 
 /** Takedown receipts (r11): every retract/unregister returns compliance
@@ -137,6 +137,104 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
     // retiring an already-retired suite: the receipt evidences the no-op
     val replay = EvalRegistry.unregister(spark, path, "suiteB")
     assert(replay.idsFound == 0L, s"replay must find nothing: $replay")
+  }
+
+  /** Runs `op` and returns its value, the Spark jobs it submitted, and
+    * per sub-table name what its receipt must say, read independently
+    * of it: (rows `hit` matches in the pre-op snapshot, buckets whose
+    * dir changed or vanished, old version, new version). */
+  private def bracketed[T](subs: Seq[(String, String)], hit: org.apache.spark.sql.Column)
+                          (op: => T): (T, Int, Map[String, (Long, Int, Long, Long)]) = {
+    val before = subs.map { case (name, sub) =>
+      (name, sub, manifest(sub), VersionedTable.read(spark, sub).filter(hit).count())
+    }
+    val (out, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(op)
+    val expected = before.map { case (name, sub, (v0, m0), found) =>
+      val (v1, m1) = manifest(sub)
+      val delta = m1.count { case (b, rel) => !m0.get(b).contains(rel) } +
+        (m0.keySet -- m1.keySet).size
+      name -> ((found, delta, v0, v1))
+    }.toMap
+    (out, jobs, expected)
+  }
+
+  private def fields(rs: Seq[TakedownReceipt]): Map[String, (Long, Int, Long, Long)] =
+    rs.map(r => r.subTable -> ((r.idsFound, r.bucketsRewritten, r.oldVersion, r.newVersion))).toMap
+
+  test("dedup, media and eval-registry takedowns run one write per sub-table; receipts equal the independently read counts and manifest deltas") {
+    import spark.implicits._
+    // a write under AQE is two jobs: its repartition's shuffle stage and
+    // the write itself; nothing else of the takedown may submit one
+    val dPath = tmp("dedup-jobs")
+    val docs = (1L to 40L).map(i =>
+      (i, s"post $i on topic ${i % 7}: " + (0 until 12).map(w => s"w${(i * 31 + w * 7) % 97}").mkString(" ")))
+      .toDF("doc_id", "text")
+    DedupIndex.build(docs, dPath)
+    val docIds = Seq(1L, 2L, 3L, -5L)
+    val dSubs = Seq("fps", "sigs", "bands").map(n => n -> s"$dPath/$n")
+    val (dReceipts, dJobs, dExpected) =
+      bracketed(dSubs, col("doc_id").isInCollection(docIds)) {
+        DedupIndex.retract(spark, dPath, docIds)
+      }
+    assert(dReceipts.forall(r => r.pruned && r.idsRequested == 4L), dReceipts)
+    assert(fields(dReceipts) == dExpected)
+    assert(dReceipts.forall(_.idsFound > 0L), dReceipts)
+    assert(dJobs <= 2 * dSubs.size, s"dedup takedown ran $dJobs jobs over ${dSubs.size} sub-tables")
+
+    val mPath = tmp("media-jobs")
+    MediaIndex.buildImages(
+      ImageDedup.imageCorpus(Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")), mPath)
+    MediaIndex.buildAudio(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), mPath)
+    val mIds = Seq(2L, 5L, 10L, 99L)
+    val mSubs = Seq("img", "aud").map(n => n -> s"$mPath/$n")
+    val (mReceipts, mJobs, mExpected) =
+      bracketed(mSubs, col("doc_id").isInCollection(mIds)) {
+        MediaIndex.retract(spark, mPath, mIds)
+      }
+    assert(fields(mReceipts) == mExpected)
+    assert(mExpected("img")._1 == 2L && mExpected("aud")._1 == 1L, mExpected)
+    assert(mJobs <= 2 * mSubs.size, s"media takedown ran $mJobs jobs over ${mSubs.size} sub-tables")
+
+    val rPath = tmp("registry-jobs")
+    EvalRegistry.register(Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text"), rPath, suite = "suiteA")
+    EvalRegistry.register(Seq((2L, "one two three four five six seven eight nine"))
+      .toDF("doc_id", "text"), rPath, suite = "suiteB")
+    val (rReceipt, rJobs, rExpected) =
+      bracketed(Seq("eval_shingles" -> s"$rPath/eval_shingles"), col("suite") === "suiteB") {
+        EvalRegistry.unregister(spark, rPath, "suiteB")
+      }
+    assert(fields(Seq(rReceipt)) == rExpected && rReceipt.idsFound > 0L, rReceipt)
+    assert(rJobs <= 2, s"registry unregister ran $rJobs jobs")
+  }
+
+  test("a receipt counts what the committed attempt removed: a row merged mid-takedown is dropped and counted") {
+    import spark.implicits._
+    val path = tmp("race")
+    MediaIndex.buildAudio(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), path)
+    val aud = s"$path/aud"
+    // id 12 is requested but absent when the takedown starts; a
+    // concurrent extend commits it before the takedown's first publish
+    // attempt, which then loses the version race and refolds
+    val row12 = VersionedTable.read(spark, aud).filter(col("doc_id") === 10L)
+      .drop("bucket").withColumn("doc_id", lit(12L)).collect()
+    val schema = VersionedTable.read(spark, aud).drop("bucket").schema
+    val first = manifest(aud)._1
+    VersionedTable.beforePublishHook = () => {
+      VersionedTable.beforePublishHook = () => () // one-shot
+      VersionedTable.mergeUpsert(spark, aud,
+        spark.createDataFrame(java.util.Arrays.asList(row12: _*), schema),
+        Seq("doc_id"), "build_v", numBuckets = 16)
+    }
+    val Seq(r) = try MediaIndex.retract(spark, path, Seq(10L, 12L))
+      finally VersionedTable.beforePublishHook = () => ()
+    assert(r.oldVersion == first + 1L,
+      s"the receipt must name the base the committed attempt folded: $r")
+    assert(r.newVersion == first + 2L && r.newVersion == manifest(aud)._1, r)
+    assert(r.idsFound == 2L, s"the concurrently merged id was removed, so it is found: $r")
+    assert(VersionedTable.read(spark, aud)
+      .filter(col("doc_id").isin(10L, 12L)).count() == 0L, "both ids must be gone")
+    assert(VersionedTable.read(spark, aud).filter(col("doc_id") === 11L).count() == 1L)
   }
 
   test("takedown log files receipts append-only; two jobs accumulate, fields survive the round-trip (r11)") {

@@ -858,8 +858,8 @@ object ScaleAudit {
       }
       def buildIx(tag: String, from: Long, n: Long): String = {
         val p = s"$work/mix_$tag"
-        MediaIndex.buildImages(
-          novelImages(from, n).withColumnRenamed("media_id", "doc_id"), p)
+        MediaIndex.build(
+          novelImages(from, n).withColumnRenamed("media_id", "doc_id"), p, "img")
         p
       }
       val ixSmall = buildIx("small", 10000000L, 400L)

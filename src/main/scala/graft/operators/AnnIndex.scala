@@ -60,8 +60,14 @@ object AnnIndex {
   // have no root manifest and fall back to per-table latest — the old
   // behavior, unchanged.
 
-  /** Sub-table names as recorded in the root snapshot manifest. */
-  private val SubNames = Seq("codebooks", "codes", "vectors", "admission_tau")
+  /** The index's lifecycle. Only codes and vectors are content: the
+    * codebooks and the admission tau are a trained model artifact, not
+    * retrievable data (see [[retract]]). */
+  private[graft] val layout = {
+    import Artifacts.{Sub, byId}
+    Artifacts.Layout("AnnIndex", Seq(Sub("codebooks"), Sub("codes", Some(byId("vec_id"))),
+      Sub("vectors", Some(byId("vec_id"))), Sub("admission_tau")))
+  }
 
   private def pinnedVersion(spark: SparkSession, path: String,
                             sub: String): Option[Long] =
@@ -83,19 +89,6 @@ object AnnIndex {
   private def subReadWith(spark: SparkSession, path: String, sub: String,
                           pins: Map[String, Long]): DataFrame =
     graft.sources.Sinks.ArtifactSnapshot.readWith(spark, path, sub, pins)
-
-  /** Publish the root snapshot after a mutation ([[graft.sources.Sinks
-    * .ArtifactSnapshot.commit]]'s policy). `refresh` names the
-    * sub-tables the mutation bumped; everything else KEEPS its existing
-    * pin — so a mutation that didn't touch codebooks can never
-    * accidentally expose a torn half-rebalance's codebooks-ahead
-    * version. `pin` overrides both (extend records the codebooks
-    * version it actually encoded with).
-    */
-  def commitSnapshot(spark: SparkSession, path: String,
-                     refresh: Seq[String] = SubNames,
-                     pin: Map[String, Long] = Map.empty): Long =
-    graft.sources.Sinks.ArtifactSnapshot.commit(spark, path, SubNames, refresh, pin)
 
   /** Adopt a COMPLETED-but-unsnapshotted rebuild: a crash between a
     * build/rebalance's last sub-table commit and its snapshot leaves
@@ -120,7 +113,7 @@ object AnnIndex {
       // adopt (the heal is for completed rebuilds, which re-encode rows)
       if (!rawCb.isNullAt(0) && !rawCodes.isNullAt(0) &&
           rawCb.getLong(0) == rawCodes.getLong(0))
-        commitSnapshot(spark, path)
+        layout.publish(spark, path)
     }
   }
 
@@ -153,7 +146,7 @@ object AnnIndex {
         q.withColumn("build_v", lit(buildV)),
         Seq("vec_id"), "build_v", numBuckets = 16)
     commitTrained(spark, path, q, coarse, cbs, buildV)
-    commitSnapshot(spark, path)
+    layout.publish(spark, path)
   }
 
   /** Commit (codebooks, codes-from-assignment) as version `buildV` —
@@ -241,7 +234,7 @@ object AnnIndex {
       .withColumn("build_v", lit(buildV))
     VersionedTable.mergeUpsert(spark, codesPath(path), codes,
       Seq("vec_id"), "build_v", numBuckets = 16)
-    commitSnapshot(spark, path, refresh = Seq("codes", "vectors"),
+    layout.publish(spark, path, refresh = Seq("codes", "vectors"),
       pin = usedCbV.map("codebooks" -> _).toMap)
   }
 
@@ -460,7 +453,7 @@ object AnnIndex {
         lit(if (exact) 1L else 0L).as("exact_fl"),
         lit(buildV).as("build_v")),
       Seq("id"), "build_v", numBuckets = 1)
-    commitSnapshot(spark, path, refresh = Seq("admission_tau"))
+    layout.publish(spark, path, refresh = Seq("admission_tau"))
     tau
   }
 
@@ -563,7 +556,7 @@ object AnnIndex {
     val coarse = Embeddings.kmeansCodebook(qTrain)
     val cbs = Embeddings.pqCodebooks(qTrain)
     commitTrained(spark, path, q0, coarse, cbs, buildV)
-    commitSnapshot(spark, path)
+    layout.publish(spark, path)
     true
   }
 
@@ -630,20 +623,7 @@ object AnnIndex {
                                         groupVersion: Long, exactRescore: Boolean)
       : (DataFrame, Option[(Long, Loaded)]) = {
     val spark = probes.sparkSession
-    val pins = graft.sources.Sinks.VersionedTable.groupAt(spark, path,
-      groupVersion).getOrElse(throw new IllegalArgumentException(
-        s"AnnIndex.matchedIdsAt: no intact group manifest $groupVersion " +
-          s"at $path (group retention pruned it, or it never existed)"))
-    // strict up front: the shared read path falls forward on a
-    // vacuumed pin (right for latest-group serving, wrong for a NAMED
-    // audit read) — refuse here instead, naming the retention contract
-    pins.foreach { case (sub, v) =>
-      require(graft.sources.Sinks.VersionedTable
-          .manifestExists(spark, s"$path/$sub", v),
-        s"AnnIndex.matchedIdsAt: group $groupVersion pins $sub@$v but that " +
-          s"manifest no longer exists at $path/$sub — the snapshot outlived " +
-          "the protectGroups retention window; re-pin to a recent group")
-    }
+    val pins = groupPins(spark, path, groupVersion, "matchedIdsAt")
     val ix = loadWith(spark, path, pins)
     (matchedIdsWith(probes, path, tau, exactRescore, pins, ix),
       pins.get("codebooks").map(_ -> ix))
@@ -717,20 +697,28 @@ object AnnIndex {
     * sweep's protection windows).
     */
   def semDedupServeAt(batch: DataFrame, path: String, tau: Double,
-                      groupVersion: Long): DataFrame = {
-    val spark = batch.sparkSession
-    val pins = graft.sources.Sinks.VersionedTable.groupAt(spark, path,
-      groupVersion).getOrElse(throw new IllegalArgumentException(
-        s"AnnIndex.semDedupServeAt: no intact group manifest $groupVersion " +
+                      groupVersion: Long): DataFrame =
+    semDedupServeWith(batch, path, tau,
+      groupPins(batch.sparkSession, path, groupVersion, "semDedupServeAt"))
+
+  /** The pin-set of NAMED root snapshot `groupVersion`, checked strictly
+    * up front: the shared read path falls forward on a vacuumed pin
+    * (right for latest-group serving, wrong for a named audit read), so
+    * an absent group or a vacuumed pinned version refuses here, naming
+    * the retention contract. */
+  private def groupPins(spark: SparkSession, path: String, groupVersion: Long,
+                        op: String): Map[String, Long] = {
+    val pins = VersionedTable.groupAt(spark, path, groupVersion)
+      .getOrElse(throw new IllegalArgumentException(
+        s"AnnIndex.$op: no intact group manifest $groupVersion " +
           s"at $path (group retention pruned it, or it never existed)"))
     pins.foreach { case (sub, v) =>
-      require(graft.sources.Sinks.VersionedTable
-          .manifestExists(spark, s"$path/$sub", v),
-        s"AnnIndex.semDedupServeAt: group $groupVersion pins $sub@$v but " +
-          s"that manifest no longer exists at $path/$sub — the snapshot " +
-          "outlived the protectGroups retention window; re-pin to a recent group")
+      require(VersionedTable.manifestExists(spark, s"$path/$sub", v),
+        s"AnnIndex.$op: group $groupVersion pins $sub@$v but that " +
+          s"manifest no longer exists at $path/$sub — the snapshot outlived " +
+          "the protectGroups retention window; re-pin to a recent group")
     }
-    semDedupServeWith(batch, path, tau, pins)
+    pins
   }
 
   private def semDedupServeWith(batch: DataFrame, path: String, tau: Double,
@@ -781,27 +769,13 @@ object AnnIndex {
     */
   def retract(spark: SparkSession, path: String,
               vecIds: Seq[Long]): Seq[TakedownReceipt] = {
-    require(vecIds.nonEmpty, "AnnIndex.retract: empty takedown list")
-    // a mutator: adopt any completed-unsnapshotted rebuild first, or the
-    // closing snapshot would pin post-retract codes against the stale
-    // pinned codebooks (see healSnapshot)
+    // refuse before any effect; then, as a mutator, adopt any
+    // completed-unsnapshotted rebuild, or the closing snapshot would pin
+    // post-retract codes against the stale pinned codebooks (see
+    // healSnapshot)
+    val content = layout.retractable(spark, path, vecIds)
     healSnapshot(spark, path)
-    // the EXACT vectors sub-table is CONTENT in the strongest sense — a
-    // takedown that dropped only the lossy codes but kept raw vectors
-    // would not be a takedown at all (r11, the IndexRefine split)
-    val subs = Seq(codesPath(path) -> "codes") ++
-      (if (hasVectors(spark, path)) Seq(vectorsPath(path) -> "vectors") else Nil)
-    // prune only under a verified bucket contract; a legacy table (no
-    // recorded contract — same vec_id bucketing, but unprovable from
-    // the manifest) takes the full-snapshot rewrite: slower, never wrong
-    val receipts = subs.map { case (sub, name) =>
-      Takedown.retractIds(spark, path, sub, name, "vec_id", vecIds,
-        Seq("vec_id"), vecIds.map(Seq(_)), Seq("vec_id"))
-    }
-    // the retract must be VISIBLE at the next snapshot — refresh the
-    // pins for exactly the sub-tables the takedown rewrote
-    commitSnapshot(spark, path, refresh = Seq("codes", "vectors"))
-    receipts
+    layout.retractFrom(spark, path, vecIds, content)
   }
 
   /** The committed code table (vec_id, c_id, code_0..code_{PqM−1}) at

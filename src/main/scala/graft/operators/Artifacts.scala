@@ -1,38 +1,164 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Sinks.VersionedTable
+import graft.sources.Sinks.{ArtifactSnapshot, VersionedTable}
 
-/** The operational front door for committed-artifact upkeep: one sweep
-  * over every versioned table under a root with shared cadence and
-  * retention knobs.
+/** The front door for committed-artifact upkeep: ONE lifecycle for every
+  * artifact built from [[graft.sources.Sinks.VersionedTable]]s, in two
+  * shapes.
   *
-  * Every committed artifact in this library (DedupIndex, AnnIndex,
-  * MediaIndex, EvalRegistry, tokenizer bundles, rollups, DSIR/LM/
-  * temperature model tables) is ultimately one or more
-  * [[graft.sources.Sinks.VersionedTable]]s, and each accretes the same
-  * two kinds of debt under upsert traffic: bucket-file fragmentation
-  * (the small-file storm every object store punishes) and superseded
-  * manifest versions (kept for pinned readers, garbage afterwards).
-  * Each artifact already exposes its own `maintain`; what a deployment
-  * actually schedules is ONE job over the whole artifact root — this.
+  * [[Layout]] is one artifact's lifecycle. It names the artifact's
+  * sub-tables and says which of them hold content a takedown id list
+  * must reach (and how their buckets are keyed by that id). A layout
+  * with content sub-tables publishes a root snapshot ([[graft.sources
+  * .Sinks.ArtifactSnapshot]]) after each mutation; the registries'
+  * layouts have none. Every lifecycle step exists once, there:
+  * [[Layout.present]], [[Layout.publish]], [[Layout.retract]],
+  * [[Layout.unregister]], [[Layout.maintain]] and [[Layout.readAt]].
+  * DedupIndex, MediaIndex, AnnIndex, EvalRegistry, MediaRegistry and
+  * Dsir each declare a layout and call it; none keeps its own copy of a
+  * step. (The tokenizer bundle's snapshot and RollupIndex's folds keep
+  * their own upkeep: the one is a retrain, the other needs the
+  * artifact's RollupShape.)
   *
-  * [[maintainAll]] discovers every table under `root` (the walk stops
-  * at a commits dir, so composite artifacts are maintained at their
-  * sub-table granularity — exactly where compact/vacuum operate) and
-  * runs compact + vacuum on each, returning one receipt row per table
-  * (the TakedownLog discipline: an ops job leaves queryable evidence).
-  * Both primitives are optimistic-commit transactions, so the sweep is
-  * safe to run concurrently with live writers and readers; `minAgeMs`
-  * keeps versions a pinned reader might still hold.
-  *
-  * Deliberately NOT here: monoid folds ([[RollupIndex.foldPartials]]
-  * needs the artifact's RollupShape) and index-quality maintenance
-  * (retrains, re-banding) — those stay with the owning loop's cadence.
-  * This sweep is the artifact-agnostic storage layer only.
+  * [[maintainAll]] is the deployment-wide sweep: every table under a
+  * root, compacted and vacuumed by the same per-table step a layout's
+  * maintain runs, returning one receipt row per table (an ops job
+  * leaves queryable evidence). The walk stops at a commits dir, so
+  * composite artifacts are maintained at sub-table granularity. Both
+  * primitives are optimistic-commit transactions, so the sweep is safe
+  * to run beside live writers and readers; `minAgeMs` keeps versions a
+  * pinned reader might still hold.
   */
 object Artifacts {
+
+  /** How a content sub-table's rows are found from a takedown id list:
+    * the id column, the bucket contract a pruned rewrite requires, the
+    * bucket-key tuples one id hashes into, and the merge keys of a
+    * table written before its contract was recorded (rewritten whole:
+    * slower, never wrong). */
+  final case class Keying(idCol: String, bucketCols: Seq[String],
+                          keysOf: Long => Seq[Seq[Any]], legacyKeys: Seq[String])
+
+  /** Bucketed by the id column alone; a legacy table was merged on the
+    * id plus `legacyKeys`. */
+  def byId(idCol: String, legacyKeys: String*): Keying =
+    Keying(idCol, Seq(idCol), id => Seq(Seq(id)), idCol +: legacyKeys)
+
+  /** One sub-table; `content` is its takedown keying, None for model
+    * or registry tables an id takedown never touches. */
+  final case class Sub(name: String, content: Option[Keying] = None)
+
+  /** One committed artifact's lifecycle; `artifact` names it in
+    * refusals. */
+  final case class Layout(artifact: String, subs: Seq[Sub]) {
+
+    private val names = subs.map(_.name)
+
+    /** The sub-tables with a committed manifest under `path`. */
+    def present(spark: SparkSession, path: String): Seq[Sub] =
+      subs.filter(s => VersionedTable.latestManifest(spark, s"$path/${s.name}").isDefined)
+
+    /** Publish the root snapshot after a mutation
+      * ([[graft.sources.Sinks.ArtifactSnapshot.commit]]): `refresh`
+      * names the sub-tables the mutation bumped, every other one keeps
+      * its pin, and `pin` overrides both. */
+    def publish(spark: SparkSession, path: String, refresh: Seq[String] = names,
+                pin: Map[String, Long] = Map.empty): Long =
+      ArtifactSnapshot.commit(spark, path, names, refresh, pin)
+
+    /** The committed sub-tables of `kinds`, refusing a path where none
+      * is committed (a typo'd takedown that "succeeds" while the
+      * content stays servable is the one outcome a compliance op must
+      * never have). */
+    private def presentFor(spark: SparkSession, path: String, op: String,
+                           kinds: Seq[Sub], what: String): Seq[Sub] = {
+      val here = present(spark, path).filter(kinds.contains)
+      require(here.nonEmpty, s"$artifact.$op: no committed " +
+        s"${kinds.map(_.name).mkString("/")} sub-table at $path ($what)")
+      here
+    }
+
+    /** The committed content sub-tables a takedown of `ids` rewrites,
+      * refusing one that could not remove anything: an empty id list,
+      * or a path with no committed content sub-table. Reads only, so a
+      * caller with an effect of its own before [[retract]] (AnnIndex
+      * heals its snapshot) runs this first and a refusal writes
+      * nothing. */
+    def retractable(spark: SparkSession, path: String, ids: Seq[Long]): Seq[Sub] = {
+      require(ids.nonEmpty, s"$artifact.retract: empty takedown list")
+      presentFor(spark, path, "retract", subs.filter(_.content.isDefined),
+        "nothing to take down")
+    }
+
+    /** Remove every row of `ids` from each [[retractable]] sub-table,
+      * bucket-pruned under its recorded contract ([[Takedown.retractIds]]),
+      * then publish ONE snapshot refreshing exactly the rewritten
+      * sub-tables: pinned pre-takedown groups keep serving the old
+      * state by design, latest-group readers see the takedown at once.
+      * Atomic per sub-table and idempotent (an absent id is a no-op). */
+    def retract(spark: SparkSession, path: String, ids: Seq[Long]): Seq[TakedownReceipt] =
+      retractFrom(spark, path, ids, retractable(spark, path, ids))
+
+    /** [[retract]] over `content` already checked by [[retractable]]. */
+    def retractFrom(spark: SparkSession, path: String, ids: Seq[Long],
+                    content: Seq[Sub]): Seq[TakedownReceipt] = {
+      val receipts = content.map { s =>
+        val k = s.content.get
+        Takedown.retractIds(spark, path, s"$path/${s.name}", s.name, k.idCol, ids,
+          k.bucketCols, ids.flatMap(k.keysOf), k.legacyKeys)
+      }
+      publish(spark, path, refresh = receipts.map(_.subTable))
+      receipts
+    }
+
+    /** Retire one named `suite` from every committed sub-table
+      * ([[Takedown.retractSuite]]: suite-bucketed, one bucket rewrite
+      * each), one receipt per sub-table; idempotent. */
+    def unregister(spark: SparkSession, path: String, suite: String): Seq[TakedownReceipt] =
+      presentFor(spark, path, "unregister", subs, "nothing registered").map(s =>
+        Takedown.retractSuite(spark, path, s"$path/${s.name}", s.name, suite))
+
+    /** Storage maintenance on the owner's cadence: compact fragmented
+      * buckets and vacuum superseded versions of each committed
+      * sub-table, shielding the pins of the newest `protectGroups` root
+      * snapshots from the keep budget so a job pinned to a recent group
+      * keeps reading byte-identically.
+      *
+      * `minAgeMs = 0` is correct only where no writer can be live (the
+      * single-admitter loops maintain while quiescent); size
+      * `keepVersions` to the longest concurrent serve: a reader pinned
+      * further back refuses cleanly, never sees partial data. */
+    def maintain(spark: SparkSession, path: String, maxFilesPerBucket: Int,
+                 keepVersions: Int, minAgeMs: Long, protectGroups: Int): Unit = {
+      val pins = ArtifactSnapshot.pinsRecent(spark, path, math.max(protectGroups, 1))
+      present(spark, path).foreach(s =>
+        upkeep(spark, s"$path/${s.name}", maxFilesPerBucket, keepVersions, minAgeMs,
+          pins.getOrElse(s.name, Set.empty)))
+    }
+
+    /** Sub-table `sub` at a PINNED manifest version — the
+      * pipeline-snapshot read path. Strict: a vacuumed version refuses,
+      * never falls forward (keep the pin inside the retention budget). */
+    def readAt(spark: SparkSession, path: String, sub: String, version: Long): DataFrame = {
+      val p = s"$path/$sub"
+      require(VersionedTable.manifestExists(spark, p, version),
+        s"$artifact.readAt: pinned version $version no longer exists at $p " +
+          "— retention outran the pin; re-pin to a recent snapshot")
+      VersionedTable.read(spark, p, Some(version))
+    }
+  }
+
+  /** One table's storage upkeep — compact, then vacuum past the newest
+    * `keep` versions except `protect` — shared by [[Layout.maintain]]
+    * and [[maintainAll]]. */
+  private def upkeep(spark: SparkSession, table: String, maxFilesPerBucket: Int,
+                     keep: Int, minAgeMs: Long, protect: Set[Long]): Unit = {
+    VersionedTable.compact(spark, table, maxFilesPerBucket)
+    VersionedTable.vacuumVersioned(spark, table, keep = keep, minAgeMs = minAgeMs,
+      protect = protect)
+  }
 
   /** One table's maintenance receipt: versions on disk before/after
     * (vacuum's observable) and the latest version after the sweep
@@ -111,8 +237,7 @@ object Artifacts {
       .partition(PipelineSnapshot.isPipelineRoot(spark, _))
     val artPins: Seq[(String, Set[Long])] =
       artRoots.flatMap { r =>
-        graft.sources.Sinks.ArtifactSnapshot
-          .pinsRecent(spark, r, math.max(protectGroups, 1))
+        ArtifactSnapshot.pinsRecent(spark, r, math.max(protectGroups, 1))
           .map { case (sub, vs) => s"$r/$sub" -> vs }
       }
     val pipePins: Seq[(String, Set[Long])] =
@@ -122,10 +247,8 @@ object Artifacts {
       (artPins ++ pipePins).groupMapReduce(_._1)(_._2)(_ ++ _)
     discover(spark, root).map { t =>
       val before = VersionedTable.versionCount(spark, t)
-      VersionedTable.compact(spark, t, maxFilesPerBucket)
-      VersionedTable.vacuumVersioned(spark, t, keep = keepVersions,
-        minAgeMs = minAgeMs,
-        protect = pins.getOrElse(t, Set.empty))
+      upkeep(spark, t, maxFilesPerBucket, keepVersions, minAgeMs,
+        pins.getOrElse(t, Set.empty))
       val v = VersionedTable.latestManifest(spark, t).map(_._1).getOrElse(-1L)
       MaintainReport(t, v, before, VersionedTable.versionCount(spark, t))
     }

@@ -61,19 +61,25 @@ object DedupIndex {
   private def sigsPath(path: String) = s"$path/sigs"
   private def bandsPath(path: String) = s"$path/bands"
 
-  /** Sub-table names of the composite artifact, as recorded in its root
-    * snapshot (rsh is the opt-in containment lens). Readers resolve
-    * through [[graft.sources.Sinks.ArtifactSnapshot]] — one atomic
-    * (fps_v, sigs_v, bands_v, rsh_v) tuple per mutation, so a serve
-    * landing mid-extend can never match a doc's fingerprint in the new
-    * fps version while probing its bands in the old one (r11, the
-    * AnnIndex root-snapshot layer applied to all three index families).
+  /** The artifact's lifecycle. Every sub-table is content keyed by
+    * doc_id: bands bucket by (doc_id, b) with b < [[Dedup.NumBands]],
+    * so a takedown enumerates ids × bands; rsh (the opt-in containment
+    * lens) buckets by doc_id, but one committed before its contract was
+    * recorded was bucketed by (doc_id, h) and is rewritten whole.
+    * Readers resolve through the root snapshot — one atomic (fps_v,
+    * sigs_v, bands_v, rsh_v) tuple per mutation, so a serve landing
+    * mid-extend can never match a doc's fingerprint in the new fps
+    * version while probing its bands in the old one.
     */
-  private val SubNames = Seq("fps", "sigs", "bands", "rsh")
-
-  private def commitSnapshot(spark: SparkSession, path: String,
-                             refresh: Seq[String]): Unit =
-    graft.sources.Sinks.ArtifactSnapshot.commit(spark, path, SubNames, refresh)
+  private val layout = {
+    import Artifacts.{Keying, Sub, byId}
+    Artifacts.Layout("DedupIndex", Seq(
+      Sub("fps", Some(byId("doc_id"))),
+      Sub("sigs", Some(byId("doc_id"))),
+      Sub("bands", Some(Keying("doc_id", Seq("doc_id", "b"),
+        id => (0 until Dedup.NumBands).map(b => Seq(id, b)), Seq("doc_id", "b")))),
+      Sub("rsh", Some(byId("doc_id", "h")))))
+  }
 
   /** The three index frames of a (doc_id, text) corpus — shared by the
     * committed build and the in-session oracle query, so what the
@@ -108,7 +114,7 @@ object DedupIndex {
     // the root snapshot publishes LAST: a crash above leaves readers on
     // the previous consistent (fps, sigs, bands) tuple, and the replay
     // (this merge is idempotent) re-lands the data and publishes
-    commitSnapshot(spark, path, refresh = Seq("fps", "sigs", "bands"))
+    layout.publish(spark, path, refresh = Seq("fps", "sigs", "bands"))
   }
 
   /** Incremental ingest — the same keyed merge as [[build]], named for
@@ -117,98 +123,38 @@ object DedupIndex {
   def extend(newDocs: DataFrame, path: String, buildV: Long): Unit =
     build(newDocs, path, buildV)
 
-  /** Storage maintenance for the three state tables — what a
-    * long-running admission stream must run on a cadence or the index
-    * directory grows WITHOUT BOUND: every extend commits a new version,
-    * and the superseded versions' data dirs stay on disk for pinned
-    * readers (plus multi-file buckets from parallel writes). Per
-    * sub-table: [[VersionedTable.compact]] collapses fragmented buckets
-    * (optimistic snapshot-isolated commit, no-op when nothing is
-    * fragmented), then [[VersionedTable.vacuumVersioned]] reclaims
-    * manifests/dirs older than the newest `keepVersions`.
-    *
-    * `minAgeMs = 0` is correct ONLY in the single-admitter regime this
-    * loop runs (the admitter is quiescent while maintaining — no live
-    * writer's staged-but-unpublished dirs can exist); size
-    * `keepVersions` to the longest concurrent SERVE: a reader pinned
-    * more than `keepVersions` extends back fails cleanly (missing
-    * manifest), never sees partial data.
+  /** Storage maintenance for the state tables — what a long-running
+    * admission stream must run on a cadence or the index directory
+    * grows WITHOUT BOUND: every extend commits a new version, and the
+    * superseded versions' data dirs stay on disk for pinned readers
+    * (plus multi-file buckets from parallel writes). See
+    * [[Artifacts.Layout.maintain]].
     */
   def maintain(spark: SparkSession, path: String, maxFilesPerBucket: Int = 1,
                keepVersions: Int = 8, minAgeMs: Long = 0L,
-               protectGroups: Int = 2): Unit = {
-    // root-snapshot pins survive the keep budget (the Artifacts
-    // .maintainAll protection, mirrored here — this loop-local cadence
-    // must not be the one maintenance path that can age a pin out, r11
-    // review); protectGroups widens the shield to the newest N groups
-    // so NAMED snapshots (readAt) keep their retention contract (r12)
-    val pins = graft.sources.Sinks.ArtifactSnapshot
-      .pinsRecent(spark, path, math.max(protectGroups, 1))
-    // rsh only when the opt-in containment lens exists at this path
-    val sub = Seq("fps" -> fpsPath(path), "sigs" -> sigsPath(path),
-      "bands" -> bandsPath(path)) ++
-      Some("rsh" -> rshPath(path))
-        .filter(t => VersionedTable.latestManifest(spark, t._2).isDefined)
-    for ((name, p) <- sub) {
-      VersionedTable.compact(spark, p, maxFilesPerBucket)
-      VersionedTable.vacuumVersioned(spark, p, keep = keepVersions,
-        minAgeMs = minAgeMs, protect = pins.getOrElse(name, Set.empty))
-    }
-  }
+               protectGroups: Int = 2): Unit =
+    layout.maintain(spark, path, maxFilesPerBucket, keepVersions, minAgeMs, protectGroups)
 
   /** Takedown / retraction — the compliance op that completes the
     * artifact lifecycle (build / extend / serve / compact / vacuum /
     * RETRACT): remove every index row belonging to `docIds` from every
     * sub-table present (fps/sigs/bands, plus the opt-in containment
-    * lens when it exists at this path). BUCKET-PRUNED via
-    * [[VersionedTable.replaceBuckets]]: each sub-table's bucket id is a
-    * pure function of keys the takedown list determines — doc_id for
-    * fps/sigs/rsh, (doc_id, b) with b < [[Dedup.NumBands]] for bands —
+    * lens when it exists at this path). BUCKET-PRUNED: each sub-table's
+    * bucket id is a pure function of keys the takedown list determines,
     * so the touched-bucket set is computed FROM the id list (hashed on
-    * the driver exactly as the writer hashed, no job) and a
-    * 10-doc takedown on a multi-TB index rewrites a handful of bucket
-    * dirs, never the table. Still ATOMIC per sub-table (readers see the
-    * old or the new version, never a half-retracted table), race-safe
-    * against a concurrent extend (the loser refolds the winner's
-    * buckets), and IDEMPOTENT (retracting an absent id is a no-op —
-    * not even a version bump when its buckets were never written).
-    * Effective at serve immediately: serve reads only committed rows,
-    * so a probe that matched a retracted doc stops matching it — a
-    * duplicate of removed content is ADMITTED afterwards, which is
-    * exactly the takedown semantics (the content is no longer in the
-    * corpus, so its next arrival is legitimately new). The ids list is
-    * takedown-request-sized (a constant-size argument, not a corpus
-    * collect).
+    * the driver exactly as the writer hashed, no job) and a 10-doc
+    * takedown on a multi-TB index rewrites a handful of bucket dirs,
+    * never the table. Atomic per sub-table, race-safe against a
+    * concurrent extend (the loser refolds the winner's buckets), and
+    * IDEMPOTENT. Effective at serve immediately: a duplicate of removed
+    * content is ADMITTED afterwards, which is exactly the takedown
+    * semantics (the content is no longer in the corpus, so its next
+    * arrival is legitimately new). Refuses a path with no committed
+    * sub-table before any effect ([[Artifacts.Layout.retract]]).
     */
   def retract(spark: SparkSession, path: String,
-              docIds: Seq[Long]): Seq[TakedownReceipt] = {
-    require(docIds.nonEmpty, "DedupIndex.retract: empty takedown list")
-    val idKeys = docIds.map(Seq(_))
-    // bands buckets hash (doc_id, b): b is bounded by NumBands, so the
-    // touched set enumerates ids × bands — still takedown-request-sized
-    val bandKeys = for (id <- docIds; b <- 0 until Dedup.NumBands) yield Seq(id, b)
-    // (path, prunable bucket cols, their key tuples, legacy merge keys)
-    val sub: Seq[(String, Seq[String], Seq[Seq[Any]], Seq[String])] = Seq(
-      (fpsPath(path), Seq("doc_id"), idKeys, Seq("doc_id")),
-      (sigsPath(path), Seq("doc_id"), idKeys, Seq("doc_id")),
-      (bandsPath(path), Seq("doc_id", "b"), bandKeys, Seq("doc_id", "b"))) ++
-      Some((rshPath(path), Seq("doc_id"), idKeys, Seq("doc_id", "h")))
-        .filter(t => VersionedTable.latestManifest(spark, t._1).isDefined)
-    // Prune ONLY when the table's recorded bucket contract says these
-    // buckets are where the ids live. An rsh table committed before the
-    // contract existed was bucketed by (doc_id, h) — pruning by doc_id
-    // there would miss rows and report a takedown done that wasn't (the
-    // silent compliance failure); Takedown.retractIds rewrites such a
-    // table whole instead.
-    val receipts = sub.map { case (p, bucketCols, keys, legacyKeys) =>
-      Takedown.retractIds(spark, path, p, p.substring(p.lastIndexOf('/') + 1),
-        "doc_id", docIds, bucketCols, keys, legacyKeys)
-    }
-    // the retract must be VISIBLE at the next snapshot-resolved serve —
-    // refresh exactly the sub-tables the takedown rewrote
-    commitSnapshot(spark, path, refresh = receipts.map(_.subTable))
-    receipts
-  }
+              docIds: Seq[Long]): Seq[TakedownReceipt] =
+    layout.retract(spark, path, docIds)
 
   /** Classify a (doc_id, text) batch against corpus index FRAMES:
     * (doc_id, kind, match_id) with kind ∈ exact|near|new, match_id the
@@ -433,8 +379,6 @@ object DedupIndex {
 
   // ------------------- C72: committed containment lens -------------------
 
-  private def rshPath(path: String) = s"$path/rsh"
-
   /** C72 — the CONTAINMENT verdict the exact/near serve structurally
     * lacks: an arriving doc that is a QUOTE of an existing corpus doc
     * (a prefix, an excerpt, a pull-quote page) has Jaccard ≈ |A|/|B|
@@ -462,11 +406,11 @@ object DedupIndex {
     // a doc's shingle rows land in one bucket, so [[retract]] can compute
     // the touched buckets from the takedown id list alone — the h values
     // (unbounded, known only to the data) never need enumerating.
-    VersionedTable.mergeUpsert(spark, rshPath(path),
+    VersionedTable.mergeUpsert(spark, s"$path/rsh",
       Dedup.shingleHashes(documents).withColumn("build_v", lit(buildV)),
       Seq("doc_id", "h"), "build_v", numBuckets = 16,
       bucketKeys = Seq("doc_id"))
-    commitSnapshot(spark, path, refresh = Seq("rsh"))
+    layout.publish(spark, path, refresh = Seq("rsh"))
   }
 
   /** Incremental ingest of the containment lens — same keyed merge. */

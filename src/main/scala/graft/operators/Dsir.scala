@@ -278,6 +278,9 @@ object Dsir {
 
   private def lrPath(path: String) = s"$path/lr"
 
+  /** The committed ratio table: one plain table, no root snapshot. */
+  private val layout = Artifacts.Layout("Dsir", Seq(Artifacts.Sub("lr")))
+
   /** Commit the trained ratio table through the transactional format —
     * the same promotion the codebooks (C61) got: a serving/streaming
     * gate LOADS the model instead of retraining, and a retrain commits
@@ -308,13 +311,8 @@ object Dsir {
     * read path: refuses on a vacuumed version (the named-read
     * strictness; keep the pin inside the retention window).
     */
-  def loadLrAt(spark: SparkSession, path: String, version: Long): Array[Long] = {
-    val p = lrPath(path)
-    require(graft.sources.Sinks.VersionedTable.manifestExists(spark, p, version),
-      s"Dsir.loadLrAt: pinned version $version no longer exists at $p — " +
-        "retention outran the pin; re-pin to a recent snapshot")
-    lrFrom(graft.sources.Sinks.VersionedTable.read(spark, p, Some(version)))
-  }
+  def loadLrAt(spark: SparkSession, path: String, version: Long): Array[Long] =
+    lrFrom(layout.readAt(spark, path, "lr", version))
 
   private def lrFrom(df: DataFrame): Array[Long] = {
     val rows = df.select("bkt", "lr").collect()

@@ -30,6 +30,12 @@ object EvalRegistry {
   private val toks = split(col("text"), " ")
   private def regPath(p: String) = s"$p/eval_shingles"
 
+  /** The registry's lifecycle: the exact lens and the two near lenses
+    * ([[registerNear]]), each a suite-bucketed table; no root snapshot
+    * (pipeline snapshots pin each lens's manifest version). */
+  private val layout = Artifacts.Layout("EvalRegistry",
+    Seq("eval_shingles", "eval_shingles_w3", "eval_bands").map(Artifacts.Sub(_)))
+
   /** Distinct 64-bit (16 hex char) shingle-hash fingerprints of a
     * benchmark frame — the SAME hash C15 joins on, so the two lenses
     * can never classify apart.
@@ -69,20 +75,16 @@ object EvalRegistry {
       bucketKeys = Seq("suite"))
 
   /** Retire a benchmark suite — the registry's takedown: drop the
-    * suite's rows (bucket-pruned: suites bucket whole, so the touched
-    * set is one bucket per named suite), leaving every OTHER suite's
-    * rows — including hashes the retired suite shared — still
-    * protecting. Idempotent; refuses to empty the registry (drop the
-    * table to retire the last suite).
+    * suite's rows from every registered lens (bucket-pruned: suites
+    * bucket whole, so each lens rewrites one bucket), leaving every
+    * OTHER suite's rows — including hashes the retired suite shared —
+    * still protecting. One receipt per lens present (idsRequested = 1
+    * named suite; idsFound = its rows there, 0 on an idempotent
+    * re-run); refuses a path with no registry at all.
     */
   def unregister(spark: SparkSession, path: String,
-                 suite: String): TakedownReceipt = {
-    val p = regPath(path)
-    // idsRequested = 1 named suite; idsFound counts the suite's
-    // fingerprint rows actually present (0 = retiring a never-registered
-    // suite, the idempotent re-run)
-    Takedown.retractSuite(spark, path, p, "eval_shingles", suite)
-  }
+                 suite: String): Seq[TakedownReceipt] =
+    layout.unregister(spark, path, suite)
 
   def load(spark: SparkSession, path: String): DataFrame =
     graft.sources.Sinks.VersionedTable.read(spark, regPath(path))
@@ -99,14 +101,8 @@ object EvalRegistry {
     * path: refuses on a vacuumed version (never silently falls forward;
     * keep the pin inside the maintenance sweep's retention budget).
     */
-  def loadAt(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val p = regPath(path)
-    require(graft.sources.Sinks.VersionedTable.manifestExists(spark, p, version),
-      s"EvalRegistry.loadAt: pinned version $version no longer exists at $p " +
-        "— retention outran the pin; re-pin to a recent snapshot")
-    graft.sources.Sinks.VersionedTable.read(spark, p, Some(version))
-      .select("h").distinct()
-  }
+  def loadAt(spark: SparkSession, path: String, version: Long): DataFrame =
+    layout.readAt(spark, path, "eval_shingles", version).select("h").distinct()
 
   /** True iff the registry at `path` has at least one committed version —
     * the cheap existence probe stream starters use to fail fast on a
@@ -214,14 +210,8 @@ object EvalRegistry {
   /** [[loadNear]] at a PINNED manifest version — the pipeline-snapshot
     * read path ([[loadAt]]'s near twin): refuses on a vacuumed version.
     */
-  def loadNearAt(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val p = nearPath(path)
-    require(graft.sources.Sinks.VersionedTable.manifestExists(spark, p, version),
-      s"EvalRegistry.loadNearAt: pinned version $version no longer exists at " +
-        s"$p — retention outran the pin; re-pin to a recent snapshot")
-    graft.sources.Sinks.VersionedTable.read(spark, p, Some(version))
-      .select("h").distinct()
-  }
+  def loadNearAt(spark: SparkSession, path: String, version: Long): DataFrame =
+    layout.readAt(spark, path, "eval_shingles_w3", version).select("h").distinct()
 
   /** True iff the NEAR fingerprints are committed — the stream-start
     * fail-fast probe for loops gating with [[decontaminateNear]]. */

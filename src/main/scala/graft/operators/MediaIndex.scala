@@ -23,7 +23,7 @@ import graft.sources.Sinks.VersionedTable
   *      an ingest), and
   *  (d) takedown is first-class and BUCKET-PRUNED: retracting a media
   *      id rewrites only the bucket its fingerprint row hashes into
-  *      ([[VersionedTable.replaceBuckets]]), after which the retracted
+  *      ([[Artifacts.Layout.retract]]), after which the retracted
   *      content stops matching at serve immediately.
   *
   * Layout under `path/` (each sub-table opt-in, keyed and BUCKETED by
@@ -40,23 +40,25 @@ import graft.sources.Sinks.VersionedTable
   */
 object MediaIndex {
 
-  private def imgPath(path: String) = s"$path/img"
-  private def vidPath(path: String) = s"$path/vid"
-  private def audPath(path: String) = s"$path/aud"
-
-  private def subTables(path: String) =
-    Seq(imgPath(path), vidPath(path), audPath(path))
-
   /** Per-modality descriptor — the one place a sub-table's fingerprint
-    * column, decode kernel, and banding parameters live, so the
-    * admission loop ([[graft.streaming.EventStream.mediaAdmitBatch]])
-    * and the serve/extend facades dispatch off the same row instead of
-    * three hand-kept copies.
+    * column, decode kernel, and banding parameters live, so build,
+    * extend, load and serve, the admission loop
+    * ([[graft.streaming.EventStream.mediaAdmitBatch]]) and the banned-
+    * media registry ([[MediaRegistry]]) dispatch off the same row
+    * instead of three hand-kept copies.
     */
   private[graft] final case class Mode(name: String, fpCol: String,
       kernel: (DataFrame, String) => DataFrame,
       numBands: Int, bandBits: Int, threshold: Int) {
     def sub(path: String): String = s"$path/$name"
+
+    /** The banded probe join of already-fingerprinted `probe` rows
+      * (keyed `probeId`) against `index` (doc_id, fpCol): (probeId,
+      * doc_id, hamming ≤ threshold). */
+    def probeJoin(probe: DataFrame, probeId: String, index: DataFrame,
+                  indexId: String = "doc_id"): DataFrame =
+      BandedPairs.probeJoin(probe, probeId, index, indexId, fpCol,
+        numBands, bandBits, threshold)
   }
 
   private[graft] val modes: Map[String, Mode] = Map(
@@ -74,22 +76,47 @@ object MediaIndex {
     modes.getOrElse(modality, throw new IllegalArgumentException(
       s"MediaIndex: unknown modality '$modality' (expected one of ${modes.keys.mkString("/")})"))
 
+  /** The artifact's lifecycle: one sub-table per modality, keyed and
+    * bucketed by doc_id. The root snapshot exists for REPRODUCIBLE
+    * serving ([[loadFpsAt]] / a probe stream pinned to one group keeps
+    * matching exactly that state across later extends and retracts)
+    * and for pipeline snapshots to pin the media index as one
+    * reference; per-table atomicity already covers the independent
+    * img/vid/aud serves.
+    */
+  private val layout = Artifacts.Layout("MediaIndex",
+    Seq("img", "vid", "aud").map(Artifacts.Sub(_, Some(Artifacts.byId("doc_id")))))
+
   /** Extend a modality's sub-table from an ALREADY-FINGERPRINTED
-    * (doc_id, fpCol) frame — the admission loop decodes each batch's
-    * payloads exactly once and feeds the same fps frame to both the
-    * serve probe and this extend (re-running the codec kernel per
-    * effect would double the dominant per-batch cost).
+    * (doc_id, fpCol) frame as version `buildV` — the admission loop
+    * decodes each batch's payloads exactly once and feeds the same fps
+    * frame to both the serve probe and this extend (re-running the
+    * codec kernel per effect would double the dominant per-batch cost).
+    * Keyed merge: a new batch extends incrementally; a replayed batch
+    * is an idempotent no-op rewrite.
     */
   private[graft] def extendFps(fps: DataFrame, path: String,
                                modality: String, buildV: Long): Unit = {
     val m = mode(modality)
-    commitFps(fps, m.sub(path), m.fpCol, buildV)
+    VersionedTable.mergeUpsert(fps.sparkSession, m.sub(path),
+      fps.select(col("doc_id"), col(m.fpCol), lit(buildV).as("build_v")),
+      Seq("doc_id"), "build_v", numBuckets = 16)
+    layout.publish(fps.sparkSession, path, refresh = Seq(m.name))
   }
 
+  /** Fingerprint `media` (doc_id, payload) with the modality's decode
+    * kernel (undecodable payloads quarantined by its null filter) and
+    * commit into the modality's sub-table as version `buildV` — the
+    * same keyed merge builds and extends.
+    */
+  def build(media: DataFrame, path: String, modality: String, buildV: Long = 0L): Unit =
+    extendFps(mode(modality).kernel(media, "doc_id"), path, modality, buildV)
+
   /** The committed (doc_id, fpCol) fingerprints for one modality at the
-    * latest version. */
-  private[graft] def loadFps(spark: SparkSession, path: String,
-                             modality: String): DataFrame = {
+    * latest version (a streaming probe snapshots this at stream start —
+    * restart the stream to pick up a newer index version).
+    */
+  def loadFps(spark: SparkSession, path: String, modality: String): DataFrame = {
     val m = mode(modality)
     VersionedTable.read(spark, m.sub(path)).select("doc_id", m.fpCol)
   }
@@ -101,68 +128,6 @@ object MediaIndex {
     */
   def isBuilt(spark: SparkSession, path: String, modality: String): Boolean =
     VersionedTable.latestManifest(spark, mode(modality).sub(path)).isDefined
-
-  /** Sub-table names as recorded in the root snapshot manifest. */
-  private val SubNames = Seq("img", "vid", "aud")
-
-  /** Publish the artifact's root snapshot refreshing the sub-tables a
-    * mutation bumped — the named-snapshot parity text/embeddings got in
-    * r11 (r12): per-table atomicity already covers the independent
-    * img/vid/aud serves, so the GROUP layer here exists for
-    * REPRODUCIBLE serving ([[loadFpsAt]] / a probe stream pinned to one
-    * group keeps matching exactly that state across later extends and
-    * retracts) and for pipeline snapshots to pin the media index as one
-    * reference.
-    */
-  private def commitSnapshot(spark: SparkSession, path: String,
-                             refresh: Seq[String]): Long =
-    graft.sources.Sinks.ArtifactSnapshot.commit(spark, path, SubNames, refresh)
-
-  private def commitFps(fps: DataFrame, sub: String, fpCol: String,
-                        buildV: Long): Unit = {
-    VersionedTable.mergeUpsert(fps.sparkSession, sub,
-      fps.select(col("doc_id"), col(fpCol), lit(buildV).as("build_v")),
-      Seq("doc_id"), "build_v", numBuckets = 16)
-    commitSnapshot(fps.sparkSession, sub.substring(0, sub.lastIndexOf('/')),
-      Seq(sub.substring(sub.lastIndexOf('/') + 1)))
-  }
-
-  /** Fingerprint `media` (doc_id, payload — real decode kernel,
-    * undecodable payloads quarantined by the kernel's null filter) and
-    * commit into the image sub-table as version `buildV`. Keyed merge:
-    * a new batch extends incrementally; a replayed batch is an
-    * idempotent no-op rewrite.
-    */
-  def buildImages(media: DataFrame, path: String, buildV: Long = 0L): Unit =
-    commitFps(ImageDedup.phashPayloads(media), imgPath(path), "phash", buildV)
-
-  /** Incremental image ingest — the same keyed merge, named for the
-    * call site. */
-  def extendImages(media: DataFrame, path: String, buildV: Long): Unit =
-    buildImages(media, path, buildV)
-
-  /** Fingerprint and commit video clips — [[buildImages]]' twin over
-    * the temporal-hash kernel. */
-  def buildVideos(media: DataFrame, path: String, buildV: Long = 0L): Unit =
-    commitFps(VideoDedup.vhashPayloads(media), vidPath(path), "vhash", buildV)
-
-  def extendVideos(media: DataFrame, path: String, buildV: Long): Unit =
-    buildVideos(media, path, buildV)
-
-  /** Fingerprint and commit audio clips — the energy-sign kernel over a
-    * real WAV decode, completing per-modality takedown parity. */
-  def buildAudio(media: DataFrame, path: String, buildV: Long = 0L): Unit =
-    commitFps(AudioDedup.fpPayloads(media), audPath(path), "afp", buildV)
-
-  def extendAudio(media: DataFrame, path: String, buildV: Long): Unit =
-    buildAudio(media, path, buildV)
-
-  /** The committed image fingerprints at the latest version (a
-    * streaming probe snapshots this at stream start — restart the
-    * stream to pick up a newer index version).
-    */
-  def loadImageFps(spark: SparkSession, path: String): DataFrame =
-    VersionedTable.read(spark, imgPath(path)).select("doc_id", "phash")
 
   /** The latest root-snapshot (group) version — what a reproducible
     * serving job pins and [[loadFpsAt]] resolves. None for artifacts
@@ -187,37 +152,24 @@ object MediaIndex {
       .select("doc_id", m.fpCol)
   }
 
-  def loadVideoFps(spark: SparkSession, path: String): DataFrame =
-    VersionedTable.read(spark, vidPath(path)).select("doc_id", "vhash")
-
-  def loadAudioFps(spark: SparkSession, path: String): DataFrame =
-    VersionedTable.read(spark, audPath(path)).select("doc_id", "afp")
-
-  /** Probe (media_id, payload) against the COMMITTED image index:
-    * (media_id, doc_id, hamming ≤ threshold). Same kernel + banded
-    * probe join as the in-session path; `media` may be a streaming
-    * frame (stream-static join — see EventStream.streamingImagePhashServe).
+  /** Probe (media_id, payload) against the committed `fps` of one
+    * modality: (media_id, doc_id, hamming ≤ the modality's threshold).
+    * Each incoming payload is fingerprinted by the modality's STATELESS
+    * decode kernel (real ImageIO / RIFF-AVI / WAV decode in
+    * mapPartitions) and checked via the banded probe join. Every step
+    * is a projection, explode, or stream-static equi-join, so `media`
+    * may be a streaming frame: append mode, NO state store, and the
+    * first-equal-band rule dedups multi-band matches statelessly.
+    * Undecodable payloads quarantine in the kernel's null filter.
     */
-  def serveImages(media: DataFrame, path: String,
-                  threshold: Int = ImageDedup.HammingThreshold): DataFrame =
-    BandedPairs.probeJoin(
-      ImageDedup.phashPayloads(media, "media_id"), "media_id",
-      loadImageFps(media.sparkSession, path), "doc_id", "phash",
-      ImageDedup.NumBands, ImageDedup.BandBits, threshold)
+  def matches(media: DataFrame, fps: DataFrame, modality: String): DataFrame = {
+    val m = mode(modality)
+    m.probeJoin(m.kernel(media, "media_id"), "media_id", fps)
+  }
 
-  def serveVideos(media: DataFrame, path: String,
-                  threshold: Int = VideoDedup.HammingThreshold): DataFrame =
-    BandedPairs.probeJoin(
-      VideoDedup.vhashPayloads(media, "media_id"), "media_id",
-      loadVideoFps(media.sparkSession, path), "doc_id", "vhash",
-      VideoDedup.NumBands, VideoDedup.BandBits, threshold)
-
-  def serveAudio(media: DataFrame, path: String,
-                 threshold: Int = AudioDedup.HammingThreshold): DataFrame =
-    BandedPairs.probeJoin(
-      AudioDedup.fpPayloads(media, "media_id"), "media_id",
-      loadAudioFps(media.sparkSession, path), "doc_id", "afp",
-      AudioDedup.NumBands, AudioDedup.BandBits, threshold)
+  /** [[matches]] against the COMMITTED index at `path`, latest version. */
+  def serve(media: DataFrame, path: String, modality: String): DataFrame =
+    matches(media, loadFps(media.sparkSession, path, modality), modality)
 
   /** Takedown — BUCKET-PRUNED like [[DedupIndex.retract]]: every
     * sub-table buckets by doc_id, so the touched-bucket set comes
@@ -228,48 +180,14 @@ object MediaIndex {
     * removed content legitimately probes as novel afterwards.
     */
   def retract(spark: SparkSession, path: String,
-              docIds: Seq[Long]): Seq[TakedownReceipt] = {
-    require(docIds.nonEmpty, "MediaIndex.retract: empty takedown list")
-    val present = subTables(path)
-      .filter(sub => VersionedTable.latestManifest(spark, sub).isDefined)
-    // fail LOUDLY on a path with no index at all — a typo'd takedown
-    // that "succeeds" while the fingerprints stay servable is the one
-    // outcome a compliance op must never have
-    require(present.nonEmpty,
-      s"MediaIndex.retract: no committed img/vid/aud sub-table at $path")
-    // bucket-pruned under the doc_id contract; a legacy table without a
-    // recorded contract is rewritten whole: slower, never wrong
-    val receipts = present.map { sub =>
-      Takedown.retractIds(spark, path, sub, sub.substring(sub.lastIndexOf('/') + 1),
-        "doc_id", docIds, Seq("doc_id"), docIds.map(Seq(_)), Seq("doc_id"))
-    }
-    // ONE snapshot refreshing exactly the rewritten sub-tables, as the
-    // takedown's last step (the DedupIndex.retract discipline): pinned
-    // pre-retract groups keep serving the old state BY DESIGN (that is
-    // what a named snapshot means); latest-group readers see the
-    // retraction immediately
-    commitSnapshot(spark, path,
-      present.map(s => s.substring(s.lastIndexOf('/') + 1)))
-    receipts
-  }
+              docIds: Seq[Long]): Seq[TakedownReceipt] =
+    layout.retract(spark, path, docIds)
 
   /** Storage maintenance on the ingest cadence — compact fragmented
     * buckets, vacuum superseded versions; same contract as
     * [[DedupIndex.maintain]]. */
   def maintain(spark: SparkSession, path: String, maxFilesPerBucket: Int = 1,
                keepVersions: Int = 8, minAgeMs: Long = 0L,
-               protectGroups: Int = 2): Unit = {
-    // named-snapshot retention (the DedupIndex.maintain contract, r12):
-    // the newest N groups' pins survive the keep budget, so a probe
-    // pinned to a recent group keeps serving byte-identically
-    val pins = graft.sources.Sinks.ArtifactSnapshot
-      .pinsRecent(spark, path, math.max(protectGroups, 1))
-    for (sub <- subTables(path)
-         if VersionedTable.latestManifest(spark, sub).isDefined) {
-      val name = sub.substring(sub.lastIndexOf('/') + 1)
-      VersionedTable.compact(spark, sub, maxFilesPerBucket)
-      VersionedTable.vacuumVersioned(spark, sub, keep = keepVersions,
-        minAgeMs = minAgeMs, protect = pins.getOrElse(name, Set.empty))
-    }
-  }
+               protectGroups: Int = 2): Unit =
+    layout.maintain(spark, path, maxFilesPerBucket, keepVersions, minAgeMs, protectGroups)
 }

@@ -31,8 +31,15 @@ import graft.sources.Sinks.VersionedTable
   */
 object MediaRegistry {
 
+  private def sub(modality: String) = s"banned_${MediaIndex.mode(modality).name}"
+
   def tablePath(path: String, modality: String): String =
-    s"${path.stripSuffix("/")}/banned_${MediaIndex.mode(modality).name}"
+    s"${path.stripSuffix("/")}/${sub(modality)}"
+
+  /** One modality's hash list: a single suite-bucketed table, no root
+    * snapshot (readers capture its manifest version at read). */
+  private def layout(modality: String) =
+    Artifacts.Layout("MediaRegistry", Seq(Artifacts.Sub(sub(modality))))
 
   /** Register banned media BY PAYLOAD: the modality's codec kernel
     * fingerprints them here, once, and only the fingerprints commit.
@@ -62,15 +69,9 @@ object MediaRegistry {
   /** [[load]] at a PINNED manifest version (the capture-at-read rule;
     * refuses on a vacuumed version). */
   def loadAt(spark: SparkSession, path: String, modality: String,
-             version: Long): DataFrame = {
-    val m = MediaIndex.mode(modality)
-    val p = tablePath(path, modality)
-    require(VersionedTable.manifestExists(spark, p, version),
-      s"MediaRegistry.loadAt: pinned version $version no longer exists at " +
-        s"$p — retention outran the pin; re-pin to a recent snapshot")
-    VersionedTable.read(spark, p, Some(version))
-      .select("banned_id", m.fpCol).distinct()
-  }
+             version: Long): DataFrame =
+    layout(modality).readAt(spark, path.stripSuffix("/"), sub(modality), version)
+      .select("banned_id", MediaIndex.mode(modality).fpCol).distinct()
 
   def isRegistered(spark: SparkSession, path: String,
                    modality: String): Boolean =
@@ -79,11 +80,8 @@ object MediaRegistry {
   /** Retire one hash-list suite — bucket-pruned like
     * [[EvalRegistry.unregister]]; idempotent. */
   def unregister(spark: SparkSession, path: String, modality: String,
-                 suite: String): TakedownReceipt = {
-    val p = tablePath(path, modality)
-    Takedown.retractSuite(spark, path, p,
-      s"banned_${MediaIndex.mode(modality).name}", suite)
-  }
+                 suite: String): TakedownReceipt =
+    layout(modality).unregister(spark, path.stripSuffix("/"), suite).head
 
   /** [[retroTakedown]]'s report — the [[Corpus.RetroReport]] shape:
     * corpus items fingerprinted, items matching the hash list, items
@@ -121,8 +119,7 @@ object MediaRegistry {
     val fps = m.kernel(corpus, "media_id").persist()
     try {
       val scanned = fps.count()
-      val hitIdsDf = BandedPairs.probeJoin(fps, "media_id",
-        banned, "banned_id", m.fpCol, m.numBands, m.bandBits, m.threshold)
+      val hitIdsDf = m.probeJoin(fps, "media_id", banned, "banned_id")
         .select("media_id").distinct()
       val nHits = hitIdsDf.count()
       require(nHits <= maxHits,

@@ -763,116 +763,30 @@ object EventStream {
       .select(batch.columns.toIndexedSeq.map(qc): _*)
   }
 
-  /** Streaming perceptual image dedup (C12b's continuous twin): each
-    * incoming media payload is fingerprinted by the STATELESS phash
-    * kernel (real ImageIO decode in mapPartitions — the same body as
-    * the batch operator, running unchanged on the streaming frame) and
-    * checked against a static committed phash index via the banded
-    * probe join. Every step is a projection, explode, or stream-static
-    * equi-join: append mode, NO state store, and the first-equal-band
-    * rule dedups multi-band matches statelessly — so an incoming crawl
-    * image is flagged against the corpus index without shuffling the
-    * index per batch or holding any streaming state. Undecodable
-    * payloads quarantine in the kernel's null filter.
-    */
-  def streamingImagePhashMatches(media: DataFrame, indexFps: DataFrame,
-                                 threshold: Int =
-                                   graft.operators.ImageDedup.HammingThreshold): DataFrame = {
-    import graft.operators.{BandedPairs, ImageDedup}
-    val probe = ImageDedup.phashPayloads(media, "media_id")
-    BandedPairs.probeJoin(probe, "media_id", indexFps, "doc_id", "phash",
-      ImageDedup.NumBands, ImageDedup.BandBits, threshold)
-  }
-
-  /** Streaming perceptual VIDEO dedup (C12d's continuous twin) — the
-    * same stateless contract as [[streamingImagePhashMatches]]: the
-    * batch temporal-fingerprint kernel (real RIFF/AVI walk + DIB frame
-    * decode in mapPartitions) runs unchanged on the streaming frame,
-    * then the banded probe join checks incoming clips against a static
-    * committed fingerprint index. Append mode, no state store;
-    * undecodable clips quarantine in the kernel's null filter.
-    */
-  def streamingVideoPhashMatches(media: DataFrame, indexFps: DataFrame,
-                                 threshold: Int =
-                                   graft.operators.VideoDedup.HammingThreshold): DataFrame = {
-    import graft.operators.{BandedPairs, VideoDedup}
-    val probe = VideoDedup.vhashPayloads(media, "media_id")
-    BandedPairs.probeJoin(probe, "media_id", indexFps, "doc_id", "vhash",
-      VideoDedup.NumBands, VideoDedup.BandBits, threshold)
-  }
-
-  /** Streaming perceptual AUDIO dedup (C12c's continuous twin) — the
-    * same stateless contract as [[streamingImagePhashMatches]]: the
-    * batch energy-sign kernel (real javax.sound WAV decode in
-    * mapPartitions) runs unchanged on the streaming frame, then the
-    * banded probe join checks incoming clips against a static committed
-    * fingerprint index. Append mode, no state store; undecodable clips
-    * quarantine in the kernel's null filter.
-    */
-  def streamingAudioFpMatches(media: DataFrame, indexFps: DataFrame,
-                              threshold: Int =
-                                graft.operators.AudioDedup.HammingThreshold): DataFrame = {
-    import graft.operators.{AudioDedup, BandedPairs}
-    val probe = AudioDedup.fpPayloads(media, "media_id")
-    BandedPairs.probeJoin(probe, "media_id", indexFps, "doc_id", "afp",
-      AudioDedup.NumBands, AudioDedup.BandBits, threshold)
-  }
-
-  /** [[streamingAudioFpMatches]] probing the committed MediaIndex —
-    * see [[streamingImagePhashServe]]. */
-  def streamingAudioFpServe(media: DataFrame, indexPath: String,
-                            threshold: Int =
-                              graft.operators.AudioDedup.HammingThreshold,
-                            pinGroupVersion: Option[Long] = None): DataFrame =
-    streamingAudioFpMatches(media,
-      mediaFpsFrame(media.sparkSession, indexPath, "aud", pinGroupVersion),
-      threshold)
-
-  /** The fps frame a media probe stream serves from: the latest
-    * snapshot, or — with `pinGroupVersion` — one NAMED root snapshot
-    * for the stream's whole lifetime (the reproducible-serving knob the
-    * text probe got in r11: immune to concurrent extends AND retracts;
-    * a compliance audit replaying pre-takedown verdicts pins exactly
-    * this). Unknown/pruned groups refuse at stream START, not batch 0.
-    */
-  private def mediaFpsFrame(spark: SparkSession, indexPath: String,
-                            modality: String,
-                            pinGroupVersion: Option[Long]): DataFrame =
-    pinGroupVersion match {
-      case Some(g) =>
-        graft.operators.MediaIndex.loadFpsAt(spark, indexPath, modality, g)
-      case None => modality match {
-        case "img" => graft.operators.MediaIndex.loadImageFps(spark, indexPath)
-        case "vid" => graft.operators.MediaIndex.loadVideoFps(spark, indexPath)
-        case _ => graft.operators.MediaIndex.loadAudioFps(spark, indexPath)
-      }
-    }
-
-  /** [[streamingImagePhashMatches]] probing the COMMITTED
-    * [[graft.operators.MediaIndex]] at `indexPath` — the production
-    * form: the fingerprint frame loads from the versioned artifact
+  /** Streaming perceptual media dedup (the C12b/C12c/C12d continuous
+    * twins): the stateless stream-static probe
+    * ([[graft.operators.MediaIndex.matches]] — the same body as the
+    * batch operator, running unchanged on the streaming frame) against
+    * the COMMITTED [[graft.operators.MediaIndex]] at `indexPath` — the
+    * production form: the fingerprint frame loads from the versioned artifact
     * (snapshot pinned at stream start; restart to pick up newer
     * versions), so a takedown ([[graft.operators.MediaIndex.retract]])
     * is reflected at the next stream start without touching the probe
-    * plan. Same stateless stream-static contract.
+    * plan. `pinGroupVersion` serves one NAMED root snapshot for the
+    * stream's whole lifetime instead (immune to concurrent extends AND
+    * retracts — a compliance audit replaying pre-takedown verdicts pins
+    * exactly this); unknown/pruned groups refuse at stream START, not
+    * batch 0.
     */
-  def streamingImagePhashServe(media: DataFrame, indexPath: String,
-                               threshold: Int =
-                                 graft.operators.ImageDedup.HammingThreshold,
-                               pinGroupVersion: Option[Long] = None): DataFrame =
-    streamingImagePhashMatches(media,
-      mediaFpsFrame(media.sparkSession, indexPath, "img", pinGroupVersion),
-      threshold)
-
-  /** [[streamingVideoPhashMatches]] probing the committed MediaIndex —
-    * see [[streamingImagePhashServe]]. */
-  def streamingVideoPhashServe(media: DataFrame, indexPath: String,
-                               threshold: Int =
-                                 graft.operators.VideoDedup.HammingThreshold,
-                               pinGroupVersion: Option[Long] = None): DataFrame =
-    streamingVideoPhashMatches(media,
-      mediaFpsFrame(media.sparkSession, indexPath, "vid", pinGroupVersion),
-      threshold)
+  def streamingMediaServe(media: DataFrame, indexPath: String, modality: String,
+                          pinGroupVersion: Option[Long] = None): DataFrame = {
+    import graft.operators.MediaIndex
+    val spark = media.sparkSession
+    MediaIndex.matches(media,
+      pinGroupVersion.fold(MediaIndex.loadFps(spark, indexPath, modality))(
+        MediaIndex.loadFpsAt(spark, indexPath, modality, _)),
+      modality)
+  }
 
   /** Streaming HTML extraction (C60's continuous twin): the link-
     * density extractor is regexp/split/explode expressions plus one
@@ -1496,7 +1410,7 @@ object EventStream {
   /** The MEDIA admission loop — [[streamingCurationAdmission]]'s
     * per-modality twin over the committed [[graft.operators.MediaIndex]]
     * (C12e): until round 11 the streaming media probes were serve-ONLY
-    * (`streamingImagePhashServe` et al. classified arrivals against a
+    * (`streamingMediaServe` classified arrivals against a
     * static index snapshot), so a novel image admitted in one batch was
     * NOT probed against by the next — re-crawls of this hour's uploads
     * slipped through until someone manually re-built the index. This
@@ -1520,7 +1434,7 @@ object EventStream {
     val m = graft.operators.MediaIndex.mode(modality) // validates the name
     require(graft.operators.MediaIndex.isBuilt(media.sparkSession, indexPath, m.name),
       s"streamingMediaAdmission: no committed '${m.name}' sub-table at $indexPath — " +
-        "commit the seed index first (MediaIndex.buildImages/buildVideos/buildAudio " +
+        s"commit the seed index first (MediaIndex.build of modality '${m.name}' " +
         "with the seed crawl, or an empty frame to bootstrap)")
     startBatches(media, checkpoint) { (batch, batchId) =>
       mediaAdmitBatch(batch, batchId, indexPath, outPath, m.name,
@@ -1548,7 +1462,7 @@ object EventStream {
                                      compactEvery: Int = 0,
                                      funnelLogPath: Option[String] = None,
                                      pipelinePath: Option[String] = None): Unit = {
-    import graft.operators.{BandedPairs, MediaIndex}
+    import graft.operators.MediaIndex
     val m = MediaIndex.mode(modality)
     admitBatch(batch, batchId, mediaLoop(m.name), indexPath, outPath,
         compactEvery, funnelLogPath, pipelinePath) { (servedGroup, hold) =>
@@ -1565,8 +1479,7 @@ object EventStream {
       val kept = fps.join(keepers, Seq("media_id"), "left_semi")
       val index = MediaIndex.loadFpsAt(batch.sparkSession, indexPath,
         m.name, servedGroup)
-      val matches = BandedPairs.probeJoin(kept, "media_id",
-        index, "doc_id", m.fpCol, m.numBands, m.bandBits, m.threshold)
+      val matches = m.probeJoin(kept, "media_id", index)
       Admission(
         admitted = kept.join(
           matches.select("media_id").distinct(), Seq("media_id"), "left_anti"),

@@ -147,7 +147,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the raw replaceAll bypassed the artifact's root snapshot — refresh
     // it, as any real mutator does (readers resolve through the snapshot)
-    AnnIndex.commitSnapshot(spark, twin)
+    AnnIndex.layout.publish(spark, twin)
     assert(rows(AnnIndex.serve(emb, path)) == rows(AnnIndex.serve(emb, twin)),
       "bucket-pruned retract must serve identically to the full rewrite")
     // idempotent: replaying the takedown changes nothing

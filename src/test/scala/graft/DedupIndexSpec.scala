@@ -241,6 +241,32 @@ class DedupIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       "compaction + vacuum must not change one serving verdict")
   }
 
+  test("a group pinned before a retract reads byte-identically after maintain at keepVersions = 1") {
+    import graft.sources.Sinks.VersionedTable
+    val docs = Tables.documents(spark, sf)
+    val path = tmp("pinned-retention")
+    // two ingests fragment the buckets, so maintain compacts (new
+    // versions) and the keep budget of 1 would age the pinned ones out
+    (0L until 2L).foreach { i =>
+      DedupIndex.extend(docs.filter(pmod(col("doc_id"), lit(2L)) === i), path, buildV = i)
+    }
+    val g = VersionedTable.latestGroup(spark, path).get._1
+    def pinned(): Seq[Seq[String]] = {
+      val (f, s, b) = DedupIndex.loadFrames(spark, path, Some(g))
+      Seq(f, s, b).map(_.collect().map(_.toString).sorted.toSeq)
+    }
+    val before = pinned()
+    val victims = docs.select("doc_id").limit(3).collect().map(_.getLong(0)).toSeq
+    DedupIndex.retract(spark, path, victims)
+    DedupIndex.maintain(spark, path, keepVersions = 1)
+    val pins = VersionedTable.groupAt(spark, path, g).get
+    assert(Seq("fps", "sigs", "bands").forall(n =>
+      VersionedTable.latestManifest(spark, s"$path/$n").get._1 > pins(n)),
+      "premise: every pinned version sits below the keep budget")
+    assert(pinned() == before,
+      "maintenance must not age the pre-retract group's versions out")
+  }
+
   test("crawl loop: admit the new docs, extend, and the re-served batch flags them exact") {
     val docs = Tables.documents(spark, sf)
     val path = tmp("loop")

@@ -49,7 +49,7 @@ class MediaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plant(dir: String): String = {
     import spark.implicits._
     val corpus = ImageDedup.imageCorpus((1L to 40L).toDF("doc_id"))
-    MediaIndex.buildImages(corpus, s"$dir/index")
+    MediaIndex.build(corpus, s"$dir/index", "img")
     val cp = s"$dir/corpus"
     corpus.withColumnRenamed("doc_id", "media_id")
       .withColumn("batch_id", lit(0L))
@@ -77,10 +77,10 @@ class MediaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     // the raw files still hold the payloads (merge-on-read)
     assert(spark.read.parquet(cp).count() == 40L)
     // the index no longer matches a re-crawl of the banned content
-    val reprobe = MediaIndex.serveImages(
+    val reprobe = MediaIndex.serve(
       ImageDedup.imageCorpus(Seq(201L, 202L).toDF("doc_id"))
         .withColumnRenamed("doc_id", "media_id"),
-      s"$dir/index")
+      s"$dir/index", "img")
       .filter(col("doc_id").isin(1L, 2L)).count()
     assert(reprobe == 0L, "retracted fingerprints must stop matching")
     assert(TakedownLog.filedJobs(spark, s"$dir/tdlog") == Set("mretro-1"))
@@ -111,7 +111,7 @@ class MediaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.AudioDedup
     val dir = tmp("aud")
     val corpus = AudioDedup.audioCorpus((1L to 40L).toDF("doc_id"))
-    MediaIndex.buildAudio(corpus, s"$dir/index")
+    MediaIndex.build(corpus, s"$dir/index", "aud")
     corpus.withColumnRenamed("doc_id", "media_id")
       .withColumn("batch_id", lit(0L))
       .write.mode("append").parquet(s"$dir/corpus")
@@ -142,11 +142,7 @@ class MediaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
         "aud" -> (ids => AudioDedup.audioCorpus(ids.toDF("doc_id"))))
     val corpora = makers.map { case (m, make) =>
       val corpus = make(1L to 12L)
-      (m match {
-        case "img" => MediaIndex.buildImages(corpus, s"$dir/index")
-        case "vid" => MediaIndex.buildVideos(corpus, s"$dir/index")
-        case _     => MediaIndex.buildAudio(corpus, s"$dir/index")
-      }): Unit
+      MediaIndex.build(corpus, s"$dir/index", m)
       corpus.withColumnRenamed("doc_id", "media_id")
         .withColumn("batch_id", lit(0L))
         .write.mode("append").parquet(s"$dir/corpus-$m")
@@ -217,9 +213,9 @@ class MediaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     def state(dir: String) = (
       Corpus.read(spark, s"$dir/corpus", idCol = "media_id")
         .select("media_id").collect().map(_.getLong(0)).toSet,
-      MediaIndex.serveImages(
+      MediaIndex.serve(
         ImageDedup.imageCorpus(Seq(201L).toDF("doc_id"))
-          .withColumnRenamed("doc_id", "media_id"), s"$dir/index")
+          .withColumnRenamed("doc_id", "media_id"), s"$dir/index", "img")
         .filter(col("doc_id") === 1L).count(),
       TakedownLog.read(spark, s"$dir/tdlog")
         .select("subTable", "job_id").collect()

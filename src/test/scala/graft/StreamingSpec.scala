@@ -823,7 +823,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
   test("EQUIVALENCE: streaming image-phash probe matches the batch probe join row for row") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.operators.{BandedPairs, ImageDedup}
+    import graft.operators.{BandedPairs, ImageDedup, MediaIndex}
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     // committed index: the batch operator's fingerprints
     val index = ImageDedup.imagePhash(docs.limit(200)).cache()
@@ -836,8 +836,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
           .select((col("doc_id") + 10000L).as("doc_id")))
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
     val in = MemoryStream[(Long, Array[Byte])]
-    val out = EventStream.streamingImagePhashMatches(
-      in.toDF().toDF("media_id", "payload"), index)
+    val out = MediaIndex.matches(
+      in.toDF().toDF("media_id", "payload"), index, "img")
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("phash_stream").start()
     in.addData(incoming.take(20))
@@ -861,7 +861,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
   test("EQUIVALENCE: streaming video-phash probe matches the batch probe join row for row") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.operators.{BandedPairs, VideoDedup}
+    import graft.operators.{BandedPairs, MediaIndex, VideoDedup}
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val index = VideoDedup.videoPhash(docs.limit(200)).cache()
     index.count()
@@ -872,8 +872,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
           .select((col("doc_id") + 10000L).as("doc_id")))
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
     val in = MemoryStream[(Long, Array[Byte])]
-    val out = EventStream.streamingVideoPhashMatches(
-      in.toDF().toDF("media_id", "payload"), index)
+    val out = MediaIndex.matches(
+      in.toDF().toDF("media_id", "payload"), index, "vid")
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("vhash_stream").start()
     in.addData(incoming.take(20))
@@ -901,50 +901,52 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft-mediaix").toString
     // commit real PNG + AVI + WAV fingerprints through the versioned artifact
-    MediaIndex.buildImages(ImageDedup.imageCorpus(docs.limit(200)), dir, buildV = 0L)
-    MediaIndex.buildVideos(VideoDedup.videoCorpus(docs.limit(200)), dir, buildV = 0L)
-    MediaIndex.buildAudio(AudioDedup.audioCorpus(docs.limit(200)), dir, buildV = 0L)
+    MediaIndex.build(ImageDedup.imageCorpus(docs.limit(200)), dir, "img", buildV = 0L)
+    MediaIndex.build(VideoDedup.videoCorpus(docs.limit(200)), dir, "vid", buildV = 0L)
+    MediaIndex.build(AudioDedup.audioCorpus(docs.limit(200)), dir, "aud", buildV = 0L)
     // incoming media: shifted id range, same pixel groups (genuine near-dups)
     val incoming: Seq[(Long, Array[Byte])] =
       ImageDedup.imageCorpus(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 10000L).as("doc_id")))
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
-    def streamOnce(name: String): Seq[(Long, Long, Long)] = {
+    def streamOnce(name: String, modality: String = "img",
+                   rows: Seq[(Long, Array[Byte])] = incoming): Seq[(Long, Long, Long)] = {
       val in = MemoryStream[(Long, Array[Byte])]
-      val q = EventStream.streamingImagePhashServe(
-        in.toDF().toDF("media_id", "payload"), dir)
+      val q = EventStream.streamingMediaServe(
+        in.toDF().toDF("media_id", "payload"), dir, modality)
         .writeStream.outputMode("append").format("memory").queryName(name).start()
-      in.addData(incoming.take(20)); q.processAllAvailable()
-      in.addData(incoming.drop(20)); q.processAllAvailable()
+      in.addData(rows.take(20)); q.processAllAvailable()
+      in.addData(rows.drop(20)); q.processAllAvailable()
       q.stop()
       spark.table(name).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
     }
+    def batchServe(modality: String, rows: Seq[(Long, Array[Byte])]): Seq[(Long, Long, Long)] =
+      MediaIndex.serve(rows.toDF("media_id", "payload"), dir, modality)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
     val streamed = streamOnce("mediaix_before")
     assert(streamed.nonEmpty, "shifted ids share pixel groups — matches must exist")
-    val batch = MediaIndex.serveImages(incoming.toDF("media_id", "payload"), dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
+    val batch = batchServe("img", incoming)
     assert(streamed == batch,
       s"stream-from-artifact(${streamed.length}) != batch serve(${batch.length})")
-    // the audio sub-table: streaming serve == batch serve — measured
-    // BEFORE any takedown (retract removes an id from EVERY sub-table,
-    // so the image/video takedowns below also forget these docs' audio)
+    // the audio and video sub-tables: streaming serve == batch serve —
+    // measured BEFORE any takedown (retract removes an id from EVERY
+    // sub-table, so the image takedown below also forgets these docs'
+    // audio and video)
     val wavs: Seq[(Long, Array[Byte])] =
       AudioDedup.audioCorpus(docs.filter(col("doc_id") < 30)
           .select((col("doc_id") + 10000L).as("doc_id")))
         .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
-    val aIn = MemoryStream[(Long, Array[Byte])]
-    val aq = EventStream.streamingAudioFpServe(
-      aIn.toDF().toDF("media_id", "payload"), dir)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mediaix_audio").start()
-    aIn.addData(wavs); aq.processAllAvailable(); aq.stop()
-    val aStreamed = spark.table("mediaix_audio").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
-    val aBatch = MediaIndex.serveAudio(wavs.toDF("media_id", "payload"), dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
+    val aStreamed = streamOnce("mediaix_audio", "aud", wavs)
     assert(aStreamed.nonEmpty, "audio probes must match the committed fingerprints")
-    assert(aStreamed == aBatch, "audio stream-from-artifact != batch serve")
+    assert(aStreamed == batchServe("aud", wavs), "audio stream-from-artifact != batch serve")
+    val clips: Seq[(Long, Array[Byte])] =
+      VideoDedup.videoCorpus(docs.filter(col("doc_id") < 30)
+          .select((col("doc_id") + 10000L).as("doc_id")))
+        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
+    val vStreamed = streamOnce("mediaix_video", "vid", clips)
+    assert(vStreamed.nonEmpty, "video probes must match the committed fingerprints")
+    assert(vStreamed == batchServe("vid", clips), "video stream-from-artifact != batch serve")
     // takedown every matched corpus doc; a fresh stream (new snapshot)
     // must stop matching them — and ONLY them
     val hit = streamed.map(_._2).distinct
@@ -955,24 +957,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     assert(after == streamed.filterNot(m => hit.contains(m._2)),
       "retraction must not disturb matches against untouched docs")
     // the video sub-table serves and retracts through the same artifact
-    val clips: Seq[(Long, Array[Byte])] =
-      VideoDedup.videoCorpus(docs.filter(col("doc_id") < 30)
-          .select((col("doc_id") + 10000L).as("doc_id")))
-        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toIndexedSeq
-    val vBefore = MediaIndex.serveVideos(clips.toDF("media_id", "payload"), dir)
+    val vBefore = MediaIndex.serve(clips.toDF("media_id", "payload"), dir, "vid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toIndexedSeq.sorted
     assert(vBefore.nonEmpty, "video probes must match the committed fingerprints")
     MediaIndex.retract(spark, dir, vBefore.map(_._2).distinct)
-    assert(MediaIndex.serveVideos(clips.toDF("media_id", "payload"), dir).count() == 0L,
+    assert(MediaIndex.serve(clips.toDF("media_id", "payload"), dir, "vid").count() == 0L,
       "retracted clips still match")
     // audio retract: forget whatever its matches were (some ids may
     // already be gone via the image/video takedowns — idempotent)
     MediaIndex.retract(spark, dir, aStreamed.map(_._2).distinct)
-    assert(MediaIndex.serveAudio(wavs.toDF("media_id", "payload"), dir).count() == 0L,
+    assert(MediaIndex.serve(wavs.toDF("media_id", "payload"), dir, "aud").count() == 0L,
       "retracted audio still matches")
     // maintenance keeps the artifact serving
     MediaIndex.maintain(spark, dir, keepVersions = 1)
-    assert(MediaIndex.serveImages(incoming.toDF("media_id", "payload"), dir)
+    assert(MediaIndex.serve(incoming.toDF("media_id", "payload"), dir, "img")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq.sorted
       == after, "maintain must not change serve results")
   }
@@ -983,7 +981,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     import graft.operators.{ImageDedup, MediaIndex}
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft-media-groupat").toString
-    MediaIndex.buildImages(ImageDedup.imageCorpus(docs.limit(60)), dir, buildV = 0L)
+    MediaIndex.build(ImageDedup.imageCorpus(docs.limit(60)), dir, "img", buildV = 0L)
     val g0 = MediaIndex.latestGroupVersion(spark, dir).get
     val incoming: Seq[(Long, Array[Byte])] =
       ImageDedup.imageCorpus(docs.filter(col("doc_id") < 30)
@@ -993,8 +991,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     def streamServe(pin: Option[Long]): Seq[(Long, Long, Long)] = {
       n += 1
       val in = MemoryStream[(Long, Array[Byte])]
-      val q = EventStream.streamingImagePhashServe(
-        in.toDF().toDF("media_id", "payload"), dir, pinGroupVersion = pin)
+      val q = EventStream.streamingMediaServe(
+        in.toDF().toDF("media_id", "payload"), dir, "img", pinGroupVersion = pin)
         .writeStream.outputMode("append").format("memory")
         .queryName(s"media_groupat_$n").start()
       in.addData(incoming); q.processAllAvailable(); q.stop()
@@ -1024,10 +1022,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
       "maintenance must not age the pinned group's versions out")
     // an unknown group refuses at stream START, not as a batch-0 crash
     intercept[IllegalArgumentException] {
-      EventStream.streamingImagePhashServe(
+      EventStream.streamingMediaServe(
         spark.readStream.format("rate").load()
           .select(col("value").as("media_id"), lit(Array.emptyByteArray).as("payload")),
-        dir, pinGroupVersion = Some(9999L))
+        dir, "img", pinGroupVersion = Some(9999L))
     }
     // a modality the snapshot never pinned refuses too
     intercept[IllegalArgumentException] {
@@ -1790,8 +1788,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
           .select((col("doc_id") + fromShift).as("doc_id")))
         .toDF("media_id", "payload")
     def medSetup(dir: String): Unit =
-      MediaIndex.buildImages(
-        ImageDedup.imageCorpus(docs.filter(col("doc_id") < 20)), dir)
+      MediaIndex.build(
+        ImageDedup.imageCorpus(docs.filter(col("doc_id") < 20)), dir, "img")
     def medRun(dir: String, lo: Long, hi: Long, bid: Long): Unit =
       EventStream.mediaAdmitBatch(imgs(20000L, lo, hi), bid, dir,
         s"$dir/out", "img", funnelLogPath = Some(s"$dir/funnel"),
@@ -1800,7 +1798,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
       spark.read.parquet(s"$dir/out")
         .select("media_id", "batch_id").distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet,
-      MediaIndex.loadImageFps(spark, dir).count(),
+      MediaIndex.loadFps(spark, dir, "img").count(),
       PipelineSnapshot.forBatch(spark, s"$dir/pipeline", 1L).isDefined)
     def medDir() = java.nio.file.Files.createTempDirectory("graft-ks-med").toString
     // pixel content is a function of doc_id % 50 (ImageDedup.NumGroups)
@@ -2465,8 +2463,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // media loop: an undecodable payload quarantines in the codec
     // kernel — visible in the funnel as arrived - decoded
     val mdir = java.nio.file.Files.createTempDirectory("graft-funnel-media").toString
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(900010L).toDF("doc_id")), s"$mdir/index")
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(900010L).toDF("doc_id")), s"$mdir/index", "img")
     val arrivals = imageArrivals(Seq((101L, 1L), (102L, 2L)))
       .toDF("media_id", "payload")
       .unionByName(Seq((103L, Array[Byte](1, 2, 3))).toDF("media_id", "payload"))
@@ -2897,8 +2895,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     import graft.operators.{ImageDedup, MediaIndex}
     val dir = java.nio.file.Files.createTempDirectory("graft-media-admit").toString
     // seed the committed image index with unrelated content
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(900010L, 900021L).toDF("doc_id")), s"$dir/index")
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(900010L, 900021L).toDF("doc_id")), s"$dir/index", "img")
     val in = MemoryStream[(Long, Array[Byte])]
     val q = EventStream.streamingMediaAdmission(
       in.toDF().toDF("media_id", "payload"),
@@ -2927,8 +2925,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     assert(out == Set((101L, 0L), (202L, 1L), (301L, 2L)),
       s"expected admits {101@0, 202@1, 301@2}; got $out")
     // the admitted fingerprints are servable: a copy of content 2 matches 202
-    val again = MediaIndex.serveImages(
-      imageArrivals(Seq((999L, 2L))).toDF("media_id", "payload"), s"$dir/index")
+    val again = MediaIndex.serve(
+      imageArrivals(Seq((999L, 2L))).toDF("media_id", "payload"), s"$dir/index", "img")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(again.contains(202L), s"admitted 202 must serve; matched $again")
     // and an unbuilt modality refuses at START, not as a batch-0 crash-loop
@@ -2944,12 +2942,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     import spark.implicits._
     import graft.operators.{ImageDedup, MediaIndex}
     val dir = java.nio.file.Files.createTempDirectory("graft-media-replay").toString
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(900010L).toDF("doc_id")), s"$dir/index")
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(900010L).toDF("doc_id")), s"$dir/index", "img")
     def batchDf(pairs: Seq[(Long, Long)]) =
       imageArrivals(pairs).toDF("media_id", "payload")
-    def servedDocs(contentId: Long): Set[Long] = MediaIndex.serveImages(
-      batchDf(Seq((888L, contentId))), s"$dir/index")
+    def servedDocs(contentId: Long): Set[Long] = MediaIndex.serve(
+      batchDf(Seq((888L, contentId))), s"$dir/index", "img")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // batch 0 lands normally; batch 1 (re-crawl of 1 + novel 2) dies in
     // the window between its two effects
@@ -2998,16 +2996,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     val dirB = java.nio.file.Files.createTempDirectory("graft-media-control").toString
     import spark.implicits._
     for (d <- Seq(dirA, dirB))
-      MediaIndex.buildImages(
+      MediaIndex.build(
         graft.operators.ImageDedup.imageCorpus(Seq(900030L).toDF("doc_id")),
-        s"$d/index")
+        s"$d/index", "img")
     val cadence = 3
     val rounds = 4
     def batchDf(b: Int) = imageArrivals(
       (0 until 2).map(i => (b * 100L + i, (b * 2 + i + 1).toLong)))
       .toDF("media_id", "payload")
     def serveSet(root: String, probe: org.apache.spark.sql.DataFrame) =
-      MediaIndex.serveImages(probe, s"$root/index").collect()
+      MediaIndex.serve(probe, s"$root/index", "img").collect()
         .map(r => (r.getAs[Long]("media_id"), r.getAs[Long]("doc_id"))).toSet
     for (b <- 0 until rounds * cadence) {
       EventStream.mediaAdmitBatch(batchDf(b), b, s"$dirA/index", s"$dirA/out",
@@ -3055,20 +3053,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with Retries {
     // same two-batch admit/remember contract through the batch body.
     // Content ids share a group mod 50 per kernel — seeds sit in group
     // 10, arrivals in 1/2, so only planted dups match.
-    val cases: Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame,
-        (org.apache.spark.sql.DataFrame, String) => Unit)] = Seq(
-      ("vid", (ids: Seq[Long]) => VideoDedup.videoCorpus(ids.toDF("doc_id")),
-        (m: org.apache.spark.sql.DataFrame, p: String) => MediaIndex.buildVideos(m, p)),
-      ("aud", (ids: Seq[Long]) => AudioDedup.audioCorpus(ids.toDF("doc_id")),
-        (m: org.apache.spark.sql.DataFrame, p: String) => MediaIndex.buildAudio(m, p)))
-    for ((modality, corpus, build) <- cases) {
+    val cases: Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame)] = Seq(
+      "vid" -> (ids => VideoDedup.videoCorpus(ids.toDF("doc_id"))),
+      "aud" -> (ids => AudioDedup.audioCorpus(ids.toDF("doc_id"))))
+    for ((modality, corpus) <- cases) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-media-$modality").toString
       def arrivals(pairs: Seq[(Long, Long)]) = {
         val m = corpus(pairs.map(_._2).distinct).collect()
           .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
         pairs.map { case (mid, cid) => (mid, m(cid)) }.toDF("media_id", "payload")
       }
-      build(corpus(Seq(900010L)), s"$dir/index")
+      MediaIndex.build(corpus(Seq(900010L)), s"$dir/index", modality)
       // batch 0: 101 novel (content 1), 102 dup of the seed
       EventStream.mediaAdmitBatch(arrivals(Seq((101L, 1L), (102L, 900010L))),
         0L, s"$dir/index", s"$dir/out", modality)

@@ -29,10 +29,10 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("media takedown receipts report the manifest delta: found vs not-found ids, per sub-table") {
     import spark.implicits._
     val path = tmp("media")
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(1L, 2L, 3L).toDF("doc_id")), path)
-    MediaIndex.buildAudio(
-      AudioDedup.audioCorpus(Seq(10L).toDF("doc_id")), path)
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(1L, 2L, 3L).toDF("doc_id")), path, "img")
+    MediaIndex.build(
+      AudioDedup.audioCorpus(Seq(10L).toDF("doc_id")), path, "aud")
     val imgBefore = manifest(s"$path/img")
     val audBefore = manifest(s"$path/aud")
     // id 1 lives in img only; 99 is nowhere — one receipt per sub-table
@@ -58,7 +58,7 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"receipt bucket count must equal the manifest delta: $r vs $delta")
     }
     // the found id really is gone; idempotent replay reports found = 0
-    assert(!MediaIndex.loadImageFps(spark, path)
+    assert(!MediaIndex.loadFps(spark, path, "img")
       .collect().map(_.getLong(0)).contains(1L))
     val replay = MediaIndex.retract(spark, path, Seq(1L, 99L))
     assert(replay.forall(_.idsFound == 0L), s"replay must find nothing: $replay")
@@ -68,7 +68,7 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val path = tmp("noop")
     // one committed doc -> exactly one written bucket of 16
-    MediaIndex.buildAudio(AudioDedup.audioCorpus(Seq(10L).toDF("doc_id")), path)
+    MediaIndex.build(AudioDedup.audioCorpus(Seq(10L).toDF("doc_id")), path, "aud")
     val nb = VersionedTable.storedNumBuckets(spark, s"$path/aud").getOrElse(16)
     def bucketOf(id: Long): Int = spark.range(1)
       .select(pmod(hash(lit(id)), lit(nb)).as("b")).head().getInt(0)
@@ -86,8 +86,8 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("legacy sub-table (no bucket contract) takes the full rewrite and the receipt says so") {
     import spark.implicits._
     val path = tmp("legacy")
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")), path)
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")), path, "img")
     // fabricate the legacy state: strip the recorded contract from the
     // latest commit (the SinksSpec r10 recipe)
     val cdir = new java.io.File(s"$path/img/_commits")
@@ -108,7 +108,7 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
       (before._2.keySet -- after._2.keySet).size
     assert(r.bucketsRewritten == delta && delta >= before._2.size,
       s"legacy rewrite touches the whole table: $r vs $delta of ${before._2.size}")
-    assert(!MediaIndex.loadImageFps(spark, path)
+    assert(!MediaIndex.loadFps(spark, path, "img")
       .collect().map(_.getLong(0)).contains(2L), "the takedown itself still lands")
   }
 
@@ -125,7 +125,7 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("suite") === "suiteB").count()
     assert(bRows > 0L)
     val before = manifest(s"$path/eval_shingles")
-    val r = EvalRegistry.unregister(spark, path, "suiteB")
+    val Seq(r) = EvalRegistry.unregister(spark, path, "suiteB")
     val after = manifest(s"$path/eval_shingles")
     assert(r.subTable == "eval_shingles" && r.idsRequested == 1L && r.pruned)
     assert(r.idsFound == bRows,
@@ -135,7 +135,7 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
       (before._2.keySet -- after._2.keySet).size
     assert(r.bucketsRewritten == delta)
     // retiring an already-retired suite: the receipt evidences the no-op
-    val replay = EvalRegistry.unregister(spark, path, "suiteB")
+    val Seq(replay) = EvalRegistry.unregister(spark, path, "suiteB")
     assert(replay.idsFound == 0L, s"replay must find nothing: $replay")
   }
 
@@ -182,9 +182,9 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dJobs <= 2 * dSubs.size, s"dedup takedown ran $dJobs jobs over ${dSubs.size} sub-tables")
 
     val mPath = tmp("media-jobs")
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")), mPath)
-    MediaIndex.buildAudio(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), mPath)
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")), mPath, "img")
+    MediaIndex.build(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), mPath, "aud")
     val mIds = Seq(2L, 5L, 10L, 99L)
     val mSubs = Seq("img", "aud").map(n => n -> s"$mPath/$n")
     val (mReceipts, mJobs, mExpected) =
@@ -196,22 +196,107 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mJobs <= 2 * mSubs.size, s"media takedown ran $mJobs jobs over ${mSubs.size} sub-tables")
 
     val rPath = tmp("registry-jobs")
-    EvalRegistry.register(Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-      .toDF("doc_id", "text"), rPath, suite = "suiteA")
-    EvalRegistry.register(Seq((2L, "one two three four five six seven eight nine"))
-      .toDF("doc_id", "text"), rPath, suite = "suiteB")
-    val (rReceipt, rJobs, rExpected) =
-      bracketed(Seq("eval_shingles" -> s"$rPath/eval_shingles"), col("suite") === "suiteB") {
+    for ((text, suite) <- Seq(("alpha beta gamma delta epsilon zeta eta theta", "suiteA"),
+      ("one two three four five six seven eight nine", "suiteB"))) {
+      val docs = Seq((1L, text)).toDF("doc_id", "text")
+      EvalRegistry.register(docs, rPath, suite = suite)
+      EvalRegistry.registerNear(docs, rPath, suite = suite)
+    }
+    val rSubs = Seq("eval_shingles", "eval_shingles_w3", "eval_bands").map(n => n -> s"$rPath/$n")
+    val (rReceipts, rJobs, rExpected) =
+      bracketed(rSubs, col("suite") === "suiteB") {
         EvalRegistry.unregister(spark, rPath, "suiteB")
       }
-    assert(fields(Seq(rReceipt)) == rExpected && rReceipt.idsFound > 0L, rReceipt)
-    assert(rJobs <= 2, s"registry unregister ran $rJobs jobs")
+    assert(rReceipts.map(_.subTable) == rSubs.map(_._1), rReceipts)
+    assert(rReceipts.forall(r => r.pruned && r.idsRequested == 1L && r.idsFound > 0L), rReceipts)
+    assert(fields(rReceipts) == rExpected)
+    assert(rJobs <= 2 * rSubs.size, s"registry unregister ran $rJobs jobs over ${rSubs.size} lenses")
+  }
+
+  test("unregister retires a suite from every lens: near and LSH verdicts fall back to the remaining suite's, a replay finds nothing") {
+    import spark.implicits._
+    def words(seed: Int) = (0 until 14).map(w => s"t${(seed * 37 + w * 11) % 211}").mkString(" ")
+    val suiteA = Seq((1L, words(1)), (2L, words(2))).toDF("doc_id", "text")
+    val suiteB = Seq((3L, words(3)), (4L, words(4))).toDF("doc_id", "text")
+    def registered(path: String, suites: Seq[(org.apache.spark.sql.DataFrame, String)]): String = {
+      suites.foreach { case (docs, s) =>
+        EvalRegistry.register(docs, path, suite = s)
+        EvalRegistry.registerNear(docs, path, suite = s)
+      }
+      path
+    }
+    val path = registered(tmp("retire"), Seq(suiteA -> "suiteA", suiteB -> "suiteB"))
+    val onlyA = registered(tmp("retire-ref"), Seq(suiteA -> "suiteA"))
+    // probes: both suites' docs verbatim, plus a novel doc
+    val probes = suiteA.unionByName(suiteB)
+      .unionByName(Seq((9L, words(50))).toDF("doc_id", "text"))
+    def verdicts(p: String) = (
+      EvalRegistry.decontaminate(probes, EvalRegistry.load(spark, p)).collect().toSeq,
+      EvalRegistry.decontaminateNear(probes, EvalRegistry.loadNear(spark, p)).collect().toSeq,
+      EvalRegistry.decontaminateNearLsh(probes, EvalRegistry.loadBands(spark, p)).collect().toSeq)
+      .productIterator.map(_.asInstanceOf[Seq[org.apache.spark.sql.Row]]
+        .map(r => r.getLong(0) -> r.getBoolean(r.length - 1)).sorted).toSeq
+    val before = verdicts(path)
+    assert(before.forall(_.filterNot(_._2).map(_._1) == Seq(1L, 2L, 3L, 4L)),
+      s"premise: every lens flags both suites' docs: $before")
+    EvalRegistry.unregister(spark, path, "suiteB")
+    val after = verdicts(path)
+    assert(after == verdicts(onlyA),
+      s"after retiring suiteB every lens must give the suiteA-only verdicts: $after")
+    assert(after.forall(_.filterNot(_._2).map(_._1) == Seq(1L, 2L)), after)
+    val replay = EvalRegistry.unregister(spark, path, "suiteB")
+    assert(replay.size == 3 && replay.forall(_.idsFound == 0L),
+      s"a replayed unregister must find nothing in any lens: $replay")
+  }
+
+  test("a takedown on a path with no committed content sub-table refuses up front and writes nothing") {
+    import graft.operators.AnnIndex
+    val cases: Seq[(String, (String, Seq[Long]) => Seq[TakedownReceipt])] = Seq(
+      "DedupIndex" -> ((p, ids) => DedupIndex.retract(spark, p, ids)),
+      "AnnIndex" -> ((p, ids) => AnnIndex.retract(spark, p, ids)),
+      "MediaIndex" -> ((p, ids) => MediaIndex.retract(spark, p, ids)))
+    def refused(name: String, dir: String, run: => Seq[TakedownReceipt]): String = {
+      graft.FailPoint.record(dir)
+      val (err, boundaries) =
+        try (intercept[IllegalArgumentException](run), graft.FailPoint.count)
+        finally graft.FailPoint.reset()
+      assert(boundaries == 0, s"$name reached $boundaries commit boundaries before refusing")
+      assert(err.getMessage.contains(s"$name.retract"),
+        s"the refusal must name the artifact: ${err.getMessage}")
+      err.getMessage
+    }
+    for ((name, retract) <- cases; ids <- Seq(Seq(1L), Seq.empty[Long])) {
+      val dir = tmp(s"typo-$name")
+      val msg = refused(name, dir, retract(dir, ids))
+      assert(ids.isEmpty || msg.contains(dir), s"the refusal must name the path: $msg")
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .toArray.map(_.toString).filterNot(_ == dir).toSeq
+      assert(written.isEmpty, s"$name wrote under a refused path: $written")
+    }
+    // an empty list refuses before AnnIndex heals a completed-but-
+    // unsnapshotted rebuild (the heal is a snapshot publish)
+    val ann = tmp("typo-heal")
+    AnnIndex.build(spark.range(300).select(col("id").as("vec_id"),
+      array((1 to 64).map(j => sin(col("id") * j).cast("float")): _*).as("embedding")), ann)
+    for (sub <- Seq("codebooks", "codes")) {
+      val keys = if (sub == "codes") Seq("vec_id") else Seq("kind", "c_id")
+      VersionedTable.mergeUpsert(spark, s"$ann/$sub", VersionedTable.read(spark, s"$ann/$sub")
+        .drop("bucket").withColumn("build_v", lit(9L)), keys, "build_v",
+        numBuckets = if (sub == "codes") 16 else 4)
+    }
+    val group = VersionedTable.latestGroup(spark, ann).get._1
+    assert(VersionedTable.latestManifest(spark, s"$ann/codebooks").get._1 >
+      VersionedTable.latestGroup(spark, ann).get._2("codebooks"),
+      "premise: the raw codebooks are ahead of the snapshot's pin")
+    refused("AnnIndex", ann, AnnIndex.retract(spark, ann, Seq.empty))
+    assert(VersionedTable.latestGroup(spark, ann).get._1 == group,
+      "a refused takedown must not publish the heal's snapshot")
   }
 
   test("a receipt counts what the committed attempt removed: a row merged mid-takedown is dropped and counted") {
     import spark.implicits._
     val path = tmp("race")
-    MediaIndex.buildAudio(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), path)
+    MediaIndex.build(AudioDedup.audioCorpus(Seq(10L, 11L).toDF("doc_id")), path, "aud")
     val aud = s"$path/aud"
     // id 12 is requested but absent when the takedown starts; a
     // concurrent extend commits it before the takedown's first publish
@@ -241,8 +326,8 @@ class TakedownSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import graft.operators.TakedownLog
     val path = tmp("log")
-    MediaIndex.buildImages(
-      ImageDedup.imageCorpus(Seq(1L, 2L, 3L).toDF("doc_id")), path)
+    MediaIndex.build(
+      ImageDedup.imageCorpus(Seq(1L, 2L, 3L).toDF("doc_id")), path, "img")
     val log = s"$path/takedown_log"
     val r1 = MediaIndex.retract(spark, path, Seq(1L))
     TakedownLog.append(spark, log, r1, asOfUs = 1000L, jobId = "job-1")
